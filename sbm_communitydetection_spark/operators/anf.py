@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import cache_partitioned, unpersist_checkpoint
+from ..plans.iterate import cache_partitioned, materialize, unpersist_checkpoint
 from ..textops.portable import md5_long, md5_long_sql
 
 ANF_PHI = 0.77351
@@ -131,9 +131,7 @@ def anf_profile(
     (reachability is unweighted).
     """
     edges = cache_partitioned(edges.select("src", "dst").repartition("dst"))
-    masks = _init_masks(
-        edges.select(F.col("src").alias("id")).distinct(), k
-    ).localCheckpoint(eager=True)
+    masks = materialize(_init_masks(edges.select(F.col("src").alias("id")).distinct(), k))
 
     est = _est_col(k)
     sum_b = None
@@ -149,7 +147,7 @@ def anf_profile(
         rows.append((t, prof["sum_b"], float(prof["est_reach"])))
         if t == rounds:
             break
-        nxt = _fold_round(edges, masks, k).localCheckpoint(eager=True)
+        nxt = materialize(_fold_round(edges, masks, k))
         unpersist_checkpoint(masks)
         masks = nxt
     unpersist_checkpoint(masks)
@@ -204,31 +202,33 @@ def hyperball_closeness(
     monotone non-decreasing; asserted in tests) cannot occur.
     """
     edges = cache_partitioned(edges.select("src", "dst").repartition("dst"))
-    masks = _init_masks(
-        edges.select(F.col("src").alias("id")).distinct(), k
-    ).localCheckpoint(eager=True)
+    masks = materialize(_init_masks(edges.select(F.col("src").alias("id")).distinct(), k))
     est = _est_col(k)
 
-    state = masks.select(
-        "id",
-        *[F.col(f"m{r}") for r in range(k)],
-        est.alias("prev_est"),
-        F.lit(0.0).alias("harm"),
-    ).localCheckpoint(eager=True)
+    state = materialize(
+        masks.select(
+            "id",
+            *[F.col(f"m{r}") for r in range(k)],
+            est.alias("prev_est"),
+            F.lit(0.0).alias("harm"),
+        )
+    )
     unpersist_checkpoint(masks)
 
     for t in range(1, rounds + 1):
         folded = _fold_round(edges, state, k)
-        nxt = folded.join(
-            state.select("id", "prev_est", "harm"), "id"
-        ).select(
-            "id",
-            *[F.col(f"m{r}") for r in range(k)],
-            est.alias("prev_est"),
-            (
-                F.col("harm") + (est - F.col("prev_est")) / F.lit(float(t))
-            ).alias("harm"),
-        ).localCheckpoint(eager=True)
+        nxt = materialize(
+            folded.join(
+                state.select("id", "prev_est", "harm"), "id"
+            ).select(
+                "id",
+                *[F.col(f"m{r}") for r in range(k)],
+                est.alias("prev_est"),
+                (
+                    F.col("harm") + (est - F.col("prev_est")) / F.lit(float(t))
+                ).alias("harm"),
+            )
+        )
         unpersist_checkpoint(state)
         state = nxt
 

@@ -54,7 +54,7 @@ from pyspark.sql.types import (
 
 from ..plans.iterate import (
     IterationDriver,
-    partition_preserving_checkpoint,
+    materialize,
     unpersist_checkpoint,
 )
 
@@ -190,28 +190,27 @@ def belief_propagation(
     """
     if impl not in ("agg", "kernel"):
         raise ValueError(f"unknown BP impl {impl!r}")
-    driver = driver or IterationDriver(spark, run_id="bp")
+    # the agg impl's message state stays hash(dst)-partitioned; the
+    # kernel's grouped-map output is not partitioned on any output column
+    driver = driver or IterationDriver(
+        spark, run_id="bp", state_key="dst" if impl == "agg" else None
+    )
     fixed_iters = tolerance < 0
     diff = p_in - p_out
 
     # Per-iteration join inputs, partitioned once by the superstep's
     # grouping key so every superstep reuses the same shuffle layout
-    # (partition-preserving, see plans/iterate.py).
-    # NOTE: BP stays on the raw-row checkpoint (not cache_partitioned):
-    # its superstep joins the edge table against applyInPandas message
-    # state on (src, dst), and a cached plan's recorded hash(dst)
-    # partitioning combined with the state checkpoint's recorded claim
-    # lets the grouped-map exchange be elided on a layout that does not
-    # actually satisfy it (measured: duplicate per-dst groups in the
-    # kernel impl). The Catalyst 'agg' impl is value-identical either
-    # way, but the cross-check invariant agg == kernel matters more here
-    # than the cached scan's bandwidth saving.
-    ew = partition_preserving_checkpoint(
-        edges.select("src", "dst", "weight").repartition("dst")
-    )
-    pr = partition_preserving_checkpoint(
-        priors.select(F.col("id").alias("dst"), "prior").repartition("dst")
-    )
+    # (keyed materialize, see plans/iterate.py).
+    # NOTE: BP stays on materialize (not cache_partitioned): its superstep
+    # joins the edge table against applyInPandas message state on
+    # (src, dst), and a cached plan's recorded hash(dst) partitioning
+    # combined with a partitioning claim on the message state can let the
+    # grouped-map exchange be elided on a layout that does not satisfy it
+    # (measured: duplicate per-dst groups in the kernel impl). The
+    # cross-check invariant agg == kernel matters more here than the
+    # cached scan's bandwidth saving.
+    ew = materialize(edges.select("src", "dst", "weight").repartition("dst"), "dst")
+    pr = materialize(priors.select(F.col("id").alias("dst"), "prior").repartition("dst"), "dst")
 
     if impl == "agg":
         return _belief_propagation_agg(
@@ -259,9 +258,11 @@ def belief_propagation(
         log_rows=not fixed_iters,
     )
     final = ew.join(result.state, ["src", "dst"]).join(pr, "dst")
-    out = final.groupBy("dst").applyInPandas(
-        _finalize_kernel(p_in, p_out), BELIEF_SCHEMA
-    ).localCheckpoint(eager=True)
+    out = materialize(
+        final.groupBy("dst").applyInPandas(
+            _finalize_kernel(p_in, p_out), BELIEF_SCHEMA
+        )
+    )
     # the n-row belief table is materialized — release the per-run inputs
     # and the final message state (see unpersist_checkpoint)
     for df in (ew, pr, result.state):
@@ -356,18 +357,20 @@ def _belief_propagation_agg(
     # and partitionings. eps sits ~4 orders above accumulated float noise
     # and ~6 below any genuine belief gap.
     mx = F.array_max("belief")
-    out = final.select(
-        "id",
-        (
-            F.array_position(
-                F.transform(F.col("belief"), lambda b: b >= mx - F.lit(1e-9)), F.lit(True)
+    out = materialize(
+        final.select(
+            "id",
+            (
+                F.array_position(
+                    F.transform(F.col("belief"), lambda b: b >= mx - F.lit(1e-9)), F.lit(True)
+                )
+                - 1
             )
-            - 1
+            .cast("long")
+            .alias("label"),
+            "belief",
         )
-        .cast("long")
-        .alias("label"),
-        "belief",
-    ).localCheckpoint(eager=True)
+    )
     # the n-row belief table is materialized — release the per-run inputs
     # and the final message state (see unpersist_checkpoint)
     for df in (ew, pr, result.state):

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import cache_partitioned, unpersist_checkpoint
+from ..plans.iterate import cache_partitioned, materialize, unpersist_checkpoint
 
 
 def betweenness_approx(
@@ -55,24 +55,24 @@ def betweenness_approx(
     owned = [adj]  # every checkpoint this run creates, released on return
 
     # ---- forward: BFS levels + shortest-path counts ----
-    frontier = (
+    frontier = materialize(
         sources.select("id").distinct()
         .select(F.col("id").alias("lm"), "id", F.lit(0).alias("dist"), F.lit(1).cast("long").alias("sigma"))
-    ).localCheckpoint(eager=True)
+    )
     owned.append(frontier)
     visited = frontier
     levels = [frontier]  # levels[i] = frontier at dist i
     for i in range(1, radius + 1):
-        nxt = (
+        nxt = materialize(
             adj.join(frontier.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"), "src")
             .groupBy("lm", F.col("dst").alias("id"))
             .agg(F.sum("sigma").alias("sigma"))
             .join(visited.select("lm", "id"), ["lm", "id"], "left_anti")
             .select("lm", "id", F.lit(i).alias("dist"), "sigma")
-        ).localCheckpoint(eager=True)
+        )
         owned.append(nxt)
         levels.append(nxt)
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = materialize(visited.unionByName(nxt))
         owned.append(visited)
         frontier = nxt
 
@@ -100,11 +100,11 @@ def betweenness_approx(
             )
         )
         # vertices at this level with no deeper successor keep delta 0
-        delta_next = (
+        delta_next = materialize(
             cur.select("lm", "id")
             .join(contrib, ["lm", "id"], "left")
             .select("lm", "id", F.coalesce("delta", F.lit(0.0)).alias("delta"))
-        ).localCheckpoint(eager=True)
+        )
         owned.append(delta_next)
         deltas.append(delta_next)
 
@@ -116,7 +116,7 @@ def betweenness_approx(
         .groupBy("id")
         .agg(F.round(F.sum("delta"), round_to).alias("bc"))
     )
-    result = bc.localCheckpoint(eager=True)
+    result = materialize(bc)
     for df in owned:
         unpersist_checkpoint(df)
     return result

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.iterate import IterationDriver
+from ..plans.iterate import IterationDriver, materialize, unpersist_checkpoint
 
 
 def _checksum(df: DataFrame) -> tuple[int, int]:
@@ -134,10 +134,10 @@ def connected_components(
     full-edge distinct() shuffle) so the global star rounds iterate on a
     near-vertex-sized pair set; labels are identical either way.
     """
-    # keyed_state=False: the CC state is an unkeyed PAIR SET re-shuffled on
-    # different keys each half-round — nothing for the partition-preserving
-    # checkpoint to preserve (wall time measured equal either way)
-    driver = driver or IterationDriver(spark, run_id="cc", keyed_state=False)
+    # no state_key: the CC state is an unkeyed PAIR SET re-shuffled on
+    # different keys each half-round — no partitioning to preserve (wall
+    # time measured equal either way)
+    driver = driver or IterationDriver(spark, run_id="cc")
     pairs = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     if local_contraction:
         pairs = _partition_local_contract(pairs)
@@ -355,16 +355,15 @@ def strongly_connected_components(
             delta=forward_delta,
         )
         # intra-color directed edges only (SCC paths never leave the color)
-        ic = (
+        ic = materialize(
             dedges.join(colors.select(F.col("id").alias("src"), F.col("lbl").alias("cs")), "src")
             .join(colors.select(F.col("id").alias("dst"), F.col("lbl").alias("cd")), "dst")
             .filter(F.col("cs") == F.col("cd"))
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
         # backward reach from each color root: reached = can reach root.
         # Frontier-delta: expand only vertices reached LAST round.
-        reached = colors.filter(F.col("id") == F.col("lbl")).select("id").localCheckpoint(eager=True)
+        reached = materialize(colors.filter(F.col("id") == F.col("lbl")).select("id"))
         frontier = reached
         for _ in range(max_inner):
             step_up = (
@@ -372,25 +371,22 @@ def strongly_connected_components(
                 .select(F.col("src").alias("id"))
                 .distinct()
             )
-            frontier = step_up.join(reached, "id", "left_anti").localCheckpoint(eager=True)
+            frontier = materialize(step_up.join(reached, "id", "left_anti"))
             if frontier.limit(1).count() == 0:
                 break
-            reached = reached.unionByName(frontier).localCheckpoint(eager=True)
+            reached = materialize(reached.unionByName(frontier))
         else:
             raise RuntimeError(
                 f"scc round {outer}: backward reach frontier still non-empty "
                 f"after {max_inner} supersteps (graph deeper than max_inner; raise it)"
             )
         done = colors.join(reached, "id").select("id", F.col("lbl").alias("scc"))
-        assigned_parts.append(done.localCheckpoint(eager=True))
-        remaining = remaining.join(done.select("id"), "id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        dedges = (
+        assigned_parts.append(materialize(done))
+        remaining = materialize(remaining.join(done.select("id"), "id", "left_anti"))
+        dedges = materialize(
             dedges.join(remaining.select(F.col("id").alias("src")), "src", "left_semi")
             .join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
         outer += 1
 
@@ -620,32 +616,27 @@ def condensation_layers(
     scc = strongly_connected_components(spark, edges)
     m_src = scc.select(F.col("id").alias("src"), F.col("scc").alias("cs"))
     m_dst = scc.select(F.col("id").alias("dst"), F.col("scc").alias("cd"))
-    cedges = (
+    cedges = materialize(
         edges.select("src", "dst")
         .join(m_src, "src")
         .join(m_dst, "dst")
         .filter(F.col("cs") != F.col("cd"))
         .select(F.col("cs").alias("src"), F.col("cd").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    layers = (
-        scc.select("scc").distinct().withColumn("layer", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
+    layers = materialize(scc.select("scc").distinct().withColumn("layer", F.lit(0).cast("long")))
     for _ in range(max_depth):
         prop = (
             cedges.join(layers.withColumnRenamed("scc", "src"), "src")
             .groupBy(F.col("dst").alias("scc"))
             .agg((F.max("layer") + 1).alias("cand"))
         )
-        new = (
+        new = materialize(
             layers.join(prop, "scc", "left")
             .select(
                 "scc",
                 F.greatest("layer", F.coalesce("cand", F.lit(0))).cast("long").alias("layer"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = (
             new.join(layers.withColumnRenamed("layer", "old"), "scc")
@@ -696,7 +687,7 @@ def robustness_profile(
     )
     w = Window.orderBy(F.desc("deg"), F.asc("id"))
     ranked = deg.select("id", F.row_number().over(w).cast("long").alias("rnk"))
-    ranked = ranked.localCheckpoint(eager=True)
+    ranked = materialize(ranked)
 
     rows = []
     for f in cuts:
@@ -715,7 +706,6 @@ def robustness_profile(
         rows.append(
             (f, stats["n_vertices"], stats["n_components"], stats["giant_size"])
         )
-    from ..plans.iterate import unpersist_checkpoint
 
     unpersist_checkpoint(ranked)
     return spark.createDataFrame(
@@ -799,12 +789,11 @@ def percolation_curve(
         ),
         F.lit(1000),
     )
-    d = d.select("a", "b", coin.alias("coin")).localCheckpoint(eager=True)
-    verts = (
+    d = materialize(d.select("a", "b", coin.alias("coin")))
+    verts = materialize(
         d.select(F.col("a").alias("id"))
         .unionByName(d.select(F.col("b").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     rows = []
     for p in permilles:
@@ -824,7 +813,6 @@ def percolation_curve(
             .collect()[0]
         )
         rows.append((p, n_kept, stats["n_components"], stats["giant_size"]))
-    from ..plans.iterate import unpersist_checkpoint
 
     unpersist_checkpoint(d)
     unpersist_checkpoint(verts)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize, unpersist_checkpoint
+
 
 def densest_subgraph(
     spark: SparkSession,
@@ -34,23 +36,22 @@ def densest_subgraph(
     exhausted the graph after ``max_rounds`` (cannot happen before
     ~log₂ |V| rounds by the progress guarantee — the cap is a loud
     backstop, not a silent truncation)."""
-    cur = (
+    cur = materialize(
         edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     owned = [cur]
     best_density, best_round = -1.0, -1
     survivors = []  # per-round vertex DataFrames (checkpointed)
     r = 0
     while r < max_rounds:
-        deg = (
+        deg = materialize(
             cur.select(F.col("a").alias("id"))
             .unionByName(cur.select(F.col("b").alias("id")))
             .groupBy("id")
             .agg(F.count("*").cast("long").alias("deg"))
-        ).localCheckpoint(eager=True)
+        )
         owned.append(deg)
         stats = deg.agg(
             F.count("*").alias("nv"), F.coalesce(F.sum("deg"), F.lit(0)).alias("sumdeg")
@@ -63,19 +64,17 @@ def densest_subgraph(
             best_density, best_round = rho, r
             survivors.append((r, deg.select("id")))
         drop = deg.filter(F.col("deg") <= 2 * rho).select("id")
-        cur = (
+        cur = materialize(
             cur.join(drop.select(F.col("id").alias("a")), "a", "left_anti")
             .join(drop.select(F.col("id").alias("b")), "b", "left_anti")
             .select("a", "b")
-        ).localCheckpoint(eager=True)
+        )
         owned.append(cur)
         r += 1
     else:
         raise RuntimeError(
             f"densest_subgraph: graph not exhausted after max_rounds={max_rounds}"
         )
-
-    from ..plans.iterate import unpersist_checkpoint
 
     if best_round < 0:  # edgeless input: no non-empty round existed
         empty = cur.select(
@@ -86,9 +85,11 @@ def densest_subgraph(
         return empty
 
     best_ids = next(df for rr, df in survivors if rr == best_round)
-    result = best_ids.select(
-        "id", F.round(F.lit(best_density), 6).alias("best_density")
-    ).localCheckpoint(eager=True)
+    result = materialize(
+        best_ids.select(
+            "id", F.round(F.lit(best_density), 6).alias("best_density")
+        )
+    )
     for df in owned:
         unpersist_checkpoint(df)
     return result

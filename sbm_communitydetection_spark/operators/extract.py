@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize
 from .graph_ops import symmetrize
 
 TOOL_PREFIX = "tool:"
@@ -391,9 +392,7 @@ def pack_conversations(transcripts: DataFrame, budget_tokens: int) -> DataFrame:
         "pid", F.spark_partition_id()
     )
     local_w = Window.partitionBy("pid").orderBy("conv_id")
-    local = ranged.withColumn(
-        "local_cum", F.sum("conv_tokens").over(local_w)
-    ).localCheckpoint(eager=True)
+    local = materialize(ranged.withColumn("local_cum", F.sum("conv_tokens").over(local_w)))
     totals = {
         r.pid: r.total
         for r in local.groupBy("pid").agg(F.max("local_cum").alias("total")).collect()

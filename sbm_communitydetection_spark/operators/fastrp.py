@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iterate import cache_partitioned, unpersist_checkpoint
+from ..plans.iterate import cache_partitioned, materialize, unpersist_checkpoint
 from ..textops.portable import md5_long, md5_long_sql
 
 FASTRP_DIMS = 8
@@ -67,12 +67,11 @@ def fastrp_embeddings(
     rounded to 6 dp.  ``edges`` is the symmetrized weighted table."""
     edges = cache_partitioned(edges.repartition("dst"))
     val = _coin(F.col("id"), F.col("dim"))
-    emb = (
+    emb = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.explode(F.sequence(F.lit(0), F.lit(dims - 1))).alias("dim"))
         .select("id", "dim", val.alias("val"))
-        .localCheckpoint(eager=True)
     )
     wdeg = None
     if scaled:
@@ -92,7 +91,7 @@ def fastrp_embeddings(
             nxt = nxt.join(wdeg, "id").select(
                 "id", "dim", (F.col("val") / F.col("wdeg")).alias("val")
             )
-        nxt = nxt.localCheckpoint(eager=True)
+        nxt = materialize(nxt)
         unpersist_checkpoint(emb)
         emb = nxt
     unpersist_checkpoint(edges)

@@ -18,14 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iterate import LineageTruncator
-
 
 def r_hop_neighborhood(
     edges: DataFrame,
     seeds: DataFrame,
     radius: int,
-    truncate: LineageTruncator | None = None,
 ) -> DataFrame:
     """(id, dist) for every vertex within ``radius`` hops of ``seeds(id)``
     over the SYMMETRIZED edge table; dist = exact BFS distance."""
@@ -34,9 +31,6 @@ def r_hop_neighborhood(
     visited = seeds.select("id").distinct().select("id", F.lit(0).alias("dist"))
     frontier = visited
     for r in range(1, radius + 1):
-        if truncate is not None:
-            visited = truncate(visited)
-            frontier = truncate(frontier)
         nxt = (
             edges.join(frontier.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"), F.lit(r).alias("dist"))

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize, unpersist_checkpoint
+
 
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Materialize both directions, accumulate duplicate weights, drop
@@ -604,9 +606,7 @@ def influence_seeds(edges: DataFrame, k: int = 5, p: float = 0.05) -> DataFrame:
         .agg(F.count("*").cast("long").alias("d"))
     )
     nbrs = edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    state = deg.select("id", "d", F.lit(0).cast("long").alias("t")).localCheckpoint(
-        eager=True
-    )
+    state = materialize(deg.select("id", "d", F.lit(0).cast("long").alias("t")))
     dd = F.round(
         F.col("d")
         - 2.0 * F.col("t")
@@ -629,11 +629,10 @@ def influence_seeds(edges: DataFrame, k: int = 5, p: float = 0.05) -> DataFrame:
         picked.append((rank, sid, float(sdd)))
         chosen.add(sid)
         seed_nbrs = nbrs.filter(F.col("src") == sid).select(F.col("dst").alias("id"))
-        nxt = (
+        nxt = materialize(
             state.join(seed_nbrs, "id", "left_semi")
             .select("id", "d", (F.col("t") + 1).alias("t"))
             .unionByName(state.join(seed_nbrs, "id", "left_anti"))
-            .localCheckpoint(eager=True)
         )
         state.unpersist()
         state = nxt
@@ -716,9 +715,9 @@ def threshold_cascade(
     deg = nbrs.groupBy(F.col("dst").alias("id")).agg(
         F.count("*").cast("long").alias("deg")
     )
-    active = (
+    active = materialize(
         seeds.select("id").distinct().select("id", F.lit(0).alias("round_activated"))
-    ).localCheckpoint(eager=True)
+    )
     for i in range(1, (rounds if rounds is not None else max_iterations) + 1):
         cnt = (
             nbrs.join(
@@ -733,7 +732,7 @@ def threshold_cascade(
             .join(active.select("id"), "id", "left_anti")
             .select("id", F.lit(i).alias("round_activated"))
         )
-        nxt = active.unionByName(newly).localCheckpoint(eager=True)
+        nxt = materialize(active.unionByName(newly))
         n_new = nxt.count() - active.count()
         active.unpersist()
         active = nxt
@@ -860,14 +859,13 @@ def burt_constraint(
             .join(hubs.select(F.col("id").alias("dst")), "dst", "left_anti")
         )
     s = d.groupBy("src").agg(F.sum("weight").alias("s"))
-    p = (
+    p = materialize(
         d.join(s, "src")
         .select(
             F.col("src").alias("i"),
             F.col("dst").alias("j"),
             F.round(F.col("weight") / F.col("s"), 9).alias("p"),
         )
-        .localCheckpoint(eager=True)
     )
     piq = p.select(F.col("i"), F.col("j").alias("q"), F.col("p").alias("piq"))
     pqj = p.select(F.col("i").alias("q"), F.col("j"), F.col("p").alias("pqj"))
@@ -883,13 +881,12 @@ def burt_constraint(
             (F.col("p") + F.coalesce("ind", F.lit(0.0))) ** 2, 6
         ).alias("c"),
     )
-    from ..plans.iterate import unpersist_checkpoint
 
     out = cij.groupBy(F.col("i").alias("id")).agg(
         F.count("*").cast("long").alias("n_contacts"),
         F.round(F.sum("c"), 6).alias("constraint"),
     )
-    out = out.localCheckpoint(eager=True)
+    out = materialize(out)
     unpersist_checkpoint(p)
     return out
 

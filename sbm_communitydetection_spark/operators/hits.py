@@ -29,11 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import (
-    IterationDriver,
-    cache_partitioned,
-    unpersist_checkpoint,
-)
+from ..plans.iterate import IterationDriver, cache_partitioned, materialize, unpersist_checkpoint
 
 
 def hits(
@@ -52,7 +48,7 @@ def hits(
     ``max_iterations`` supersteps with no convergence actions (the
     oracle-gated mode); otherwise stop when max |Δauth| ≤ tolerance.
     """
-    driver = driver or IterationDriver(spark, run_id="hits")
+    driver = driver or IterationDriver(spark, run_id="hits", state_key="id")
 
     verts = (
         vertices.select("id")
@@ -61,7 +57,7 @@ def hits(
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    verts = verts.localCheckpoint(eager=True)
+    verts = materialize(verts)
     n = verts.count()
 
     # two partitioned columnar-cache copies of the edge table: the auth

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import cache_partitioned, unpersist_checkpoint
+from ..plans.iterate import cache_partitioned, materialize, unpersist_checkpoint
 
 
 def katz_centrality(
@@ -39,18 +39,17 @@ def katz_centrality(
     IGNORED (unweighted walk counts keep alpha's convergence bound
     degree-driven and scale-stable)."""
     dedges = edges.select("src", "dst").distinct()
-    verts = (
+    verts = materialize(
         dedges.select(F.col("src").alias("id"))
         .unionByName(dedges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = verts.count()
     adj = cache_partitioned(dedges.repartition("src"))
     use_broadcast = n <= broadcast_rows_threshold
 
     state = verts.select("id", F.lit(beta).alias("katz")).repartition("id")
-    state = state.localCheckpoint(eager=True)
+    state = materialize(state)
     for _ in range(iterations):
         side = state.withColumnRenamed("id", "src")
         side = F.broadcast(side) if use_broadcast else side.hint("SHUFFLE_HASH")
@@ -68,7 +67,7 @@ def katz_centrality(
             # beta + alpha * coalesce(sum, 0)
             (F.lit(beta) + F.lit(alpha) * F.coalesce("s", F.lit(0.0))).alias("katz"),
         )
-        new = new.localCheckpoint(eager=True)
+        new = materialize(new)
         unpersist_checkpoint(state)
         state = new
     return state.select("id", F.round("katz", 6).alias("katz"))
@@ -126,18 +125,17 @@ def eigenvector_centrality(
     analogue. Gated against an unrolled DuckDB oracle
     (eigenvector_unrolled_sql)."""
     dedges = edges.select("src", "dst").distinct()
-    verts = (
+    verts = materialize(
         dedges.select(F.col("src").alias("id"))
         .unionByName(dedges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = verts.count()
     adj = cache_partitioned(dedges.repartition("src"))
     use_broadcast = n <= broadcast_rows_threshold
 
     state = verts.select("id", F.lit(1.0).alias("eig")).repartition("id")
-    state = state.localCheckpoint(eager=True)
+    state = materialize(state)
     for _ in range(iterations):
         side = state.withColumnRenamed("id", "src")
         side = F.broadcast(side) if use_broadcast else side.hint("SHUFFLE_HASH")
@@ -150,18 +148,20 @@ def eigenvector_centrality(
         new = verts.join(
             raw if use_broadcast else raw.hint("SHUFFLE_HASH"), "id", "left"
         ).select("id", F.coalesce("s", F.lit(0.0)).alias("s"))
-        new = new.localCheckpoint(eager=True)
+        new = materialize(new)
         # scalar normalizer against the just-materialized state (one tiny job)
         tot = new.agg(F.sum("s")).collect()[0][0]
         if not tot:
             # mass extinct (DAG input): the eigenvector limit is the zero
             # vector and every further superstep keeps it zero — stop here
             unpersist_checkpoint(state)
-            state = new.select("id", F.col("s").alias("eig")).localCheckpoint(eager=True)
+            state = materialize(new.select("id", F.col("s").alias("eig")))
             break
-        new = new.select(
-            "id", (F.col("s") * F.lit(float(n)) / F.lit(float(tot))).alias("eig")
-        ).localCheckpoint(eager=True)
+        new = materialize(
+            new.select(
+                "id", (F.col("s") * F.lit(float(n)) / F.lit(float(tot))).alias("eig")
+            )
+        )
         unpersist_checkpoint(state)
         state = new
     return state.select("id", F.round("eig", 6).alias("eig"))

@@ -27,11 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.iterate import (
-    IterationDriver,
-    cache_partitioned,
-    unpersist_checkpoint,
-)
+from ..plans.iterate import IterationDriver, cache_partitioned, materialize, unpersist_checkpoint
 
 
 def k_core(
@@ -47,7 +43,7 @@ def k_core(
     edges: directed or symmetrized; treated as an undirected simple
     graph. rounds=None peels to the fixpoint; rounds=R runs exactly R
     synchronous peel rounds (gate parity mode)."""
-    driver = driver or IterationDriver(spark, run_id=f"kcore{k}")
+    driver = driver or IterationDriver(spark, run_id=f"kcore{k}", state_key="id")
     sym = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     pairs = cache_partitioned(
         sym.unionByName(sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -115,12 +111,11 @@ def k_truss(
     Fixed-round semantics mirror the unrolled DuckDB oracle
     (k_truss_unrolled_sql); convergence on the gate graph is asserted in
     tests so the unroll equals the fixpoint there."""
-    cur = (
+    cur = materialize(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         ab = cur.select("a", "b")  # drop the previous round's support col
@@ -134,11 +129,11 @@ def k_truss(
         )
         closed = wedges.join(ab, ["a", "b"], "left_semi")
         support = closed.groupBy("a", "b").agg(F.count("*").cast("long").alias("support"))
-        nxt = (
+        nxt = materialize(
             ab.join(support, ["a", "b"], "left")
             .select("a", "b", F.coalesce("support", F.lit(0).cast("long")).alias("support"))
             .filter(F.col("support") >= k - 2)
-        ).localCheckpoint(eager=True)
+        )
         unpersist_checkpoint(cur)
         cur = nxt
     return cur
@@ -210,10 +205,9 @@ def coreness(
         .distinct()
         .repartition("dst")
     )
-    state = (
+    state = materialize(
         pairs.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     w_cum = (
         Window.partitionBy("src")
@@ -225,11 +219,10 @@ def coreness(
             state.select(F.col("id").alias("dst"), "c").hint("SHUFFLE_HASH"), "dst"
         )
         grouped = nbr.groupBy("src", "c").agg(F.count("*").cast("long").alias("cnt"))
-        nxt = (
+        nxt = materialize(
             grouped.withColumn("cum", F.sum("cnt").over(w_cum))
             .groupBy(F.col("src").alias("id"))
             .agg(F.max(F.least(F.col("cum"), F.col("c"))).cast("long").alias("c"))
-            .localCheckpoint(eager=True)
         )
         changed = -1
         if rounds is None:
@@ -336,11 +329,7 @@ def trussness(
         )
         inc = part if inc is None else inc.unionByName(part)
     inc = cache_partitioned(inc.repartition("a", "b"))
-    state = (
-        inc.groupBy("a", "b")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    state = materialize(inc.groupBy("a", "b").agg(F.count("*").cast("long").alias("c")))
     w_cum = (
         Window.partitionBy("a", "b")
         .orderBy(F.desc("v"))
@@ -359,11 +348,10 @@ def trussness(
             .groupBy("a", "b", F.least("c1", "c2").alias("v"))
             .agg(F.count("*").cast("long").alias("cnt"))
         )
-        nxt = (
+        nxt = materialize(
             grouped.withColumn("cum", F.sum("cnt").over(w_cum))
             .groupBy("a", "b")
             .agg(F.max(F.least(F.col("cum"), F.col("v"))).cast("long").alias("c"))
-            .localCheckpoint(eager=True)
         )
         changed = -1
         if rounds is None:

@@ -30,7 +30,7 @@ from ..plans.iterate import (
     IterationDriver,
     IterationResult,
     cache_partitioned,
-    partition_preserving_checkpoint,
+    materialize,
     unpersist_checkpoint,
 )
 
@@ -173,7 +173,7 @@ def label_propagation(
             {"level": lv, "sweeps": s, "modularity": q}
             for lv, (s, q) in enumerate(zip(res.sweeps, res.modularity_per_level))
         ]
-        state = res.labels.localCheckpoint(eager=True)
+        state = materialize(res.labels)
         unpersist_checkpoint(res.labels)  # superseded membership checkpoint
         return IterationResult(
             state=state,
@@ -181,7 +181,7 @@ def label_propagation(
             converged=True,
             metrics=metrics,
         )
-    driver = driver or IterationDriver(spark, run_id="lpa")
+    driver = driver or IterationDriver(spark, run_id="lpa", state_key="id")
     # Pre-partition the edge table by the superstep's join key (dst) so
     # each iteration shuffles only the label vector, not the edges —
     # partition-preserving checkpoint, or AQE downgrades this to a full
@@ -203,11 +203,9 @@ def label_propagation(
             else edges.select(F.col("src").alias("id")).distinct()
         )
         labels = verts.select("id", F.col("id").alias("label"))
-    # co-partitioned with edges on the superstep join key (id → dst)
-    # key="id": the singleton init projects `id` under two aliases, and the
-    # checkpoint recorder would keep hash(label) — making the FIRST
-    # superstep re-exchange the label vector twice (see ppc docstring)
-    labels = partition_preserving_checkpoint(labels.repartition("id"), key="id")
+    # co-partitioned with edges on the superstep join key (id → dst);
+    # the singleton init projects `id` under two aliases (see materialize)
+    labels = materialize(labels.repartition("id"), "id")
 
     n_vertices = labels.count()
     use_broadcast = n_vertices <= broadcast_rows_threshold
@@ -301,7 +299,7 @@ def seeded_label_propagation(
     rounds CHEAPER than plain LPA: the join's build side is the seed
     frontier, not all |V| labels.
     """
-    driver = driver or IterationDriver(spark, run_id="seeded_lpa")
+    driver = driver or IterationDriver(spark, run_id="seeded_lpa", state_key="id")
     edges = cache_partitioned(edges.repartition("dst"))
     verts = edges.select(F.col("src").alias("id")).distinct()
     state0 = verts.join(
@@ -311,7 +309,7 @@ def seeded_label_propagation(
         F.col("seed_label").alias("label"),
         F.col("seed_label").isNotNull().alias("is_seed"),
     )
-    state0 = partition_preserving_checkpoint(state0.repartition("id"), key="id")
+    state0 = materialize(state0.repartition("id"), "id")
     use_broadcast = state0.count() <= broadcast_rows_threshold
 
     def step(state: DataFrame, i: int):

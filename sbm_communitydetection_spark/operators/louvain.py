@@ -34,9 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.iterate import (
-    LineageTruncator,
     cache_partitioned,
-    partition_preserving_checkpoint,
+    materialize,
     unpersist_checkpoint,
 )
 from .graph_ops import canonical_relabel, coarsen
@@ -173,22 +172,20 @@ def _sweeps_until_stable(
     max_sweeps: int,
     epsilon: float,
     q_tol: float,
-    truncate: LineageTruncator,
 ) -> tuple[DataFrame, float, int]:
     """Local-moving sweeps until modularity stops rising (the reference's
     stop rule, src/dynamic_community_detection.cpp:63-117), with rollback
     of the final non-improving sweep — synchronous moves can oscillate, and
     the modularity-monotone criterion converts that into a clean stop."""
-    # key="id": the level init projects `id` under two aliases (label=id),
-    # which would record the wrong partitioning leaf (see ppc docstring)
-    best = partition_preserving_checkpoint(labels.repartition("id"), key="id")
+    # the level init projects `id` under two aliases (see materialize)
+    best = materialize(labels.repartition("id"), "id")
     q_best = _level_modularity(edges, best, two_m)
     improving_sweeps = 0
     fails = 0
     for s in range(1, max_sweeps + 1):
         # alternate parity halves; a failed half-sweep retries the OTHER
         # parity from the best state before giving up (2 consecutive fails)
-        new = truncate(_move_sweep(edges, best, two_m, epsilon, parity=s % 2))
+        new = materialize(_move_sweep(edges, best, two_m, epsilon, parity=s % 2), "id")
         q_new = _level_modularity(edges, new, two_m)
         # release the loser state's blocks immediately — a sweep loop
         # otherwise keeps its whole state history in the block manager
@@ -224,7 +221,6 @@ def louvain(
     ``initial_labels`` (id, label) seeds LEVEL 0's sweep start instead of
     the singleton init — the warm-start path used by the streaming driver
     and label_propagation(variant='gain')."""
-    truncate = LineageTruncator(spark, prefix="louvain")
     edges = cache_partitioned(edges.repartition("dst"))
     verts = (
         vertices.select("id")
@@ -234,7 +230,7 @@ def louvain(
     two_m = float(edges.agg(F.sum("weight")).collect()[0][0])
 
     # membership: original id -> current super-node label
-    membership = verts.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
+    membership = materialize(verts.select("id", F.col("id").alias("label")))
     level_edges = edges
     best_q = _level_modularity(edges, membership, two_m)
     sweeps_per_level: list[int] = []
@@ -251,7 +247,7 @@ def louvain(
         # level modularity == global modularity of the expanded partition
         # (self-loop convention), so the sweep loop's q IS the global Q
         moved, q, n_sweeps = _sweeps_until_stable(
-            level_edges, init, two_m, max_sweeps, epsilon_gain, min_modularity_gain, truncate
+            level_edges, init, two_m, max_sweeps, epsilon_gain, min_modularity_gain
         )
         # n_sweeps==0 with q > best_q happens only for a warm start whose
         # initial partition already beats singletons: adopt it, then stop.
@@ -260,7 +256,7 @@ def louvain(
             break
         # compose: original membership's label is a vertex of level_edges
         prev_membership = membership
-        membership = truncate(
+        membership = materialize(
             membership.join(
                 moved.select(F.col("id").alias("label"), F.col("label").alias("new_label")),
                 "label",
@@ -282,7 +278,7 @@ def louvain(
             unpersist_checkpoint(moved)
             break
         prev_level_edges = level_edges
-        level_edges = truncate(coarse)
+        level_edges = materialize(coarse)
         unpersist_checkpoint(prev_level_edges)
         unpersist_checkpoint(moved)
 

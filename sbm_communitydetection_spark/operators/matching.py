@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import unpersist_checkpoint
+from ..plans.iterate import materialize, unpersist_checkpoint
 from ..textops.portable import md5_long, md5_long_sql
 
 
@@ -49,11 +49,10 @@ def maximal_matching(
     undirected pair set (a < b): no two output edges share a vertex, and
     every non-matched live edge has a matched endpoint.  Raises at the
     round cap instead of returning a non-maximal matching."""
-    live = (
+    live = materialize(
         edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     owned = [live]
     matched = []
@@ -72,12 +71,12 @@ def maximal_matching(
             .agg(F.min("e").alias("e"))
         )
         # an edge picked by BOTH endpoints is mutual → matched
-        win = (
+        win = materialize(
             picks.groupBy(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
             .agg(F.count("*").alias("n"))
             .filter(F.col("n") == 2)
             .select("a", "b")
-        ).localCheckpoint(eager=True)
+        )
         owned.append(win)
         matched.append(win.select("a", "b", F.lit(r).alias("match_round")))
         dead = (
@@ -85,11 +84,11 @@ def maximal_matching(
             .unionByName(win.select(F.col("b").alias("id")))
             .distinct()
         )
-        live = (
+        live = materialize(
             live.join(dead.select(F.col("id").alias("a")), "a", "left_anti")
             .join(dead.select(F.col("id").alias("b")), "b", "left_anti")
             .select("a", "b")
-        ).localCheckpoint(eager=True)
+        )
         owned.append(live)
     else:
         if live.limit(1).count() != 0:
@@ -106,7 +105,7 @@ def maximal_matching(
         for m in matched[1:]:
             out = out.unionByName(m)
         result = out.select("a", "b", F.col("match_round").cast("int").alias("match_round"))
-    result = result.localCheckpoint(eager=True)
+    result = materialize(result)
     for df in owned:
         unpersist_checkpoint(df)
     return result

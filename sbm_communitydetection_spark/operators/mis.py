@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import unpersist_checkpoint
+from ..plans.iterate import materialize, unpersist_checkpoint
 from ..textops.portable import md5_long, md5_long_sql
 
 
@@ -62,7 +62,7 @@ def maximal_independent_set(
         "id", F.lit(1).alias("mis_round")
     )
 
-    live = sym.localCheckpoint(eager=True)
+    live = materialize(sym)
     winners = [isolated]
     owned = [live]
     for r in range(1, max_rounds + 1):
@@ -79,7 +79,7 @@ def maximal_independent_set(
             F.struct(_priority(r, F.col("src")).alias("p"), F.col("src").alias("i"))
             < F.col("nmin")
         ).select(F.col("src").alias("id"))
-        win = win.localCheckpoint(eager=True)
+        win = materialize(win)
         owned.append(win)
         winners.append(win.select("id", F.lit(r).alias("mis_round")))
         # drop winners and their neighbors from the live subgraph
@@ -88,11 +88,11 @@ def maximal_independent_set(
                 F.col("dst").alias("id")
             )
         ).distinct()
-        nxt = (
+        nxt = materialize(
             live.join(dead.select(F.col("id").alias("src")), "src", "left_anti")
             .join(dead.select(F.col("id").alias("dst")), "dst", "left_anti")
             .select("src", "dst")
-        ).localCheckpoint(eager=True)
+        )
         owned.append(nxt)
         live = nxt
     else:
@@ -106,7 +106,7 @@ def maximal_independent_set(
     for w in winners[1:]:
         out = out.unionByName(w)
     result = out.select("id", F.col("mis_round").cast("int").alias("mis_round"))
-    result = result.localCheckpoint(eager=True)
+    result = materialize(result)
     for df in owned:
         unpersist_checkpoint(df)
     return result
@@ -138,7 +138,7 @@ def greedy_coloring(
     algorithm; conflict-free update scheduling for the batched ops).
     """
     pri = lambda col: md5_long(F.concat_ws(":", F.lit("color"), col.cast("string")))  # noqa: E731
-    sym = (
+    sym = materialize(
         edges.filter(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .unionByName(
@@ -147,13 +147,13 @@ def greedy_coloring(
             )
         )
         .distinct()
-    ).localCheckpoint(eager=True)
+    )
     all_ids = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    contested = sym.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+    contested = materialize(sym.select(F.col("src").alias("id")).distinct())
     # self-loop-only vertices have no constraints: color 0 immediately
     colored = all_ids.join(contested, "id", "left_anti").select(
         "id", F.lit(0).alias("color")
@@ -175,7 +175,7 @@ def greedy_coloring(
         vacuous = unc.join(
             live.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
         )
-        win = minima.unionByName(vacuous).localCheckpoint(eager=True)
+        win = materialize(minima.unionByName(vacuous))
         owned.append(win)
         # mex over already-colored neighbors (static adjacency, winners only)
         used = (
@@ -201,16 +201,16 @@ def greedy_coloring(
                 ).alias("color"),
             )
         )
-        colored = colored.unionByName(newly).localCheckpoint(eager=True)
+        colored = materialize(colored.unionByName(newly))
         owned.append(colored)
-        nxt = (
+        nxt = materialize(
             live.join(win.withColumnRenamed("id", "src"), "src", "left_anti")
             .join(win.withColumnRenamed("id", "dst"), "dst", "left_anti")
             .select("src", "dst")
-        ).localCheckpoint(eager=True)
+        )
         owned.append(nxt)
         live = nxt
-        unc = unc.join(win, "id", "left_anti").localCheckpoint(eager=True)
+        unc = materialize(unc.join(win, "id", "left_anti"))
         owned.append(unc)
     if unc.limit(1).count() != 0:
         raise RuntimeError(
@@ -218,7 +218,7 @@ def greedy_coloring(
             f"{max_rounds} — returning would be a partial coloring"
         )
     result = colored.select("id", F.col("color").cast("int").alias("color"))
-    result = result.localCheckpoint(eager=True)
+    result = materialize(result)
     for df in owned:
         unpersist_checkpoint(df)
     return result

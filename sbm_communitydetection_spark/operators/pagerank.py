@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..plans.iterate import (
     IterationDriver,
     cache_partitioned,
-    partition_preserving_checkpoint,
+    materialize,
     unpersist_checkpoint,
 )
 
@@ -67,7 +67,7 @@ def pagerank(
     """
     if edges is None and transition is None:
         raise ValueError("pagerank needs edges or a prebuilt transition table")
-    driver = driver or IterationDriver(spark, run_id="pagerank")
+    driver = driver or IterationDriver(spark, run_id="pagerank", state_key="id")
     edge_src = edges if edges is not None else transition
 
     verts = (
@@ -77,7 +77,7 @@ def pagerank(
         .unionByName(edge_src.select(F.col("dst").alias("id")))
         .distinct()
     )
-    verts = verts.localCheckpoint(eager=True)
+    verts = materialize(verts)
     n = verts.count()
 
     if transition is not None:
@@ -104,9 +104,7 @@ def pagerank(
         )
         out_src = out_w.select(F.col("src").alias("id"))
         owns_adj = True
-    dangling_ids = verts.join(out_src, "id", "left_anti").localCheckpoint(
-        eager=True
-    )
+    dangling_ids = materialize(verts.join(out_src, "id", "left_anti"))
     # On a symmetrized link graph every vertex has out-edges: skip the
     # per-iteration dangling-mass action entirely (one scalar agg per
     # superstep saved; at 1000-executor scale that is a full-cluster barrier).
@@ -137,11 +135,11 @@ def pagerank(
         ns = verts.join(members, "id", "left_semi").count()
         if ns == 0:
             raise ValueError("reset_ids contains no graph vertex")
-        resets = partition_preserving_checkpoint(
+        resets = materialize(
             verts.join(members.select("id", F.lit(1.0).alias("m")), "id", "left")
             .select("id", (F.coalesce(F.col("m"), F.lit(0.0)) / ns).alias("r"))
             .repartition("id"),
-            key="id",
+            "id",
         )
 
     # init co-partitioned with adj (hash(id) ≡ hash(src) after the rename

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import unpersist_checkpoint
+from ..plans.iterate import materialize, unpersist_checkpoint
 
 
 def minimum_spanning_forest(
@@ -33,7 +33,7 @@ def minimum_spanning_forest(
     ``max_rounds`` (silent truncation would return a partial forest)."""
     from .components import connected_components
 
-    pairs = (
+    pairs = materialize(
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("a"),
@@ -42,14 +42,12 @@ def minimum_spanning_forest(
         )
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
     )
-    comp = (
+    comp = materialize(
         pairs.select(F.col("a").alias("id"))
         .unionByName(pairs.select(F.col("b").alias("id")))
         .distinct()
         .select("id", F.col("id").alias("c"))
-        .localCheckpoint(eager=True)
     )
     owned = [pairs, comp]
     chosen: list[DataFrame] = []
@@ -57,9 +55,7 @@ def minimum_spanning_forest(
     for _ in range(max_rounds):
         la = comp.select(F.col("id").alias("a"), F.col("c").alias("ca"))
         lb = comp.select(F.col("id").alias("b"), F.col("c").alias("cb"))
-        cross = (
-            pairs.join(la, "a").join(lb, "b").filter(F.col("ca") != F.col("cb"))
-        ).localCheckpoint(eager=True)
+        cross = materialize(pairs.join(la, "a").join(lb, "b").filter(F.col("ca") != F.col("cb")))
         owned.append(cross)
         if cross.limit(1).count() == 0:
             done = True
@@ -67,12 +63,11 @@ def minimum_spanning_forest(
         per = cross.select(F.col("ca").alias("comp"), "w", "a", "b").unionByName(
             cross.select(F.col("cb").alias("comp"), "w", "a", "b")
         )
-        sel = (
+        sel = materialize(
             per.groupBy("comp")
             .agg(F.min(F.struct("w", "a", "b")).alias("m"))
             .select(F.col("m.a").alias("a"), F.col("m.b").alias("b"), F.col("m.w").alias("w"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         owned.append(sel)
         chosen.append(sel)
@@ -83,14 +78,13 @@ def minimum_spanning_forest(
             .distinct()
         )
         cc = connected_components(spark, cg.withColumn("weight", F.lit(1)))
-        comp_next = (
+        comp_next = materialize(
             comp.join(
                 cc.select(F.col("id").alias("c"), F.col("component").alias("nc")),
                 "c",
                 "left",
             )
             .select("id", F.coalesce("nc", "c").alias("c"))
-            .localCheckpoint(eager=True)
         )
         owned.append(comp_next)
         comp = comp_next
@@ -103,7 +97,7 @@ def minimum_spanning_forest(
         out = chosen[0]
         for s in chosen[1:]:
             out = out.unionByName(s)
-        result = out.select("a", "b", "w").distinct().localCheckpoint(eager=True)
+        result = materialize(out.select("a", "b", "w").distinct())
     else:
         result = spark.createDataFrame([], "a long, b long, w long")
     for df in owned:

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import cache_partitioned, unpersist_checkpoint
+from ..plans.iterate import cache_partitioned, materialize, unpersist_checkpoint
 from ..textops.portable import md5_long, md5_long_sql
 
 SPECTRAL_ROUND = 9
@@ -56,10 +56,10 @@ def spectral_bisection(
         F.sum("weight").cast("double").alias("deg")
     )
     vol = deg.agg(F.sum("deg").alias("vol"))
-    u = (
+    u = materialize(
         deg.crossJoin(vol)
         .select("id", "deg", F.round(F.sqrt(F.col("deg") / F.col("vol")), SPECTRAL_ROUND).alias("u"))
-    ).localCheckpoint(eager=True)
+    )
 
     dsrc = deg.select(F.col("id").alias("src"), F.col("deg").alias("deg_s"))
     ddst = deg.select(F.col("id").alias("dst"), F.col("deg").alias("deg_d"))
@@ -78,14 +78,16 @@ def spectral_bisection(
     )
 
     n = u.count()
-    x = u.select(
-        "id",
-        F.round(
-            ((md5_long(F.concat(F.lit("spec_"), F.col("id"))) % 2) * 2 - 1)
-            / F.lit(float(n) ** 0.5),
-            SPECTRAL_ROUND,
-        ).alias("x"),
-    ).localCheckpoint(eager=True)
+    x = materialize(
+        u.select(
+            "id",
+            F.round(
+                ((md5_long(F.concat(F.lit("spec_"), F.col("id"))) % 2) * 2 - 1)
+                / F.lit(float(n) ** 0.5),
+                SPECTRAL_ROUND,
+            ).alias("x"),
+        )
+    )
 
     for _ in range(iters):
         xv = x.select(F.col("id").alias("dst"), F.col("x").alias("xd"))
@@ -102,10 +104,9 @@ def spectral_bisection(
             "id", (F.col("y") - F.col("proj") * F.col("u")).alias("y")
         )
         nrm = defl.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("nrm"))
-        nxt = (
+        nxt = materialize(
             defl.crossJoin(nrm)
             .select("id", F.round(F.col("y") / F.col("nrm"), SPECTRAL_ROUND).alias("x"))
-            .localCheckpoint(eager=True)
         )
         unpersist_checkpoint(x)
         x = nxt

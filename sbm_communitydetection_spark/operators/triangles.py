@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize
+
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """Distinct edges oriented low(degree,id) → high(degree,id)."""
@@ -488,9 +490,11 @@ def clique_percolation_communities(spark, edges: DataFrame) -> DataFrame:
          - F.least("x", "y", "z") - F.greatest("x", "y", "z")).alias("b"),
         F.greatest("x", "y", "z").alias("c"),
     )
-    tri = tri.withColumn(
-        "tid", md5_long(F.concat_ws("_", F.col("a"), F.col("b"), F.col("c")))
-    ).localCheckpoint(eager=True)
+    tri = materialize(
+        tri.withColumn(
+            "tid", md5_long(F.concat_ws("_", F.col("a"), F.col("b"), F.col("c")))
+        )
+    )
 
     def _ek(u, v):
         return md5_long(F.concat_ws("_", F.col(u), F.col(v)))

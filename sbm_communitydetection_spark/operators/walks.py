@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.iterate import cache_partitioned, unpersist_checkpoint
+from ..plans.iterate import cache_partitioned, materialize, unpersist_checkpoint
 from ..textops.portable import md5_long, md5_long_sql
 
 
@@ -70,7 +70,7 @@ def random_walks(
         F.col("wi").cast("long").alias("walk_idx"),  # match DuckDB range() BIGINT
         F.col("start_id").alias("cur"),
     )
-    state = state.localCheckpoint(eager=True)
+    state = materialize(state)
 
     outputs = [
         state.select(
@@ -85,7 +85,7 @@ def random_walks(
             F.col("walk_idx").cast("string"),
             F.lit(str(s)),
         )
-        nxt = (
+        nxt = materialize(
             state.withColumnRenamed("cur", "src")
             .join(adj.hint("SHUFFLE_HASH"), "src")
             .filter(
@@ -93,7 +93,7 @@ def random_walks(
                 & (md5_long(pick_src) % F.col("total_w") < F.col("hi"))
             )
             .select("start_id", "walk_idx", F.col("dst").alias("cur"))
-        ).localCheckpoint(eager=True)
+        )
         owned.append(nxt)
         outputs.append(
             nxt.select(
@@ -105,7 +105,7 @@ def random_walks(
     out = outputs[0]
     for o in outputs[1:]:
         out = out.unionByName(o)
-    result = out.localCheckpoint(eager=True)
+    result = materialize(out)
     for df in owned:
         unpersist_checkpoint(df)
     return result
@@ -277,7 +277,7 @@ def node2vec_walks(
         F.col("wi").cast("long").alias("walk_idx"),
         F.col("start_id").alias("cur"),
     )
-    state0 = state0.localCheckpoint(eager=True)
+    state0 = materialize(state0)
     outputs = [
         state0.select(
             "start_id", "walk_idx", F.lit(0).alias("step"), F.col("cur").alias("vertex")
@@ -299,7 +299,7 @@ def node2vec_walks(
     state = None
     if length >= 1:
         p1 = pick_expr(1)
-        state = (
+        state = materialize(
             state0.withColumnRenamed("cur", "src")
             .join(adj.hint("SHUFFLE_HASH"), "src")
             .filter(
@@ -307,7 +307,7 @@ def node2vec_walks(
                 & (p1 % F.col("total_w") < F.col("hi"))
             )
             .select("start_id", "walk_idx", F.col("src").alias("prev"), F.col("dst").alias("cur"))
-        ).localCheckpoint(eager=True)
+        )
         owned.append(state)
         outputs.append(
             state.select(
@@ -350,10 +350,10 @@ def node2vec_walks(
             F.sum("bw").over(wtot).cast("long").alias("tot"),
         )
         ps = pick_expr(s)
-        state = (
+        state = materialize(
             iv2.filter((ps % F.col("tot") >= F.col("lo")) & (ps % F.col("tot") < F.col("hi")))
             .select("start_id", "walk_idx", F.col("cur").alias("prev"), F.col("n").alias("cur"))
-        ).localCheckpoint(eager=True)
+        )
         owned.append(state)
         outputs.append(
             state.select(
@@ -364,7 +364,7 @@ def node2vec_walks(
     out = outputs[0]
     for o in outputs[1:]:
         out = out.unionByName(o)
-    result = out.localCheckpoint(eager=True)
+    result = materialize(out)
     for df in owned:
         unpersist_checkpoint(df)
     return result

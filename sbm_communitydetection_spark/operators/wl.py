@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import cache_partitioned, unpersist_checkpoint
+from ..plans.iterate import cache_partitioned, materialize, unpersist_checkpoint
 from ..textops.portable import md5_long, md5_long_sql
 
 WL_P = 1_000_000_007
@@ -56,10 +56,9 @@ def wl_refinement(
     with a vertex table can union singletons with color = 0.
     """
     edges = cache_partitioned(edges.repartition("dst"))
-    colors = (
+    colors = materialize(
         edges.groupBy(F.col("src").alias("id"))
         .agg((F.sum("weight") % WL_P).cast("long").alias("color"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         lbl = colors.select(F.col("id").alias("dst"), F.col("color").alias("nbr_color"))
@@ -74,17 +73,19 @@ def wl_refinement(
                 F.count("*").cast("long").alias("cnt"),
             )
         )
-        nxt = colors.join(agg, "id", "left").select(
-            "id",
-            (
+        nxt = materialize(
+            colors.join(agg, "id", "left").select(
+                "id",
                 (
-                    F.lit(WL_OWN_MULT) * F.col("color")
-                    + F.coalesce("s", F.lit(0))
-                    + F.lit(WL_DEG_MULT) * F.coalesce("cnt", F.lit(0))
-                )
-                % WL_P
-            ).alias("color"),
-        ).localCheckpoint(eager=True)
+                    (
+                        F.lit(WL_OWN_MULT) * F.col("color")
+                        + F.coalesce("s", F.lit(0))
+                        + F.lit(WL_DEG_MULT) * F.coalesce("cnt", F.lit(0))
+                    )
+                    % WL_P
+                ).alias("color"),
+            )
+        )
         unpersist_checkpoint(colors)
         colors = nxt
     unpersist_checkpoint(edges)
@@ -199,11 +200,10 @@ def conv_wl_kernel(
         transcripts.select("conv_id", "role").distinct()
         .select("conv_id", vid(F.col("conv_id"), F.col("role")).alias("id"))
     )
-    hist = (
+    hist = materialize(
         colors.join(verts, "id")
         .groupBy("conv_id", "color")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     norms = hist.groupBy("conv_id").agg(F.sum(F.col("cnt") * F.col("cnt")).alias("nn"))
     dfreq = hist.groupBy("color").agg(F.countDistinct("conv_id").alias("df"))

@@ -2,17 +2,26 @@
 
 Spark has no iteration primitive: every iterative graph algorithm here is a
 driver-side loop of DataFrame transformations. Naively chaining iterations
-grows the logical plan linearly and planning time super-linearly, so each
-iteration's state is MATERIALIZED and the lineage truncated, via one of:
+grows the logical plan linearly and planning time super-linearly, so every
+piece of iteration or fold state goes through ONE seam,
+``materialize(df, key=None)``: an eager ``localCheckpoint`` (cluster-resident,
+lineage severed) whose ``LogicalRDD`` is rebuilt without the defining query's
+size statistics. The one rule for the two shapes of state:
 
-* ``local``   — ``df.localCheckpoint(eager=True)`` (fast; cluster-resident)
-* ``parquet`` — write state to ``<dir>/<run_id>/iter=<i>/`` and read back.
-  This is the durable path: any run is resumable from the latest complete
-  snapshot (north_rule "resumable from checkpoint").  The directory layout
-  is the Parquet stand-in for the Iceberg snapshot-per-iteration table
-  described in SURVEY.md §7 (no Iceberg jars in this sandbox; the seam is
-  this class — an Iceberg implementation swaps the write/read calls for
-  MERGE/snapshot operations on the same schema).
+* ``key`` given (rank/label vectors keyed by vertex id): materialize with
+  AQE off and record ``hashpartitioning(key)`` — checked against the plan,
+  never assumed — so the next superstep joins it without an exchange;
+* no ``key`` (edge sets, pair tables, anything re-shuffled next round):
+  materialize with AQE on and claim no partitioning.
+
+The DURABLE path is ``IterationDriver(mode="parquet")``: state is written
+to ``<dir>/<run_id>/iter=<i>/`` and read back, so any run is resumable from
+the latest complete snapshot (north_rule "resumable from checkpoint"). The
+directory layout is the Parquet stand-in for the Iceberg
+snapshot-per-iteration table described in SURVEY.md §7 (no Iceberg jars in
+this sandbox; the seam is the TableIO class — an Iceberg implementation
+swaps the write/read calls for MERGE/snapshot operations on the same
+schema).
 
 Alongside state, the driver appends per-iteration METRICS + LINEAGE rows
 (run_id, iteration, wall seconds, row count, convergence metric, number of
@@ -28,21 +37,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import tempfile
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-# Empirical (this sandbox, PySpark 4.1 local mode): a chain of >~15
-# localCheckpoints — or even RELIABLE checkpoints — makes each subsequent
-# job ~3x slower than the last (exponential recompute-style blowup), while
-# a parquet write/read roundtrip stays flat indefinitely. So every
-# SEVERANCE_EVERY-th persist goes through parquet to hard-sever the chain;
-# the in-between iterations keep the cheap in-memory localCheckpoint.
-SEVERANCE_EVERY = 8
 
 
 def probe_resources() -> dict:
@@ -91,11 +90,9 @@ from sbm_communitydetection_spark.sources.table_io import (  # noqa: E402
 __all__ = [
     "IterationDriver",
     "IterationResult",
-    "LineageTruncator",
     "cache_partitioned",
+    "materialize",
     "parquet_partition_lineage",
-    "partition_preserving_checkpoint",
-    "stats_reset_checkpoint",
     "unpersist_checkpoint",
 ]
 
@@ -104,7 +101,7 @@ def cache_partitioned(df: DataFrame) -> DataFrame:
     """Materialize a STATIC table (adjacency / transition / reset vector)
     as a compressed columnar cache instead of raw checkpoint blocks.
 
-    Why not partition_preserving_checkpoint for these: checkpoint blocks
+    Why not materialize for these: checkpoint blocks
     are raw UnsafeRows, so every superstep's probe-side scan streams
     ~29 B/edge over the memory bus; InMemoryRelation stores compressed
     columnar batches (~2-3x smaller for (long, long, double) adjacency),
@@ -122,8 +119,8 @@ def cache_partitioned(df: DataFrame) -> DataFrame:
     compiles with NO exchange above the cache scan), so the checkpoint
     plan-surgery workaround is unnecessary here. Lineage is kept (the
     upstream is a real source, eviction just recomputes), so this is for
-    STATIC inputs only — iteration state still needs the lineage-severing
-    checkpoint. Release with unpersist_checkpoint (handles both forms).
+    STATIC inputs only — iteration state still goes through materialize.
+    Release with unpersist_checkpoint (handles both forms).
     """
     from pyspark import StorageLevel
 
@@ -132,115 +129,117 @@ def cache_partitioned(df: DataFrame) -> DataFrame:
     return out
 
 
-def partition_preserving_checkpoint(df: DataFrame, key: str | None = None) -> DataFrame:
-    """localCheckpoint that KEEPS the DataFrame's hash partitioning and
-    RESETS the plan's inherited size statistics.
+def materialize(df: DataFrame, key: str | None = None) -> DataFrame:
+    """Eagerly materialize iteration or fold state: ``localCheckpoint``
+    with the lineage severed and the plan statistics RESET, the engine's
+    only checkpoint call.
 
-    ``key``: name of the column the caller just ``repartition``-ed by.
-    Only pass it when that is literally true — it OVERRIDES the recorded
-    partitioning with ``hashpartitioning(key, n)``. Needed when the plan
-    projects ONE expression under SEVERAL aliases (e.g. the singleton
-    label init ``select(id, id AS label)``): the alias-aware recorder
-    emits a PartitioningCollection and ``Dataset.checkpoint`` keeps only
-    its FIRST leaf, which may be the wrong alias — measured: the LPA
-    init recorded ``hash(label)`` instead of ``hash(id)``, so the first
-    superstep re-exchanged the label vector twice.
+    ``key``: the column the state is hash-partitioned on (the caller just
+    ``repartition``-ed or aggregated by it). The checkpoint then runs with
+    AQE off and the result records ``hashpartitioning(key, n)``, so the
+    next superstep's join on ``key`` adds no exchange. Raises ValueError
+    when the executed plan is not hash-partitioned on ``key`` — recording
+    a partitioning the rows do not have would make a later join silently
+    skip a needed exchange. Without ``key`` the checkpoint runs under
+    normal AQE planning and claims no partitioning (set-valued state is
+    re-shuffled on other keys next round anyway).
 
-    Two silent checkpoint pathologies, both measured in this runtime:
+    Three checkpoint pathologies, all measured in this runtime:
 
-    1. With AQE enabled, `Dataset.localCheckpoint` materializes an
+    1. With AQE enabled, ``Dataset.localCheckpoint`` materializes an
        AdaptiveSparkPlan whose output partitioning is recorded as
        UnknownPartitioning — so every downstream join/aggregate
        re-exchanges the checkpointed table even when it was just
        repartitioned on the join key. Measured on the PR superstep
        (19.2M-edge bench graph): the "exchange-free adjacency" design
-       silently degraded to a full edge-table shuffle EVERY iteration,
-       which is why round-1 scaling efficiency was 0.237. Compiling the
-       checkpoint with AQE off records the real `hashpartitioning(key, N)`
-       on the LogicalRDD; the toggle only affects this materialization
-       job, and AQE is restored for everything after.
+       silently degraded to a full edge-table shuffle EVERY iteration
+       (round-1 scaling efficiency 0.237). Hence AQE off for keyed state;
+       the toggle only affects this materialization job.
 
-    2. The LogicalRDD COPIES the origin plan's Catalyst statistics
-       (`originStats`). Join size estimates are PRODUCTS of their
-       children's `sizeInBytes`, so an iterative loop whose superstep
-       references the previous state 2-3 times DOUBLES the stat's digit
-       count every iteration even though each checkpointed plan is a
-       single leaf: 20 → 42 → 86 → ... digits (measured). By ~25
-       compounded supersteps (e.g. warm-started Louvain per stream batch)
-       the sizeInBytes is a multi-million-digit BigInt and Catalyst spends
-       MINUTES per planning pass inside BigInteger.multiplyToomCook3
-       (jstack: SizeInBytesOnlyStatsPlanVisitor.visitJoin). Rebuilding the
-       LogicalRDD with `originStats=None` caps the stat at
-       defaultSizeInBytes (19 digits) forever; iteration wall time stays
-       flat. Side effect (unchanged behavior): checkpointed tables report
-       unknown size and are never auto-broadcast — all hot-loop joins
-       here already broadcast or hint explicitly.
+    2. The plan may project ONE expression under SEVERAL aliases (the
+       singleton label init ``select(id, id AS label)``): the alias-aware
+       recorder emits a PartitioningCollection and ``Dataset.checkpoint``
+       keeps only its FIRST leaf, which may be the wrong alias — measured:
+       the LPA init recorded ``hash(label)`` instead of ``hash(id)``. So
+       the check reads the executed plan's partitioning BEFORE that
+       collapse and the result records ``hash(key)`` explicitly.
+
+    3. The LogicalRDD COPIES the origin plan's Catalyst statistics
+       (``originStats``). Join size estimates are PRODUCTS of their
+       children's ``sizeInBytes``, so a loop whose step references the
+       previous state 2-3 times DOUBLES the stat's digit count every
+       iteration even though each checkpointed plan is a single leaf:
+       20 → 42 → 86 → ... digits. Measured: stream CC's labels reach 3719
+       digits after 8 batches, and by ~25 compounded supersteps Catalyst
+       spends MINUTES per planning pass inside BigInteger multiplication
+       (SizeInBytesOnlyStatsPlanVisitor.visitJoin). Rebuilding the
+       LogicalRDD with ``originStats=None`` caps the stat at
+       defaultSizeInBytes (19 digits) forever. Side effect: materialized
+       tables report unknown size and are never auto-broadcast — hot-loop
+       joins broadcast or hint explicitly, and AQE still converts joins
+       whose runtime side turns out small.
     """
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    jvm = spark._jvm
+    aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try:
-        ck = df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return _stats_reset_rebuild(spark, ck, key)
-
-
-def stats_reset_checkpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint for UNKEYED iteration state (edge sets, pair
-    tables) — stats reset like partition_preserving_checkpoint, but the
-    materialization runs with AQE ON.
-
-    There is no partitioning to preserve (the next round re-shuffles on
-    different keys anyway), so the AQE-off toggle buys nothing for
-    set-valued state; materialization runs under normal AQE planning.
-    Warmed interleaved best-of-3 at the 9.6M-edge bench measures the two
-    flavors EQUAL for CC (16.7s vs 16.5s total) — this variant exists
-    for correctness of intent, not speed: it never stamps a partitioning
-    the next round would wrongly trust. The originStats reset is still
-    required — CC's step references the previous state 2-3 times per
-    round, the digit-doubling pathology (#2 above) applies unchanged."""
-    return _stats_reset_rebuild(df.sparkSession, df.localCheckpoint(eager=True), None)
-
-
-def _stats_reset_rebuild(spark, ck: DataFrame, key: str | None) -> DataFrame:
-    try:
-        lp = ck._jdf.queryExecution().logical()
-        if lp.getClass().getName() != "org.apache.spark.sql.execution.LogicalRDD":
-            return ck
-        jvm = spark._jvm
-        none = jvm.scala.Option.empty()
-        partitioning = lp.outputPartitioning()
         if key is not None:
-            out, attr = lp.output(), None
-            for i in range(out.size()):
-                if out.apply(i).name() == key:
-                    attr = out.apply(i)
-                    break
-            n = partitioning.numPartitions() or lp.rdd().getNumPartitions()
-            if attr is not None and n > 0:
-                partitioning = jvm.org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-                    spark.sparkContext._jvm.PythonUtils.toSeq([attr]), n
-                )
-        new_lp = jvm.org.apache.spark.sql.execution.LogicalRDD(
-            lp.output(),
-            lp.rdd(),
-            partitioning,
-            lp.outputOrdering(),
-            lp.isStreaming(),
-            lp.stream(),
-            spark._jsparkSession,
-            none,  # originStats: see (2) above
-            none,  # originConstraints: unused by this workload
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            n = _hash_partitions_on(df, key)
+        # the same QueryExecution, so a plan just checked is the one run
+        lp = df.localCheckpoint(eager=True)._jdf.queryExecution().logical()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    partitioning = lp.outputPartitioning()
+    if key is not None:
+        attr = next(a for a in _seq(lp.output()) if a.name() == key)
+        partitioning = jvm.org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
+            jvm.PythonUtils.toSeq([attr]), n
         )
-        jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, new_lp)
-        return DataFrame(jdf, spark)
-    except Exception:  # pragma: no cover — internal-API drift safety net
-        return ck
+    none = jvm.scala.Option.empty()
+    rebuilt = jvm.org.apache.spark.sql.execution.LogicalRDD(
+        lp.output(),
+        lp.rdd(),
+        partitioning,
+        lp.outputOrdering(),
+        lp.isStreaming(),
+        lp.stream(),
+        spark._jsparkSession,
+        none,  # originStats: see (3) above
+        none,  # originConstraints: unused by this workload
+    )
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, rebuilt)
+    return DataFrame(jdf, spark)
+
+
+def _hash_partitions_on(df: DataFrame, key: str) -> int:
+    """Partition count of ``df``'s executed plan when it is
+    hash-partitioned on exactly the output column ``key`` (directly or
+    as one leaf of a PartitioningCollection); ValueError otherwise."""
+    plan = df._jdf.queryExecution().executedPlan()
+    attrs = [a for a in _seq(plan.output()) if a.name() == key]
+    leaves = [plan.outputPartitioning()]
+    while leaves and attrs:
+        p = leaves.pop()
+        kind = p.getClass().getSimpleName()
+        if kind == "PartitioningCollection":
+            leaves.extend(_seq(p.partitionings()))
+        elif kind == "HashPartitioning":
+            exprs = _seq(p.expressions())
+            if len(exprs) == 1 and exprs[0].semanticEquals(attrs[0]):
+                return p.numPartitions()
+    raise ValueError(
+        f"materialize: state is not hash-partitioned on {key!r} "
+        f"(columns {df.columns}, partitioning {plan.outputPartitioning().toString()})"
+    )
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
 
 
 def unpersist_checkpoint(df: DataFrame) -> None:
-    """Release the storage blocks behind a (local)checkpointed DataFrame.
+    """Release the storage blocks behind a materialized DataFrame.
 
     localCheckpoint data lives in the block manager until the RDD is
     unpersisted or the context cleaner eventually GCs it; an iterative
@@ -255,71 +254,16 @@ def unpersist_checkpoint(df: DataFrame) -> None:
     CAUTION: a localCheckpoint has no lineage to recompute from —
     unpersist only state that nothing will read again.
     """
-    try:
-        lp = df._jdf.queryExecution().logical()
-        if lp.getClass().getName() == "org.apache.spark.sql.execution.LogicalRDD":
-            # blocking: deterministic release (async unpersist may lag the
-            # next iteration's allocation spike, which is the whole point).
-            # NOTE: must be checked BEFORE storageLevel — a checkpointed
-            # frame reports its RDD's storage level, but Dataset.unpersist
-            # only clears CacheManager entries and would no-op on it.
-            lp.rdd().unpersist(True)
-        elif df.storageLevel.useMemory or df.storageLevel.useDisk:
-            df.unpersist(True)  # cache_partitioned table
-    except Exception:  # pragma: no cover — internal-API drift safety net
-        pass
-
-
-class LineageTruncator:
-    """Persist iteration state with periodic hard severance via parquet."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        prefix: str = "state",
-        severance_every: int = SEVERANCE_EVERY,
-        severance_dir: str | None = None,
-        checkpoint_fn=None,
-    ):
-        self.spark = spark
-        self.prefix = prefix
-        self.every = severance_every
-        self._dir = severance_dir
-        self._count = 0
-        self._last_path: str | None = None
-        # keyed state (rank/label vectors) preserves its partitioning;
-        # unkeyed state (edge sets) passes stats_reset_checkpoint instead
-        self._checkpoint = checkpoint_fn or partition_preserving_checkpoint
-
-    def _severance_path(self) -> str:
-        if self._dir is None:
-            self._dir = tempfile.mkdtemp(prefix=f"spark_graft_{self.prefix}_")
-        return os.path.join(self._dir, f"sever_{self._count}")
-
-    def __call__(self, df: DataFrame) -> DataFrame:
-        self._count += 1
-        if self.every > 0 and self._count % self.every == 0:
-            path = self._severance_path()
-            df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
-            # Eagerly sever lineage from the files we are about to delete:
-            # the read-back must not lazily reference a removed snapshot.
-            out = out.localCheckpoint(eager=True)
-            # Only the latest snapshot is ever referenced again — drop the
-            # previous one so long streaming/Louvain runs don't leak disk.
-            if self._last_path is not None:
-                shutil.rmtree(self._last_path, ignore_errors=True)
-            self._last_path = path
-            return out
-        return self._checkpoint(df)
-
-    def cleanup(self) -> None:
-        """Drop all severance snapshots (call when the run's state DataFrame
-        is no longer needed)."""
-        if self._dir is not None:
-            shutil.rmtree(self._dir, ignore_errors=True)
-            self._dir = None
-            self._last_path = None
+    lp = df._jdf.queryExecution().logical()
+    if lp.getClass().getName() == "org.apache.spark.sql.execution.LogicalRDD":
+        # blocking: deterministic release (async unpersist may lag the
+        # next iteration's allocation spike, which is the whole point).
+        # NOTE: must be checked BEFORE storageLevel — a checkpointed
+        # frame reports its RDD's storage level, but Dataset.unpersist
+        # only clears CacheManager entries and would no-op on it.
+        lp.rdd().unpersist(True)
+    elif df.storageLevel.useMemory or df.storageLevel.useDisk:
+        df.unpersist(True)  # cache_partitioned table
 
 
 @dataclass
@@ -338,13 +282,15 @@ class IterationDriver:
         checkpoint_dir: str | None = None,
         mode: str = "local",
         table_io=None,
-        keyed_state: bool = True,
+        state_key: str | None = None,
     ):
-        """mode: 'local' (localCheckpoint) or 'parquet' (durable, resumable).
+        """mode: 'local' (materialize) or 'parquet' (durable, resumable).
 
-        ``keyed_state=False``: the iteration state is an unkeyed SET
-        (e.g. CC's pair table) — persist with stats_reset_checkpoint
-        (AQE on) instead of the partition-preserving path.
+        ``state_key``: the column every step's state is hash-partitioned
+        on (a vertex-keyed rank/label vector), passed to ``materialize``
+        so the state stays co-partitioned with the static join inputs and
+        each superstep shuffles only the intrinsic communication. Leave
+        it None for unkeyed state (e.g. CC's pair set).
 
         ``table_io``: any TableIO implementation (sources/table_io.py) for
         the durable path; defaults to ParquetTableIO under checkpoint_dir.
@@ -361,11 +307,7 @@ class IterationDriver:
         if mode == "parquet" and self.io is None:
             self.io = ParquetTableIO(spark, checkpoint_dir, run_id)
         self.dir = getattr(self.io, "dir", None)
-        self._truncator = LineageTruncator(
-            spark,
-            prefix=run_id,
-            checkpoint_fn=partition_preserving_checkpoint if keyed_state else stats_reset_checkpoint,
-        )
+        self.state_key = state_key
 
     # -- snapshot plumbing -------------------------------------------------
     def _iter_path(self, i: int) -> str:
@@ -374,11 +316,7 @@ class IterationDriver:
 
     def _persist(self, df: DataFrame, i: int) -> DataFrame:
         if self.mode == "local":
-            # partition-preserving (see partition_preserving_checkpoint):
-            # iteration state stays co-partitioned with the static join
-            # inputs, so each superstep shuffles only the intrinsic
-            # communication, never the state/adjacency re-exchange
-            return self._truncator(df)
+            return materialize(df, self.state_key)
         return self.io.write_snapshot(df, i)
 
     def _log_metrics(self, row: dict) -> None:

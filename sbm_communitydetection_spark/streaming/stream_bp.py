@@ -11,7 +11,7 @@ Per ordered micro-batch of arriving edges:
      messages INTO ball vertices (everything outside the ball keeps its
      messages — exactly the reference's locality), via the same Arrow
      kernel as full BP,
-  5. persist state (LineageTruncator).
+  5. materialize the edge and message state (plans/iterate.materialize).
 
 Final labels = the full-graph argmax finalize (A10). The schedule differs
 from the reference only in granularity (batch vs single edge) — both are
@@ -33,7 +33,7 @@ from ..operators.belief_propagation import (
 )
 from ..operators.frontier import r_hop_neighborhood
 from ..operators.graph_ops import add_edges
-from ..plans.iterate import LineageTruncator
+from ..plans.iterate import materialize
 
 
 def stream_belief_propagation(
@@ -50,7 +50,6 @@ def stream_belief_propagation(
     """beliefs(id, label, belief) after streaming ``edge_stream(src, dst,
     weight, edge_seq)`` through radius-bounded BP. ``priors(id, prior)``
     must cover every vertex that will appear."""
-    truncate = LineageTruncator(spark, prefix="stream_bp")
     bounds = edge_stream.agg(
         F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
     ).collect()[0]
@@ -58,7 +57,7 @@ def stream_belief_propagation(
         raise ValueError("empty edge stream")
     span = (bounds.hi - bounds.lo + 1) / n_batches
 
-    pr = priors.select(F.col("id").alias("dst"), "prior").localCheckpoint(eager=True)
+    pr = materialize(priors.select(F.col("id").alias("dst"), "prior"))
     edges = spark.createDataFrame([], "src long, dst long, weight long")
     msgs = spark.createDataFrame([], MSG_SCHEMA)
     uniform = F.array(*[F.lit(1.0 / k)] * k)
@@ -70,13 +69,13 @@ def stream_belief_propagation(
         batch = edge_stream.filter((F.col("edge_seq") >= lo) & (F.col("edge_seq") < hi)).select(
             "src", "dst", "weight"
         )
-        edges = truncate(add_edges(edges, batch))
+        edges = materialize(add_edges(edges, batch))
 
         # new directed pairs get uniform init messages (BP's init state)
         new_pairs = edges.select("src", "dst").join(
             msgs.select("src", "dst"), ["src", "dst"], "left_anti"
         )
-        msgs = truncate(
+        msgs = materialize(
             msgs.unionByName(new_pairs.select("src", "dst", uniform.alias("belief")))
         )
 
@@ -102,7 +101,7 @@ def stream_belief_propagation(
             out_of_ball_srcs = msgs.join(
                 ball.withColumnRenamed("id", "src"), "src", "left_anti"
             )
-            msgs = truncate(updated.unionByName(out_of_ball_srcs))
+            msgs = materialize(updated.unionByName(out_of_ball_srcs))
 
     final = edges.join(msgs, ["src", "dst"]).join(pr, "dst")
     return final.groupBy("dst").applyInPandas(_finalize_kernel(p_in, p_out), BELIEF_SCHEMA)

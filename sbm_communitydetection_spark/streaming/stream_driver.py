@@ -19,11 +19,11 @@ per batch:
      log sink S6 (src/approximate_community_detection.cpp:47-55) — to a
      JSONL lineage file and keep it in the result.
 
-Per-batch state is localCheckpoint-truncated; with ``checkpoint_dir``
-set, every batch additionally writes durable (edges, labels) parquet
-snapshots + a per-partition lineage row, and ``resume=True`` restarts a
-killed run from the latest complete batch (north_rule "any run resumes
-mid-iteration").
+Per-batch state goes through ``plans.iterate.materialize``; with
+``checkpoint_dir`` set, every batch additionally writes durable (edges,
+labels) parquet snapshots (FoldCheckpointer) + a per-partition lineage
+row, and ``resume=True`` restarts a killed run from the latest complete
+batch (north_rule "any run resumes mid-iteration").
 """
 
 from __future__ import annotations
@@ -40,65 +40,14 @@ from ..functions.metrics import modularity
 from ..operators.graph_ops import add_edges, symmetrize
 from ..operators.label_propagation import lpa_superstep
 from ..plans.iterate import (
-    LineageTruncator,
+    cache_partitioned,
+    materialize,
     parquet_partition_lineage,
     unpersist_checkpoint,
 )
 
-
-class StreamCheckpointer:
-    """Durable per-batch (edges, labels) snapshots under
-    ``<checkpoint_dir>/<run_id>/batch=<b>/{edges,labels}`` — the streaming
-    analogue of IterationDriver's parquet mode. A batch is complete when
-    both tables carry a _SUCCESS marker; resume loads the highest complete
-    batch. The directory layout is the Parquet stand-in for an Iceberg
-    snapshot-per-batch table (see plans/iterate.py docstring)."""
-
-    def __init__(self, spark: SparkSession, checkpoint_dir: str, run_id: str = "stream"):
-        self.spark = spark
-        self.dir = os.path.join(checkpoint_dir, run_id)
-        self.run_id = run_id
-
-    def _batch_path(self, b: int, table: str) -> str:
-        return os.path.join(self.dir, f"batch={b}", table)
-
-    def persist(self, b: int, edges: DataFrame, labels: DataFrame) -> tuple[DataFrame, DataFrame]:
-        e_path, l_path = self._batch_path(b, "edges"), self._batch_path(b, "labels")
-        edges.write.mode("overwrite").parquet(e_path)
-        labels.write.mode("overwrite").parquet(l_path)
-        return self.spark.read.parquet(e_path), self.spark.read.parquet(l_path)
-
-    def lineage(self, b: int) -> dict:
-        return {
-            "edges": parquet_partition_lineage(self._batch_path(b, "edges")),
-            "labels": parquet_partition_lineage(self._batch_path(b, "labels")),
-        }
-
-    def latest_complete_batch(self) -> int | None:
-        if not os.path.isdir(self.dir):
-            return None
-        best = None
-        for name in os.listdir(self.dir):
-            b = _batch_index(name)  # ignores foreign batch=* dirs (ADVICE r4)
-            if b is None:
-                continue
-            if all(
-                os.path.exists(os.path.join(self.dir, name, t, "_SUCCESS"))
-                for t in ("edges", "labels")
-            ):
-                best = b if best is None else max(best, b)
-        return best
-
-    def resume_state(self) -> tuple[DataFrame, DataFrame, int] | None:
-        """(edges, labels, next_batch) from the latest durable snapshot."""
-        b = self.latest_complete_batch()
-        if b is None:
-            return None
-        return (
-            self.spark.read.parquet(self._batch_path(b, "edges")),
-            self.spark.read.parquet(self._batch_path(b, "labels")),
-            b + 1,
-        )
+# FoldCheckpointer on-disk layout version, recorded in every manifest.json
+FOLD_LAYOUT = 2
 
 
 def _batch_index(name: str) -> int | None:
@@ -115,12 +64,13 @@ def _batch_index(name: str) -> int | None:
 
 class FoldCheckpointer:
     """Durable per-batch snapshots of a fold's NAMED state tables under
-    ``<checkpoint_dir>/<run_id>/batch=<b>/<table>`` — the generic form
-    of StreamCheckpointer for the other streaming folds (PR / CC /
+    ``<checkpoint_dir>/<run_id>/batch=<b>/<table>`` — the streaming
+    analogue of IterationDriver's parquet mode, shared by every
+    checkpointed fold (community detection / PR / CC / triangles /
     dedup / novelty, VERDICT r3 #9).  A batch is complete when EVERY
     table carries a _SUCCESS marker; resume loads the highest complete
-    batch.  Same Iceberg-snapshot-per-batch stand-in layout as
-    StreamCheckpointer.
+    batch.  The layout is the Parquet stand-in for an Iceberg
+    snapshot-per-batch table (see plans/iterate.py docstring).
 
     Two persistence modes per table (VERDICT r4 #2):
 
@@ -139,12 +89,17 @@ class FoldCheckpointer:
       replayed.
 
     ``manifest`` (ADVICE r4): a small JSON-serializable dict of run
-    parameters (n_batches, boundaries, thresholds, input fingerprint).
-    The first persist writes ``<run>/manifest.json``; any later persist
-    or resume whose manifest differs raises ValueError instead of
-    silently folding a DIFFERENT stream onto the old run's state (e.g.
-    resuming with changed batch boundaries would return the old run's
-    final state for every "already done" batch)."""
+    parameters (n_batches, boundaries, thresholds, an input fingerprint
+    such as the stream's ``(lo, hi, n)`` edge_seq bounds).  The first
+    persist writes ``<run>/manifest.json`` — always, stamped with
+    ``"layout": FOLD_LAYOUT`` — and any later persist or resume whose
+    manifest differs raises ValueError instead of silently folding a
+    DIFFERENT stream onto the old run's state (e.g. resuming with
+    changed batch boundaries would return the old run's final state for
+    every "already done" batch).  A run directory holding ``batch=*``
+    directories but no manifest (an older layout, which stored full
+    cumulative snapshots where this one stores deltas) is refused too:
+    unioning its snapshots as deltas would duplicate rows."""
 
     def __init__(
         self,
@@ -160,14 +115,12 @@ class FoldCheckpointer:
         self.tables = tables
         self.delta_tables = tuple(delta_tables)
         assert set(self.delta_tables) <= set(tables), (delta_tables, tables)
-        self.manifest = manifest
+        self.manifest = {**(manifest or {}), "layout": FOLD_LAYOUT}
 
     def _path(self, b: int, table: str) -> str:
         return os.path.join(self.dir, f"batch={b}", table)
 
     def _check_or_write_manifest(self, write: bool) -> None:
-        if self.manifest is None:
-            return
         # JSON round-trip so tuples/ints compare equal to what disk holds
         mine = json.loads(json.dumps(self.manifest, sort_keys=True))
         path = os.path.join(self.dir, "manifest.json")
@@ -181,6 +134,12 @@ class FoldCheckpointer:
                     "resume/extend a checkpoint written by a run with "
                     "different parameters or inputs"
                 )
+        elif self._existing_batches():
+            raise ValueError(
+                f"FoldCheckpointer: {self.dir} holds batch directories but no "
+                "manifest.json — refusing to resume/extend a checkpoint of "
+                f"unknown layout (this one is layout {FOLD_LAYOUT})"
+            )
         elif write:
             os.makedirs(self.dir, exist_ok=True)
             tmp = path + ".tmp"
@@ -231,6 +190,11 @@ class FoldCheckpointer:
             self._write(df, self._path(b, t))
             out[t] = self._read_table(t, b)
         return out
+
+    def lineage(self, b: int) -> dict[str, list[dict]]:
+        """Per-partition lineage (data file, rows, bytes) of batch ``b``'s
+        table directories."""
+        return {t: parquet_partition_lineage(self._path(b, t)) for t in self.tables}
 
     def latest_complete_batch(self) -> int | None:
         existing = self._existing_batches()
@@ -317,21 +281,28 @@ def stream_community_detection(
         raise ValueError("empty edge stream")
     span = (bounds.hi - bounds.lo + 1) / n_batches
 
-    truncate = LineageTruncator(spark, prefix="stream")
-    ckpt = StreamCheckpointer(spark, checkpoint_dir, run_id) if checkpoint_dir else None
-    edges = (
+    ckpt = (
+        FoldCheckpointer(
+            spark, checkpoint_dir, run_id, ("edges", "labels"),
+            manifest={"n_batches": n_batches, "bounds": list(bounds)},
+        )
+        if checkpoint_dir
+        else None
+    )
+    edges = materialize(
         initial_edges
         if initial_edges is not None
         else spark.createDataFrame([], "src long, dst long, weight long")
-    ).localCheckpoint(eager=True)
-    labels = initial_labels.localCheckpoint(eager=True) if initial_labels is not None else None
+    )
+    labels = materialize(initial_labels) if initial_labels is not None else None
     metrics: list[dict] = []
 
     start_batch = 0
     if resume and ckpt is not None:
         resumed = ckpt.resume_state()
         if resumed is not None:
-            edges, labels, start_batch = resumed
+            snap, start_batch = resumed
+            edges, labels = snap["edges"], snap["labels"]
 
     for b in range(start_batch, n_batches):
         t0 = time.monotonic()
@@ -341,7 +312,7 @@ def stream_community_detection(
             "src", "dst", "weight"
         )
         batch_sym = symmetrize(batch)
-        edges = truncate(add_edges(edges, batch))
+        edges = materialize(add_edges(edges, batch))
 
         affected = None
         verts = edges.select(F.col("src").alias("id")).distinct()
@@ -392,7 +363,7 @@ def stream_community_detection(
                 max_sweeps=supersteps_per_batch,
                 canonical=False,
             )
-            labels = truncate(res.labels)
+            labels = materialize(res.labels)
             unpersist_checkpoint(res.labels)  # superseded membership checkpoint
         else:
             step_edges = edges
@@ -404,17 +375,18 @@ def stream_community_detection(
                 # outside vertices have no rows and keep their label via
                 # lpa_superstep's left join; ball vertices still aggregate
                 # over all their neighbors
-                step_edges = edges.join(
-                    ball.withColumnRenamed("id", "src"), "src", "left_semi"
-                ).localCheckpoint(eager=True)
+                step_edges = materialize(
+                    edges.join(ball.withColumnRenamed("id", "src"), "src", "left_semi")
+                )
             for _ in range(supersteps_per_batch):
-                # truncate EVERY superstep: lpa_superstep references the
-                # label plan ~3×, so an unchecked chain grows as 3^steps
-                # logical nodes
-                labels = truncate(lpa_superstep(step_edges, labels, variant=lpa_variant))
+                # materialize EVERY superstep: lpa_superstep references
+                # the label plan ~3×, so an unchecked chain grows as
+                # 3^steps logical nodes
+                labels = materialize(lpa_superstep(step_edges, labels, variant=lpa_variant), "id")
 
         if ckpt is not None:
-            edges, labels = ckpt.persist(b, edges, labels)
+            snap = ckpt.persist(b, edges=edges, labels=labels)
+            edges, labels = snap["edges"], snap["labels"]
         row = {
             "batch": b,
             "edges_seen": int(edges.agg(F.sum("weight") / 2).collect()[0][0] or 0),
@@ -471,7 +443,10 @@ def stream_connected_components(
     span = (bounds.hi - bounds.lo + 1) / n_batches
 
     ckpt = (
-        FoldCheckpointer(spark, checkpoint_dir, run_id, ("labels",))
+        FoldCheckpointer(
+            spark, checkpoint_dir, run_id, ("labels",),
+            manifest={"n_batches": n_batches, "bounds": list(bounds)},
+        )
         if checkpoint_dir
         else None
     )
@@ -496,7 +471,9 @@ def stream_connected_components(
             labels = ckpt.persist(b, labels=labels)["labels"]
         else:
             # labels are vertex-scale; sever the per-batch star-round lineage
-            labels = labels.localCheckpoint(eager=True)
+            # and reset the plan statistics (incremental_components reads
+            # the labels three times per batch — see materialize)
+            labels = materialize(labels)
     return labels
 
 
@@ -542,14 +519,15 @@ def stream_pagerank(
     vector is snapshotted durably per batch; a killed run restarts from
     the latest complete batch (boundaries are deterministic from the
     edge_seq range) and ends bit-identical to an uninterrupted run."""
-    from ..plans.iterate import cache_partitioned
 
+    fingerprint = {}
     if boundaries is None:
         bounds = edge_stream.agg(
             F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
         ).collect()[0]
         if bounds.n == 0:
             raise ValueError("empty edge stream")
+        fingerprint["bounds"] = list(bounds)
         span = (bounds.hi - bounds.lo + 1) / n_batches
         boundaries = [
             bounds.hi + 1 if b == n_batches - 1 else bounds.lo + int((b + 1) * span)
@@ -557,7 +535,10 @@ def stream_pagerank(
         ]
 
     ckpt = (
-        FoldCheckpointer(spark, checkpoint_dir, run_id, ("state",))
+        FoldCheckpointer(
+            spark, checkpoint_dir, run_id, ("state",),
+            manifest={**fingerprint, "boundaries": boundaries},
+        )
         if checkpoint_dir
         else None
     )
@@ -573,11 +554,10 @@ def stream_pagerank(
         if b < start_batch:
             continue
         cum = edge_stream.filter(F.col("edge_seq") < bound)
-        verts = (
+        verts = materialize(
             cum.select(F.col("src").alias("id"))
             .unionByName(cum.select(F.col("dst").alias("id")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         n = verts.count()
         if n == 0:
@@ -594,11 +574,11 @@ def stream_pagerank(
             raw = verts.join(
                 state.withColumnRenamed("rank", "prank"), "id", "left"
             ).select("id", F.coalesce("prank", F.lit(1.0 / n)).alias("rank"))
-            raw = raw.localCheckpoint(eager=True)
+            raw = materialize(raw)
             unpersist_checkpoint(state)
             tot = raw.agg(F.sum("rank")).collect()[0][0]
             init = raw.select("id", (F.col("rank") / F.lit(float(tot))).alias("rank"))
-        cur = init.repartition("id").localCheckpoint(eager=True)
+        cur = materialize(init.repartition("id"))
         for _ in range(iters_per_batch):
             contrib = (
                 adj.join(cur.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"), "src")
@@ -613,7 +593,7 @@ def stream_pagerank(
                     + F.lit(damping) * F.coalesce("c", F.lit(0.0))
                 ).alias("rank"),
             )
-            nxt = nxt.localCheckpoint(eager=True)
+            nxt = materialize(nxt)
             unpersist_checkpoint(cur)
             cur = nxt
         if prev_adj is not None:
@@ -671,7 +651,10 @@ def stream_triangles(
         .agg(F.min("edge_seq").alias("edge_seq"))
     )
     ckpt = (
-        FoldCheckpointer(spark, checkpoint_dir, run_id, ("cum", "counts"))
+        FoldCheckpointer(
+            spark, checkpoint_dir, run_id, ("cum", "counts"),
+            manifest={"boundaries": boundaries},
+        )
         if checkpoint_dir
         else None
     )
@@ -699,10 +682,8 @@ def stream_triangles(
         new = canon.filter(cond).select("a", "b")
         if cum is not None:
             new = new.join(cum, ["a", "b"], "left_anti")
-        new = new.localCheckpoint(eager=True)
-        nxt_cum = (new if cum is None else cum.unionByName(new)).localCheckpoint(
-            eager=True
-        )
+        new = materialize(new)
+        nxt_cum = materialize(new if cum is None else cum.unionByName(new))
         sym = nxt_cum.select(F.col("a").alias("u"), F.col("b").alias("w")).unionByName(
             nxt_cum.select(F.col("b").alias("u"), F.col("a").alias("w"))
         )

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize, unpersist_checkpoint
 from ..textops.portable import shingles_col
 
 
@@ -50,24 +51,21 @@ def stream_conv_novelty(
     (VERDICT r4 #2: snapshot-append I/O, not per-batch full rewrite).
     The manifest (ADVICE r4) refuses resume under a changed
     n_batches."""
-    from ..plans.iterate import unpersist_checkpoint
     from .stream_driver import FoldCheckpointer
 
     start = transcripts.groupBy("conv_id").agg(
         F.unix_millis(F.min("ts").cast("timestamp")).alias("start_ms")
     )
     w = Window.orderBy("start_ms", "conv_id")
-    batched = start.withColumn("batch", F.ntile(n_batches).over(w)).localCheckpoint(
-        eager=True
-    )
+    batched = materialize(start.withColumn("batch", F.ntile(n_batches).over(w)))
 
-    all_grams = (
+    all_grams = materialize(
         transcripts.select(
             "conv_id", F.explode(shingles_col(F.col("text"), 2)).alias("g")
         )
         .distinct()
         .join(batched, "conv_id")
-    ).localCheckpoint(eager=True)
+    )
 
     ckpt = (
         FoldCheckpointer(
@@ -104,11 +102,11 @@ def stream_conv_novelty(
                 F.col("first.conv_id").alias("owner_conv"),
             )
         )
-        new_owner = new_owner.localCheckpoint(eager=True)
+        new_owner = materialize(new_owner)
         owned.append(new_owner)
-        store = store.unionByName(new_owner).localCheckpoint(eager=True)
+        store = materialize(store.unionByName(new_owner))
         owned.append(store)
-        emit = (
+        emit = materialize(
             grams_b.join(store.select("g", "owner_conv"), "g")
             .groupBy("conv_id")
             .agg(
@@ -122,7 +120,6 @@ def stream_conv_novelty(
             .withColumn(
                 "novelty", F.round(F.col("n_novel") / F.col("n_bigrams"), 6)
             )
-            .localCheckpoint(eager=True)
         )
         owned.append(emit)
         if ckpt is not None:
@@ -133,7 +130,7 @@ def stream_conv_novelty(
         else:
             out_cum = emit if out_cum is None else out_cum.unionByName(emit)
 
-    result = out_cum.localCheckpoint(eager=True)
+    result = materialize(out_cum)
     for df in owned:
         unpersist_checkpoint(df)
     return result

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize
 from .portable import words_col
 
 STX = "\x02"
@@ -85,7 +86,7 @@ def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     table, in merge order.  Stops early (fewer rows) only if the corpus
     runs out of adjacent pairs — impossible on any real corpus."""
     spark = docs.sparkSession
-    state = _initial_state(_word_counts(docs)).localCheckpoint(eager=True)
+    state = materialize(_initial_state(_word_counts(docs)))
     merges: list[tuple[int, str, str, int]] = []
     for m in range(n_merges):
         top = (
@@ -98,14 +99,16 @@ def bpe_train(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
             break
         l, r, n = top[0].l, top[0].r, top[0].n
         merges.append((m, l, r, n))
-        nxt = state.select(
-            F.replace(
-                F.col("seq"),
-                F.lit(STX + l + ETX + STX + r + ETX),
-                F.lit(STX + l + r + ETX),
-            ).alias("seq"),
-            "cnt",
-        ).localCheckpoint(eager=True)
+        nxt = materialize(
+            state.select(
+                F.replace(
+                    F.col("seq"),
+                    F.lit(STX + l + ETX + STX + r + ETX),
+                    F.lit(STX + l + r + ETX),
+                ).alias("seq"),
+                "cnt",
+            )
+        )
         state.unpersist()
         state = nxt
     state.unpersist()

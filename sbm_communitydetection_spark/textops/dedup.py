@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize, unpersist_checkpoint
 from .portable import (
     HASH_P,
     MINHASH_NUM,
@@ -995,7 +996,7 @@ def coverage_select_topk(docs: DataFrame, k: int = COVERAGE_K, n: int = NGRAM_N)
     per round) + one doc-keyed count; the winner is a scalar argmax
     collect (house rule).  k is small by construction — the op selects
     exemplars, not corpora."""
-    sh = _doc_shingles(docs, n).localCheckpoint(eager=True)
+    sh = materialize(_doc_shingles(docs, n))
     covered = None
     out = []
     for r in range(1, k + 1):
@@ -1012,10 +1013,7 @@ def coverage_select_topk(docs: DataFrame, k: int = COVERAGE_K, n: int = NGRAM_N)
         doc, gain = top[0]["doc_id"], top[0]["gain"]
         out.append((r, doc, gain))
         win_sh = sh.filter(F.col("doc_id") == doc).select("shingle")
-        covered = (
-            win_sh if covered is None else covered.unionByName(win_sh).distinct()
-        ).localCheckpoint(eager=True)
-    from ..plans.iterate import unpersist_checkpoint
+        covered = materialize(win_sh if covered is None else covered.unionByName(win_sh).distinct())
 
     unpersist_checkpoint(sh)
     if covered is not None:

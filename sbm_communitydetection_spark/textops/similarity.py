@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize, unpersist_checkpoint
+
 IVF_DIM = 64
 
 
@@ -528,12 +530,12 @@ def embedding_covariance(embs: DataFrame, dim: int = COV_DIM) -> DataFrame:
     # materialize the d^2-scale aggregate ONCE — without this the three
     # downstream readers (n / means / cov) would each re-run the corpus
     # kernel pass (plan-guarded: test_embedding_covariance_single_exchange)
-    moments = (
+    moments = materialize(
         embs.select("embedding")
         .mapInPandas(partials, "i int, j int, s double")
         .groupBy("i", "j")
         .agg(F.sum("s").alias("s"))
-    ).localCheckpoint(eager=True)
+    )
     n = moments.filter((F.col("i") == -1) & (F.col("j") == -1)).select(
         F.col("s").alias("n")
     )
@@ -665,14 +667,15 @@ def pca_top_component(
     convention: the loading of largest magnitude (smallest index on
     ties) is made positive.  Loadings are rounded to 6 decimals at the
     END only, matching the twin."""
-    from ..plans.iterate import unpersist_checkpoint
 
     cov = embedding_covariance(embs, dim=dim)
-    full = cov.unionByName(
-        cov.filter(F.col("i") != F.col("j")).select(
-            F.col("j").alias("i"), F.col("i").alias("j"), "cov"
+    full = materialize(
+        cov.unionByName(
+            cov.filter(F.col("i") != F.col("j")).select(
+                F.col("j").alias("i"), F.col("i").alias("j"), "cov"
+            )
         )
-    ).localCheckpoint(eager=True)
+    )
     spark = embs.sparkSession
     v = spark.range(dim).select(
         F.col("id").cast("int").alias("j"), F.lit(1.0 / dim**0.5).alias("v")
@@ -687,7 +690,7 @@ def pca_top_component(
         v = w.crossJoin(F.broadcast(nrm)).select(
             F.col("i").alias("j"), (F.col("w") / F.col("nrm")).alias("v")
         )
-        v = v.localCheckpoint(eager=True)
+        v = materialize(v)
     ref = v.orderBy(F.abs(F.col("v")).desc(), F.col("j").asc()).limit(1).select(
         F.when(F.col("v") >= 0, F.lit(1.0)).otherwise(F.lit(-1.0)).alias("sgn")
     )
@@ -786,16 +789,14 @@ def kmeans_lloyd(
     rows x k pre-aggregation volume of the join path entirely (the
     join path stays the default because it is the oracle-mirrored one;
     test_kmeans_lloyd_kernel_matches_join pins their equality)."""
-    from ..plans.iterate import unpersist_checkpoint
     from .portable import md5_long
 
-    vexp = (
+    vexp = materialize(
         embs.select(
             "vec_id",
             F.posexplode(F.transform(F.col("embedding"), lambda x: x.cast("double"))),
         )
         .select("vec_id", F.col("pos").alias("d"), F.col("col").alias("val"))
-        .localCheckpoint(eager=True)
     )
     seeds = (
         embs.select("vec_id", md5_long(F.col("vec_id").cast("string")).alias("h"))
@@ -808,10 +809,9 @@ def kmeans_lloyd(
             .alias("cell"),
         )
     )
-    cents = (
+    cents = materialize(
         seeds.join(vexp, "vec_id")
         .select("cell", "d", F.round("val", 6).alias("c"))
-        .localCheckpoint(eager=True)
     )
     owned = [vexp, cents]
     for _ in range(iters):
@@ -838,14 +838,13 @@ def kmeans_lloyd(
             .groupBy("cell", "d")
             .agg(F.round(F.avg("val"), 6).alias("c_new"))
         )
-        cents_next = (
+        cents_next = materialize(
             cents.join(fresh, ["cell", "d"], "left")
             .select("cell", "d", F.coalesce("c_new", "c").alias("c"))
-            .localCheckpoint(eager=True)
         )
         owned.append(cents_next)
         cents = cents_next
-    out = cents.select("cell", "d", "c").localCheckpoint(eager=True)
+    out = materialize(cents.select("cell", "d", "c"))
     for df in owned:
         unpersist_checkpoint(df)
     return out
@@ -1339,11 +1338,10 @@ def pq_train(
     twin (pq_codes_sql / pq_adc_topk_sql) replays the identical
     trajectory.  Empty codes keep their previous centroid.
     """
-    from ..plans.iterate import unpersist_checkpoint
     from .portable import md5_long
 
     d_sub = dim // m
-    vexp = (
+    vexp = materialize(
         embs.select(
             "vec_id",
             F.posexplode(F.transform(F.col("embedding"), lambda x: x.cast("double"))),
@@ -1354,7 +1352,6 @@ def pq_train(
             F.pmod(F.col("pos"), F.lit(d_sub)).cast("int").alias("dl"),
             F.col("col").alias("val"),
         )
-        .localCheckpoint(eager=True)
     )
     seeds = (
         embs.select("vec_id", md5_long(F.col("vec_id").cast("string")).alias("h"))
@@ -1367,10 +1364,9 @@ def pq_train(
             .alias("code"),
         )
     )
-    cents = (
+    cents = materialize(
         seeds.join(vexp, "vec_id")
         .select("sub", "code", "dl", F.round("val", 6).alias("c"))
-        .localCheckpoint(eager=True)
     )
     owned = [vexp, cents]
 
@@ -1400,15 +1396,14 @@ def pq_train(
             .groupBy("sub", "code", "dl")
             .agg(F.round(F.avg("val"), 6).alias("c_new"))
         )
-        nxt = (
+        nxt = materialize(
             cents.join(fresh, ["sub", "code", "dl"], "left")
             .select("sub", "code", "dl", F.coalesce("c_new", "c").alias("c"))
-            .localCheckpoint(eager=True)
         )
         owned.append(nxt)
         cents = nxt
 
-    codes = _assign(cents).localCheckpoint(eager=True)
+    codes = materialize(_assign(cents))
     for df in owned[:-1]:
         unpersist_checkpoint(df)
     return codes, cents

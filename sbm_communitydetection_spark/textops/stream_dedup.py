@@ -34,6 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.iterate import materialize
 from .dedup import _doc_shingles, minhash_signatures
 from .portable import MINHASH_NUM, MINHASH_ROWS_PER_BAND, NGRAM_N
 
@@ -91,8 +92,8 @@ def process_batch(
     if state is None:
         state = _empty_state(spark)
     new_sig = minhash_signatures(new_docs, num_hashes, n)
-    new_bands = _bands(new_sig, rows_per_band).localCheckpoint(eager=True)
-    new_sh = _doc_shingles(new_docs, n).localCheckpoint(eager=True)
+    new_bands = materialize(_bands(new_sig, rows_per_band))
+    new_sh = materialize(_doc_shingles(new_docs, n))
     new_sizes = new_sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
 
     all_bands = state.bands.unionByName(new_bands)
@@ -140,9 +141,9 @@ def process_batch(
     )
 
     next_state = DedupState(
-        bands=all_bands.localCheckpoint(eager=True),
-        shingles=all_sh.localCheckpoint(eager=True),
-        sizes=all_sizes.localCheckpoint(eager=True),
+        bands=materialize(all_bands),
+        shingles=materialize(all_sh),
+        sizes=materialize(all_sizes),
     )
     delta = DedupState(bands=new_bands, shingles=new_sh, sizes=new_sizes)
     return next_state, pairs, delta
@@ -215,7 +216,7 @@ def stream_minhash_dedup(
         state, pairs, delta = process_batch(
             spark, state, batch, threshold, num_hashes, rows_per_band, n
         )
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = materialize(pairs)
         if ckpt is not None:
             # deltas only — the durable handles come back as the
             # reconstructed cumulative unions

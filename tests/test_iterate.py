@@ -6,6 +6,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from sbm_communitydetection_spark.plans.iterate import IterationDriver
 
@@ -273,19 +274,18 @@ def test_cc_resumes_mid_iteration(spark, tmp_path):
                 run_id="ccfull",
                 checkpoint_dir=str(tmp_path / "full"),
                 mode="parquet",
-                keyed_state=False,
             ),
         ).collect()
     }
     assert set(full.values()) == {0, 1000}
 
     d1 = IterationDriver(
-        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r"), mode="parquet", keyed_state=False
+        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
     )
     connected_components(spark, edges, driver=d1, max_iterations=2)
     assert d1.latest_complete_iteration() == 2
     d2 = IterationDriver(
-        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r"), mode="parquet", keyed_state=False
+        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
     )
     resumed = {
         r.id: r.component
@@ -354,3 +354,112 @@ def test_bp_resumes_mid_iteration(spark, tmp_path):
             abs(a - b) < 1e-9 for a, b in zip(resumed[i][1], full[i][1])
         )
     assert d2.latest_complete_iteration() == 4
+
+
+def _sbm_edge_stream(spark):
+    from sbm_communitydetection_spark.sources.sbm import generate_sbm
+
+    _, raw = generate_sbm(spark, n=200, k=4, m=1000, p_in=0.9, p_out=0.1, seed=1)
+    return raw.withColumn("weight", F.lit(1).cast("long")).localCheckpoint(eager=True)
+
+
+def _run_stream_cc(spark, stream):
+    from sbm_communitydetection_spark.streaming.stream_driver import stream_connected_components
+
+    return stream_connected_components(spark, stream, n_batches=6)
+
+
+def _run_pagerank(spark, stream):
+    from sbm_communitydetection_spark.operators.pagerank import pagerank
+
+    return pagerank(spark, stream.select("src", "dst", "weight"), tolerance=-1.0, max_iterations=20)
+
+
+def _run_lpa(spark, stream):
+    from sbm_communitydetection_spark.operators.graph_ops import symmetrize
+    from sbm_communitydetection_spark.operators.label_propagation import label_propagation
+
+    edges = symmetrize(stream.select("src", "dst", "weight"))
+    return label_propagation(spark, edges, max_iterations=5, tolerance=-1.0).state
+
+
+def _run_cc(spark, stream):
+    from sbm_communitydetection_spark.operators.components import connected_components
+
+    return connected_components(spark, stream.select("src", "dst", "weight"))
+
+
+def _run_stream_lpa(spark, stream):
+    from sbm_communitydetection_spark.streaming.stream_driver import stream_community_detection
+
+    return stream_community_detection(spark, stream, n_batches=4).labels
+
+
+@pytest.mark.parametrize(
+    "run", [_run_stream_cc, _run_pagerank, _run_lpa, _run_cc, _run_stream_lpa],
+    ids=["stream_cc_6_batches", "pagerank_20", "lpa_5", "cc", "stream_lpa_4_batches"],
+)
+def test_materialized_state_keeps_plan_statistics_flat(spark, run):
+    """Every materialized state carries statistics for the stored table,
+    not the product of its defining query's estimates: a fold or loop
+    that reads the previous state several times per step would otherwise
+    double the sizeInBytes digit count per step (stream CC: 923 digits
+    after 6 batches), and Catalyst's planning time with it. Checks plan
+    size, not wall time."""
+    out = run(spark, _sbm_edge_stream(spark))
+    digits = len(str(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert digits <= 20, digits
+
+
+def test_materialize_rejects_a_false_partitioning_key(spark):
+    """A key the executed plan is not hash-partitioned on raises instead
+    of being recorded: a later join would trust it and skip a needed
+    exchange."""
+    from sbm_communitydetection_spark.plans.iterate import materialize
+
+    by_label = spark.range(100).select("id", (F.col("id") % 7).alias("label")).repartition("label")
+    with pytest.raises(ValueError, match="not hash-partitioned on 'id'"):
+        materialize(by_label, "id")
+    with pytest.raises(ValueError, match="not hash-partitioned on 'id'"):
+        materialize(spark.range(100), "id")  # range-partitioned, not hashed
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_materialize_accepts_the_aliased_lpa_init(spark):
+    """LPA's singleton init ``select(id, id AS label)`` is hash-partitioned
+    on both aliases; the key check accepts it and records hash(id), not
+    whichever alias the checkpoint would keep first."""
+    from sbm_communitydetection_spark.plans.iterate import materialize, unpersist_checkpoint
+
+    init = spark.range(100).repartition("id").select("id", F.col("id").alias("label"))
+    state = materialize(init, "id")
+    try:
+        recorded = state._jdf.queryExecution().logical().outputPartitioning().toString()
+        assert recorded.startswith("hashpartitioning(id#"), recorded
+        assert sorted(r.label for r in state.collect()) == list(range(100))
+    finally:
+        unpersist_checkpoint(state)
+
+
+def test_only_materialize_calls_local_checkpoint():
+    """The package has ONE checkpoint seam: ``.localCheckpoint(`` may
+    appear only inside plans/iterate.materialize."""
+    import ast
+    import pathlib
+
+    import sbm_communitydetection_spark
+
+    root = pathlib.Path(sbm_communitydetection_spark.__file__).parent
+    seam = root / "plans" / "iterate.py"
+    fn = next(
+        n for n in ast.parse(seam.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "materialize"
+    )
+    offenders = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+        and not (path == seam and fn.lineno <= i <= fn.end_lineno)
+    ]
+    assert offenders == []

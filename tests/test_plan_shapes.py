@@ -14,10 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sbm_communitydetection_spark.plans.iterate import (
-    partition_preserving_checkpoint,
-    unpersist_checkpoint,
-)
+from sbm_communitydetection_spark.plans.iterate import materialize, unpersist_checkpoint
 from sbm_communitydetection_spark.sources.bucketed import physical_exchange_count
 
 
@@ -28,7 +25,7 @@ def adj(spark):
         (F.xxhash64("id", F.lit(1)) % 1000).alias("dst"),
         F.lit(1).cast("long").alias("weight"),
     )
-    a = partition_preserving_checkpoint(edges.repartition("src"), key="src")
+    a = materialize(edges.repartition("src"), "src")
     yield a
     unpersist_checkpoint(a)
 
@@ -78,9 +75,8 @@ def test_co_partitioned_state_update_join_is_exchange_free(spark, adj):
         .agg(F.sum(F.col("rank") * F.col("weight")).alias("contrib"))
         .withColumnRenamed("dst", "id")
     )
-    state = partition_preserving_checkpoint(
-        spark.range(1000).select("id", F.lit(0.001).alias("rank")).repartition("id"),
-        key="id",
+    state = materialize(
+        spark.range(1000).select("id", F.lit(0.001).alias("rank")).repartition("id"), "id"
     )
     try:
         plan = state.join(contribs.hint("SHUFFLE_HASH"), "id", "left")

@@ -618,3 +618,47 @@ def test_fold_checkpointer_empty_delta_preserves_schema(spark, tmp_path):
     assert sorted(map(tuple, out1.collect())) == [(1, 2.0)]
     snap, nxt = ck.resume_state()
     assert nxt == 2 and snap["t"].count() == 1
+
+
+def test_fold_checkpointer_refuses_manifestless_run_dir(spark, tmp_path):
+    """ADVICE: a run directory with batch=* snapshots but no manifest.json
+    is of unknown layout (an older one stored FULL cumulative snapshots
+    where this one stores deltas) — both resume and persist must refuse
+    it instead of unioning its snapshots into duplicated rows."""
+    import json
+    import os
+
+    import pytest
+
+    from sbm_communitydetection_spark.streaming.stream_driver import FoldCheckpointer
+
+    ck = FoldCheckpointer(spark, str(tmp_path), "old", ("t",), delta_tables=("t",))
+    rows = spark.createDataFrame([(1, 2.0)], "a long, b double")
+    ck.persist(0, t=rows)
+    manifest = tmp_path / "old" / "manifest.json"
+    assert json.loads(manifest.read_text()) == {"layout": 2}
+    os.remove(manifest)
+    with pytest.raises(ValueError, match="no manifest"):
+        ck.resume_state()
+    with pytest.raises(ValueError, match="no manifest"):
+        ck.persist(1, t=rows)
+
+
+def test_stream_cc_manifest_fingerprints_the_input(spark, tmp_path):
+    """ADVICE: resuming a checkpointed stream_cc over a DIFFERENT edge
+    stream with identical parameters must raise, not return the old
+    run's labels for the batches it already holds."""
+    import pytest
+
+    from sbm_communitydetection_spark.streaming.stream_driver import (
+        stream_connected_components,
+    )
+
+    rows = [(i, i + 1, 1, i) for i in range(20)]
+    stream = spark.createDataFrame(rows, "src long, dst long, weight long, edge_seq long")
+    stream_connected_components(spark, stream, n_batches=2,
+                                checkpoint_dir=str(tmp_path), run_id="fp")
+    longer = spark.createDataFrame(rows + [(30, 31, 1, 25)], stream.schema)
+    with pytest.raises(ValueError, match="manifest mismatch"):
+        stream_connected_components(spark, longer, n_batches=2,
+                                    checkpoint_dir=str(tmp_path), run_id="fp", resume=True)
