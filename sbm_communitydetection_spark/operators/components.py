@@ -62,7 +62,9 @@ def _partition_local_contract(pairs: DataFrame) -> DataFrame:
     Correctness: within a partition the star has exactly the local
     connectivity of the partition's edges; the union across partitions
     glues local stars on shared vertices, so global connectivity — and
-    the exact min-id component labels — are unchanged.
+    the exact min-id component labels — are unchanged.  Union-by-min
+    keeps each root at its set's minimum, so on ONE partition the output
+    is already the exact member→min-id star (incremental_components).
     """
     schema = pairs.schema
 
@@ -120,7 +122,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     driver: IterationDriver | None = None,
     max_iterations: int = 30,
-    local_contraction: bool = True,
     resume: bool = False,
 ) -> DataFrame:
     """components(id, component) with component = min id in the component.
@@ -128,21 +129,14 @@ def connected_components(
     `edges` may be directed or symmetrized; weights are ignored.
     `vertices` (optional, column `id`) contributes isolated vertices,
     which form singleton components.
-
-    ``local_contraction`` (default on) first contracts components within
-    each partition (exchange-free union-find pass, replaces the up-front
-    full-edge distinct() shuffle) so the global star rounds iterate on a
-    near-vertex-sized pair set; labels are identical either way.
     """
     # no state_key: the CC state is an unkeyed PAIR SET re-shuffled on
     # different keys each half-round — no partitioning to preserve (wall
     # time measured equal either way)
     driver = driver or IterationDriver(spark, run_id="cc")
-    pairs = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if local_contraction:
-        pairs = _partition_local_contract(pairs)
-    else:
-        pairs = pairs.distinct()
+    pairs = _partition_local_contract(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
+    )
 
     last = {"sum": None}
 
@@ -411,7 +405,6 @@ def incremental_components(
     spark: SparkSession,
     labels: DataFrame,
     delta_edges: DataFrame,
-    max_iterations: int = 30,
 ) -> DataFrame:
     """Repair a ``(id, component)`` labeling after edge ADDITIONS without
     touching the original edge set — the CC analogue of the reference's
@@ -421,20 +414,24 @@ def incremental_components(
 
     Only the delta participates: each delta edge (u, v) merges the
     components ``label(u)`` and ``label(v)``, so the merge graph has at
-    most ``2·|delta|`` vertices — the star rounds run on a
-    delta-proportional pair set, never the corpus.  At 100 TB this is
-    the difference between re-clustering 10^12 edges and clustering the
-    day's arrivals.
+    most ``|delta|`` distinct component pairs — never the corpus.  At
+    100 TB this is the difference between re-clustering 10^12 edges and
+    clustering the day's arrivals.
 
     Semantics: the result is EXACTLY ``connected_components(old ∪ delta)``
     (min-id labels), provided ``labels`` itself came from
-    :func:`connected_components` (min-id invariant).  Vertices seen only
-    in the delta enter as their own singleton label first.
+    :func:`connected_components` or this function (min-id invariant).
+    Vertices seen only in the delta enter as their own singleton label
+    first.
 
-    Plan shape: two shuffle-hash joins of the delta against the
-    vertex-scale label table (AQE broadcasts the delta side when small),
-    star rounds on the component-pair graph, then ONE join of the label
-    table against the merge map (component-scale, broadcastable).
+    Plan shape: two joins of the delta against the vertex-scale label
+    table (AQE broadcasts the delta side when small), ONE single-task
+    union-find pass over the whole merge graph (already its exact min-id
+    components — no iteration), then ONE join of the label table against
+    the merge map (component-scale, broadcastable).  Condition: one task
+    must hold a call's merge graph, so callers bound the delta
+    (``stream_connected_components`` via ``n_batches``); corpus-scale
+    graphs go through :func:`connected_components`.
     """
     d = (
         delta_edges.select("src", "dst")
@@ -468,11 +465,10 @@ def incremental_components(
     )
     base = labels.select("id", "component").unionByName(delta_ids)
 
-    # merge forest: CC over the component-pair graph (min-id roots).
-    # local_contraction off: the pair set is already delta-sized.
-    merged = connected_components(
-        spark, merge_pairs, max_iterations=max_iterations, local_contraction=False
-    ).select(F.col("id").alias("component"), F.col("component").alias("root"))
+    # merge forest: component -> min-id root, from one union-find task
+    merged = _partition_local_contract(merge_pairs.coalesce(1)).select(
+        F.col("src").alias("component"), F.col("dst").alias("root")
+    )
 
     return base.join(merged, "component", "left").select(
         "id", F.coalesce("root", "component").alias("component")

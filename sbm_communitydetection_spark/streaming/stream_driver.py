@@ -420,12 +420,14 @@ def stream_connected_components(
     reference's dynamic addEdge loop
     (src/dynamic_community_detection.cpp:51-76).
 
-    Per batch the star rounds touch a merge graph bounded by 2× the
-    batch size, never the accumulated graph, so per-batch cost stays
-    flat as the stream grows — the property that matters at 10^12
-    edges.  The final labeling is EXACTLY ``connected_components`` of
-    everything consumed (min-id labels); the gate proves it against the
-    full-recompute oracle.
+    Every batch, the first included, is folded the same way into a
+    labeling that starts empty: one union-find task over a merge graph
+    of at most |batch| component pairs, never the accumulated graph, so
+    per-batch cost stays flat as the stream grows — the property that
+    matters at 10^12 edges.  That one task must hold a batch's merge
+    graph, so size batches with ``n_batches``.  The final labeling is
+    EXACTLY ``connected_components`` of everything consumed (min-id
+    labels); the gate proves it against the full-recompute oracle.
 
     ``checkpoint_dir`` + ``resume=True`` (VERDICT r3 #9): the labeling
     is snapshotted durably per batch (FoldCheckpointer), and a killed
@@ -433,7 +435,7 @@ def stream_connected_components(
     deterministic from the observed edge_seq range, so the resumed run
     replays exactly the missing batches and ends bit-identical to an
     uninterrupted one (test_streaming kill/restart parity)."""
-    from ..operators.components import connected_components, incremental_components
+    from ..operators.components import incremental_components
 
     bounds = edge_stream.agg(
         F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
@@ -450,7 +452,7 @@ def stream_connected_components(
         if checkpoint_dir
         else None
     )
-    labels: DataFrame | None = None
+    labels = spark.createDataFrame([], "id long, component long")
     start_batch = 0
     if resume and ckpt is not None:
         resumed = ckpt.resume_state()
@@ -463,16 +465,13 @@ def stream_connected_components(
         batch = edge_stream.filter((F.col("edge_seq") >= lo) & (F.col("edge_seq") < hi)).select(
             "src", "dst"
         )
-        if labels is None:
-            labels = connected_components(spark, batch)
-        else:
-            labels = incremental_components(spark, labels, batch)
+        labels = incremental_components(spark, labels, batch)
         if ckpt is not None:
             labels = ckpt.persist(b, labels=labels)["labels"]
         else:
-            # labels are vertex-scale; sever the per-batch star-round lineage
-            # and reset the plan statistics (incremental_components reads
-            # the labels three times per batch — see materialize)
+            # labels are vertex-scale; sever the per-batch lineage and reset
+            # the plan statistics (incremental_components reads the labels
+            # three times per batch — see materialize)
             labels = materialize(labels)
     return labels
 

@@ -304,26 +304,57 @@ def test_degree_assortativity_star_is_minus_one(spark):
     assert abs(r - (-1.0)) < 1e-12
 
 
-def test_incremental_components_equals_full_recompute(spark):
+_CHAIN = 120  # old components chained by one delta path
+
+
+@pytest.mark.parametrize(
+    "base, delta, partitions, spot",
+    [
+        (
+            [(10, 20), (30, 40), (50, 60), (70, 70)],  # 3 comps + self-loop singleton
+            [(20, 30), (40, 50), (60, 800), (801, 802), (900, 900)],
+            None,
+            # chain-merge folds the new vertex into the min id; the delta
+            # self-loop vertex survives as a singleton
+            {800: 10, 900: 900},
+        ),
+        (
+            [(10 * i, 10 * i + 1) for i in range(_CHAIN)],
+            [(10 * i + 1, 10 * i + 10) for i in range(_CHAIN - 1)],
+            8,
+            {10 * _CHAIN - 9: 0},
+        ),
+    ],
+    ids=["mixed_merges", "chain_of_120_components_in_8_partitions"],
+)
+def test_incremental_components_equals_full_recompute(spark, base, delta, partitions, spot):
     """Delta repair must equal full CC over base ∪ delta, including
     chain-merges across several old components, brand-new vertices, and
-    a delta-only self-loop singleton."""
+    a delta-only self-loop singleton. The chain case spreads one merge
+    path over 8 partitions: no partition alone sees the whole chain, so
+    only a single-task pass over the merge graph labels it right."""
     from sbm_communitydetection_spark.operators.components import incremental_components
 
-    base = [(10, 20), (30, 40), (50, 60), (70, 70)]  # 3 comps + self-loop singleton
-    delta = [(20, 30), (40, 50), (60, 800), (801, 802), (900, 900)]
     mk = lambda e: spark.createDataFrame(
         [(s, d, 1) for s, d in e], "src long, dst long, weight long"
     )
     labels = connected_components(spark, mk(base))
-    got = {
-        r.id: r.component
-        for r in incremental_components(spark, labels, mk(delta)).collect()
-    }
+    delta_df = mk(delta) if partitions is None else mk(delta).repartition(partitions)
+    # AQE would coalesce this tiny merge graph into one partition on its
+    # own; keep every shuffle partition so the repair itself must join them
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = {
+            r.id: r.component
+            for r in incremental_components(spark, labels, delta_df).collect()
+        }
+    finally:
+        spark.conf.set(key, prev)
     exp = components_oracle(base + delta)
     assert got == exp
-    assert got[800] == 10  # chain-merge folded the new vertex into min id
-    assert got[900] == 900  # delta self-loop vertex survives as singleton
+    assert {v: got[v] for v in spot} == spot
 
 
 def test_decremental_components_split_and_carryover(spark):

@@ -411,6 +411,26 @@ def test_materialized_state_keeps_plan_statistics_flat(spark, run):
     assert digits <= 20, digits
 
 
+def test_stream_cc_folds_each_batch_in_few_jobs(spark):
+    """A stream-CC batch is one union-find task over its merge graph, not
+    a distributed fixpoint: ≤ 15 Spark jobs per batch (star rounds per
+    batch cost ~37). Jobs are counted under a unique job group, because
+    the status store's job list is capped at spark.ui.retainedJobs and a
+    before/after difference would read near 0 late in a session."""
+    import uuid
+
+    stream = _sbm_edge_stream(spark)
+    sc = spark.sparkContext
+    group = f"stream_cc_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "stream CC jobs-per-batch guard")
+    try:
+        _run_stream_cc(spark, stream)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 15 * 6, f"{jobs} jobs for 6 batches ({jobs / 6:.1f} per batch)"
+
+
 def test_materialize_rejects_a_false_partitioning_key(spark):
     """A key the executed plan is not hash-partitioned on raises instead
     of being recorded: a later join would trust it and skip a needed
