@@ -8,8 +8,7 @@ a `bucketBy(N, "src").sortBy("src", "dst")` parquet table scans with
 disk — zero exchange on the 100 TB side of every iteration, across JOBS
 and RESTARTS, which a localCheckpoint cannot give (it dies with the
 session). On Iceberg the same layout is `bucket(N, src)` partitioning +
-`sortedBy`; the TableIO seam (sources/table_io.py) names where that
-swap happens.
+`sortedBy` (docs/SCALE.md states where an Iceberg backend goes).
 
 The sorted-within-bucket layout is the columnar CSR analogue promised
 in SURVEY §4: each bucket file holds contiguous, sorted (src, dst) runs.

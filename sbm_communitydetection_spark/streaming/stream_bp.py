@@ -34,6 +34,7 @@ from ..operators.belief_propagation import (
 from ..operators.frontier import r_hop_neighborhood
 from ..operators.graph_ops import add_edges
 from ..plans.iterate import materialize
+from .stream_driver import _batch_bounds
 
 
 def stream_belief_propagation(
@@ -50,12 +51,7 @@ def stream_belief_propagation(
     """beliefs(id, label, belief) after streaming ``edge_stream(src, dst,
     weight, edge_seq)`` through radius-bounded BP. ``priors(id, prior)``
     must cover every vertex that will appear."""
-    bounds = edge_stream.agg(
-        F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
-    ).collect()[0]
-    if bounds.n == 0:
-        raise ValueError("empty edge stream")
-    span = (bounds.hi - bounds.lo + 1) / n_batches
+    _, spans = _batch_bounds(edge_stream, n_batches)
 
     pr = materialize(priors.select(F.col("id").alias("dst"), "prior"))
     edges = spark.createDataFrame([], "src long, dst long, weight long")
@@ -63,9 +59,7 @@ def stream_belief_propagation(
     uniform = F.array(*[F.lit(1.0 / k)] * k)
     kernel = _superstep_kernel(p_in, p_out)
 
-    for b in range(n_batches):
-        lo = bounds.lo + int(b * span)
-        hi = bounds.hi + 1 if b == n_batches - 1 else bounds.lo + int((b + 1) * span)
+    for lo, hi in spans:
         batch = edge_stream.filter((F.col("edge_seq") >= lo) & (F.col("edge_seq") < hi)).select(
             "src", "dst", "weight"
         )

@@ -21,10 +21,11 @@ per batch:
 
 Per-batch state goes through ``plans.iterate.materialize``; with
 ``checkpoint_dir`` set, every batch additionally writes durable (edges,
-labels) parquet snapshots (FoldCheckpointer) + a per-partition lineage
-row, and ``resume=True`` restarts a killed run from the latest complete
-batch (north_rule "any run resumes mid-iteration").
-"""
+labels) parquet snapshots through ``plans.iterate.FoldCheckpointer`` —
+the one durable layout, shared with IterationDriver's supersteps — + a
+per-partition lineage row, and ``resume=True`` restarts a killed run
+from the latest complete batch (north_rule "any run resumes
+mid-iteration")."""
 
 from __future__ import annotations
 
@@ -40,186 +41,25 @@ from ..functions.metrics import modularity
 from ..operators.graph_ops import add_edges, symmetrize
 from ..operators.label_propagation import lpa_superstep
 from ..plans.iterate import (
+    FoldCheckpointer,
     cache_partitioned,
     materialize,
-    parquet_partition_lineage,
     unpersist_checkpoint,
 )
 
-# FoldCheckpointer on-disk layout version, recorded in every manifest.json
-FOLD_LAYOUT = 2
 
-
-def _batch_index(name: str) -> int | None:
-    """``batch=<int>`` directory name → int, else None.  A stray
-    non-numeric directory (``batch=tmp`` from a copy or an editor) must
-    be IGNORED, not crash every resume attempt (ADVICE r4)."""
-    if not name.startswith("batch="):
-        return None
-    try:
-        return int(name.split("=", 1)[1])
-    except ValueError:
-        return None
-
-
-class FoldCheckpointer:
-    """Durable per-batch snapshots of a fold's NAMED state tables under
-    ``<checkpoint_dir>/<run_id>/batch=<b>/<table>`` — the streaming
-    analogue of IterationDriver's parquet mode, shared by every
-    checkpointed fold (community detection / PR / CC / triangles /
-    dedup / novelty, VERDICT r3 #9).  A batch is complete when EVERY
-    table carries a _SUCCESS marker; resume loads the highest complete
-    batch.  The layout is the Parquet stand-in for an Iceberg
-    snapshot-per-batch table (see plans/iterate.py docstring).
-
-    Two persistence modes per table (VERDICT r4 #2):
-
-    * FULL snapshot (default): the table is rewritten per batch — right
-      for state that changes in place (PageRank ranks, CC labels).
-    * ``delta_tables``: the caller passes only the batch's APPENDED
-      rows; the durable value is the union of the batch dirs ≤ b, read
-      back by a multi-path parquet scan.  Right for append-only stores
-      and cumulative emission sets (emitted dup pairs, the novelty
-      owner store), where a per-batch full rewrite costs
-      O(n_batches × cumulative size) I/O against the O(total size) an
-      Iceberg snapshot-APPEND (which this layout stands in for) pays.
-      Delta reconstruction resumes from the highest batch b with an
-      UNBROKEN complete prefix below it — an interior hole would
-      silently drop rows, while trailing incomplete batches are simply
-      replayed.
-
-    ``manifest`` (ADVICE r4): a small JSON-serializable dict of run
-    parameters (n_batches, boundaries, thresholds, an input fingerprint
-    such as the stream's ``(lo, hi, n)`` edge_seq bounds).  The first
-    persist writes ``<run>/manifest.json`` — always, stamped with
-    ``"layout": FOLD_LAYOUT`` — and any later persist or resume whose
-    manifest differs raises ValueError instead of silently folding a
-    DIFFERENT stream onto the old run's state (e.g. resuming with
-    changed batch boundaries would return the old run's final state for
-    every "already done" batch).  A run directory holding ``batch=*``
-    directories but no manifest (an older layout, which stored full
-    cumulative snapshots where this one stores deltas) is refused too:
-    unioning its snapshots as deltas would duplicate rows."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        checkpoint_dir: str,
-        run_id: str,
-        tables: tuple[str, ...],
-        delta_tables: tuple[str, ...] = (),
-        manifest: dict | None = None,
-    ):
-        self.spark = spark
-        self.dir = os.path.join(checkpoint_dir, run_id)
-        self.tables = tables
-        self.delta_tables = tuple(delta_tables)
-        assert set(self.delta_tables) <= set(tables), (delta_tables, tables)
-        self.manifest = {**(manifest or {}), "layout": FOLD_LAYOUT}
-
-    def _path(self, b: int, table: str) -> str:
-        return os.path.join(self.dir, f"batch={b}", table)
-
-    def _check_or_write_manifest(self, write: bool) -> None:
-        # JSON round-trip so tuples/ints compare equal to what disk holds
-        mine = json.loads(json.dumps(self.manifest, sort_keys=True))
-        path = os.path.join(self.dir, "manifest.json")
-        if os.path.exists(path):
-            with open(path) as fh:
-                on_disk = json.load(fh)
-            if on_disk != mine:
-                raise ValueError(
-                    f"FoldCheckpointer manifest mismatch under {self.dir}: "
-                    f"on disk {on_disk!r} vs this run {mine!r} — refusing to "
-                    "resume/extend a checkpoint written by a run with "
-                    "different parameters or inputs"
-                )
-        elif self._existing_batches():
-            raise ValueError(
-                f"FoldCheckpointer: {self.dir} holds batch directories but no "
-                "manifest.json — refusing to resume/extend a checkpoint of "
-                f"unknown layout (this one is layout {FOLD_LAYOUT})"
-            )
-        elif write:
-            os.makedirs(self.dir, exist_ok=True)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(mine, fh, sort_keys=True)
-            os.replace(tmp, path)
-
-    def _existing_batches(self) -> list[int]:
-        if not os.path.isdir(self.dir):
-            return []
-        return sorted(
-            {i for name in os.listdir(self.dir) if (i := _batch_index(name)) is not None}
-        )
-
-    def _is_complete(self, b: int) -> bool:
-        return all(
-            os.path.exists(os.path.join(self._path(b, t), "_SUCCESS"))
-            for t in self.tables
-        )
-
-    def _read_table(self, t: str, b: int) -> DataFrame:
-        if t in self.delta_tables:
-            paths = [
-                self._path(i, t)
-                for i in self._existing_batches()
-                if i <= b
-                and os.path.exists(os.path.join(self._path(i, t), "_SUCCESS"))
-            ]
-            return self.spark.read.parquet(*paths)
-        return self.spark.read.parquet(self._path(b, t))
-
-    def _write(self, df: DataFrame, path: str) -> None:
-        df.write.mode("overwrite").parquet(path)
-        # an EMPTY delta (zero partitions) writes only _SUCCESS; rewrite
-        # with one empty partition so the schema survives on disk and the
-        # multi-path read-back can always infer it
-        if not any(n.endswith(".parquet") for n in os.listdir(path)):
-            df.repartition(1).write.mode("overwrite").parquet(path)
-
-    def persist(self, b: int, **dfs: DataFrame) -> dict[str, DataFrame]:
-        """Write batch ``b``'s tables (full state, or the batch DELTA for
-        ``delta_tables``) and return durable read-back handles — for a
-        delta table the handle is the reconstructed CUMULATIVE union."""
-        assert set(dfs) == set(self.tables), (sorted(dfs), self.tables)
-        self._check_or_write_manifest(write=True)
-        out = {}
-        for t, df in dfs.items():
-            self._write(df, self._path(b, t))
-            out[t] = self._read_table(t, b)
-        return out
-
-    def lineage(self, b: int) -> dict[str, list[dict]]:
-        """Per-partition lineage (data file, rows, bytes) of batch ``b``'s
-        table directories."""
-        return {t: parquet_partition_lineage(self._path(b, t)) for t in self.tables}
-
-    def latest_complete_batch(self) -> int | None:
-        existing = self._existing_batches()
-        complete = [b for b in existing if self._is_complete(b)]
-        if not complete:
-            return None
-        if not self.delta_tables:
-            return max(complete)
-        # delta reconstruction needs an unbroken prefix: stop before the
-        # first existing-but-incomplete batch
-        cset = set(complete)
-        best = None
-        for b in existing:
-            if b not in cset:
-                break
-            best = b
-        return best
-
-    def resume_state(self) -> tuple[dict[str, DataFrame], int] | None:
-        """({table: df}, next_batch) from the latest durable snapshot."""
-        self._check_or_write_manifest(write=False)
-        b = self.latest_complete_batch()
-        if b is None:
-            return None
-        return ({t: self._read_table(t, b) for t in self.tables}, b + 1)
+def _batch_bounds(edge_stream: DataFrame, n_batches: int) -> tuple:
+    """(bounds, [(lo, hi), ...]): the stream's ``(lo, hi, n)`` edge_seq
+    row — also each fold's input fingerprint — and ``n_batches`` equal
+    half-open edge_seq spans of ``[lo, hi]``, the last one closed at hi."""
+    bounds = edge_stream.agg(
+        F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
+    ).collect()[0]
+    if bounds.n == 0:
+        raise ValueError("empty edge stream")
+    span = (bounds.hi - bounds.lo + 1) / n_batches
+    cuts = [bounds.lo + int(b * span) for b in range(n_batches)] + [bounds.hi + 1]
+    return bounds, list(zip(cuts, cuts[1:]))
 
 
 @dataclass
@@ -274,12 +114,7 @@ def stream_community_detection(
     that makes per-batch repair affordable at 10^12-turn scale. Applies
     to the LPA variants; ``gain`` needs globally consistent community
     degrees and always runs on the full graph."""
-    bounds = edge_stream.agg(
-        F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
-    ).collect()[0]
-    if bounds.n == 0:
-        raise ValueError("empty edge stream")
-    span = (bounds.hi - bounds.lo + 1) / n_batches
+    bounds, spans = _batch_bounds(edge_stream, n_batches)
 
     ckpt = (
         FoldCheckpointer(
@@ -306,8 +141,7 @@ def stream_community_detection(
 
     for b in range(start_batch, n_batches):
         t0 = time.monotonic()
-        lo = bounds.lo + int(b * span)
-        hi = bounds.hi + 1 if b == n_batches - 1 else bounds.lo + int((b + 1) * span)
+        lo, hi = spans[b]
         batch = edge_stream.filter((F.col("edge_seq") >= lo) & (F.col("edge_seq") < hi)).select(
             "src", "dst", "weight"
         )
@@ -437,12 +271,7 @@ def stream_connected_components(
     uninterrupted one (test_streaming kill/restart parity)."""
     from ..operators.components import incremental_components
 
-    bounds = edge_stream.agg(
-        F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
-    ).collect()[0]
-    if bounds.n == 0:
-        raise ValueError("empty edge stream")
-    span = (bounds.hi - bounds.lo + 1) / n_batches
+    bounds, spans = _batch_bounds(edge_stream, n_batches)
 
     ckpt = (
         FoldCheckpointer(
@@ -460,8 +289,7 @@ def stream_connected_components(
             labels, start_batch = resumed[0]["labels"], resumed[1]
 
     for b in range(start_batch, n_batches):
-        lo = bounds.lo + int(b * span)
-        hi = bounds.hi + 1 if b == n_batches - 1 else bounds.lo + int((b + 1) * span)
+        lo, hi = spans[b]
         batch = edge_stream.filter((F.col("edge_seq") >= lo) & (F.col("edge_seq") < hi)).select(
             "src", "dst"
         )
@@ -521,17 +349,9 @@ def stream_pagerank(
 
     fingerprint = {}
     if boundaries is None:
-        bounds = edge_stream.agg(
-            F.min("edge_seq").alias("lo"), F.max("edge_seq").alias("hi"), F.count("*").alias("n")
-        ).collect()[0]
-        if bounds.n == 0:
-            raise ValueError("empty edge stream")
+        bounds, spans = _batch_bounds(edge_stream, n_batches)
         fingerprint["bounds"] = list(bounds)
-        span = (bounds.hi - bounds.lo + 1) / n_batches
-        boundaries = [
-            bounds.hi + 1 if b == n_batches - 1 else bounds.lo + int((b + 1) * span)
-            for b in range(n_batches)
-        ]
+        boundaries = [hi for _, hi in spans]
 
     ckpt = (
         FoldCheckpointer(

@@ -34,15 +34,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import materialize
+from ..plans.iterate import FoldCheckpointer, materialize, unpersist_checkpoint
 from .dedup import _doc_shingles, minhash_signatures
 from .portable import MINHASH_NUM, MINHASH_ROWS_PER_BAND, NGRAM_N
 
 
 @dataclass
 class DedupState:
-    """Accumulated LSH store (all checkpointed; replace with bucketed
-    lake tables via the TableIO seam in production)."""
+    """Accumulated LSH store (materialized, or the durable
+    FoldCheckpointer read-backs; bucketed lake tables in production)."""
 
     bands: DataFrame  # (doc_id, band, band_key)
     shingles: DataFrame  # (doc_id, shingle)
@@ -86,7 +86,9 @@ def process_batch(
     arriving batch — ``state_delta`` holds only the rows this batch
     APPENDED to each store (the LSH store is append-only), which is
     what a durable checkpoint needs to write per batch (VERDICT r4 #2:
-    snapshot-append, not full rewrite).
+    snapshot-append, not full rewrite).  ``next_state`` is the LAZY
+    union of ``state`` and the delta: the caller either materializes it
+    or, checkpointing, replaces it with the durable read-backs.
 
     Emitted pairs have ≥1 side in `new_docs`; a < b canonical order."""
     if state is None:
@@ -140,11 +142,7 @@ def process_batch(
         .filter(F.col("jaccard") >= threshold)
     )
 
-    next_state = DedupState(
-        bands=materialize(all_bands),
-        shingles=materialize(all_sh),
-        sizes=materialize(all_sizes),
-    )
+    next_state = DedupState(bands=all_bands, shingles=all_sh, sizes=all_sizes)
     delta = DedupState(bands=new_bands, shingles=new_sh, sizes=new_sizes)
     return next_state, pairs, delta
 
@@ -165,7 +163,7 @@ def stream_minhash_dedup(
 
     ``checkpoint_dir`` + ``resume=True`` (VERDICT r3 #9): the LSH store
     (bands / shingles / sizes) AND the emitted pairs are snapshotted
-    durably per batch via the streaming FoldCheckpointer; a killed run
+    durably per batch via FoldCheckpointer; a killed run
     restarts from the latest complete batch and its final emission set
     is identical to an uninterrupted run's (each pair is emitted
     exactly once, in its later doc's batch — replaying only the missing
@@ -176,8 +174,6 @@ def stream_minhash_dedup(
     value as the union of the batch dirs.  The manifest (ADVICE r4)
     fingerprints n_batches and the match parameters so a resume against
     a differently-batched or re-parameterized stream is refused."""
-    from ..streaming.stream_driver import FoldCheckpointer
-
     tables = ("bands", "shingles", "sizes", "pairs_cum")
     ckpt = (
         FoldCheckpointer(
@@ -213,10 +209,14 @@ def stream_minhash_dedup(
     for b, batch in enumerate(batches):
         if b < start_batch:
             continue
+        prev = state
         state, pairs, delta = process_batch(
             spark, state, batch, threshold, num_hashes, rows_per_band, n
         )
         pairs = materialize(pairs)
+        # the batch's materialized delta is superseded once folded into
+        # the next state (or written durably); nothing reads it after
+        superseded = [delta.bands, delta.shingles]
         if ckpt is not None:
             # deltas only — the durable handles come back as the
             # reconstructed cumulative unions
@@ -231,8 +231,18 @@ def stream_minhash_dedup(
                 bands=snap["bands"], shingles=snap["shingles"], sizes=snap["sizes"]
             )
             out = snap["pairs_cum"]
+            superseded.append(pairs)
         else:
+            state = DedupState(
+                bands=materialize(state.bands),
+                shingles=materialize(state.shingles),
+                sizes=materialize(state.sizes),
+            )
             out = pairs if out is None else out.unionByName(pairs)
+            if prev is not None:
+                superseded += [prev.bands, prev.shingles, prev.sizes]
+        for df in superseded:
+            unpersist_checkpoint(df)
     if out is None:
         return spark.createDataFrame([], "a long, b long, jaccard double")
     return out

@@ -19,14 +19,14 @@ def _inc_step(state, i):
 
 
 def test_parquet_checkpoint_and_metrics(spark, tmp_path):
-    d = IterationDriver(spark, run_id="t1", checkpoint_dir=str(tmp_path), mode="parquet")
+    d = IterationDriver(spark, run_id="t1", checkpoint_dir=str(tmp_path))
     state = spark.createDataFrame([(i, 0) for i in range(10)], "id long, v long")
     res = d.run(state, _inc_step, max_iterations=10, metric_name="remaining")
     assert res.converged and res.iterations == 5
     assert sorted(r.v for r in res.state.collect()) == [5] * 10
     # durable snapshots exist per iteration
     for i in range(6):
-        assert os.path.exists(str(tmp_path / "t1" / f"iter={i}" / "_SUCCESS"))
+        assert os.path.exists(str(tmp_path / "t1" / f"batch={i}" / "state" / "_SUCCESS"))
     # lineage/metrics log has one row per iteration incl. init
     lines = [json.loads(x) for x in open(tmp_path / "t1" / "_metrics.jsonl")]
     assert len(lines) == 6
@@ -44,7 +44,7 @@ def test_parquet_checkpoint_and_metrics(spark, tmp_path):
 
 
 def test_resume_from_latest_snapshot(spark, tmp_path):
-    d = IterationDriver(spark, run_id="t2", checkpoint_dir=str(tmp_path), mode="parquet")
+    d = IterationDriver(spark, run_id="t2", checkpoint_dir=str(tmp_path))
     state = spark.createDataFrame([(i, 0) for i in range(10)], "id long, v long")
     # run only 2 iterations (simulated interruption)
     partial = d.run(state, _inc_step, max_iterations=2, metric_name="remaining")
@@ -52,7 +52,7 @@ def test_resume_from_latest_snapshot(spark, tmp_path):
     assert d.latest_complete_iteration() == 2
 
     # a NEW driver resumes mid-run from the durable snapshot and finishes
-    d2 = IterationDriver(spark, run_id="t2", checkpoint_dir=str(tmp_path), mode="parquet")
+    d2 = IterationDriver(spark, run_id="t2", checkpoint_dir=str(tmp_path))
     calls = []
 
     def counting_step(s, i):
@@ -65,8 +65,39 @@ def test_resume_from_latest_snapshot(spark, tmp_path):
     assert sorted(r.v for r in res.state.collect()) == [5] * 10
 
 
+def test_checkpoint_dir_alone_selects_the_fold_layout(spark, tmp_path):
+    """A checkpoint_dir is enough for a durable driver: every superstep
+    is a FoldCheckpointer batch with one full-snapshot table ``state``
+    under a layout-2 manifest, and a NEW driver resumes from it — a
+    stray non-numeric batch=* directory in the run dir is ignored."""
+    d = IterationDriver(spark, run_id="fold", checkpoint_dir=str(tmp_path))
+    state = spark.createDataFrame([(i, 0) for i in range(6)], "id long, v long")
+    partial = d.run(state, _inc_step, max_iterations=2, metric_name="remaining")
+    assert not partial.converged
+    run_dir = tmp_path / "fold"
+    for i in range(3):
+        assert (run_dir / f"batch={i}" / "state" / "_SUCCESS").exists()
+    assert json.loads((run_dir / "manifest.json").read_text()) == {"layout": 2}
+    assert partial.metrics[-1]["snapshot"].endswith(os.path.join("batch=2", "state"))
+
+    (run_dir / "batch=tmp" / "state").mkdir(parents=True)
+    (run_dir / "batch=tmp" / "state" / "_SUCCESS").touch()
+    d2 = IterationDriver(spark, run_id="fold", checkpoint_dir=str(tmp_path))
+    assert d2.latest_complete_iteration() == 2
+    calls = []
+
+    def counting_step(s, i):
+        calls.append(i)
+        return _inc_step(s, i)
+
+    res = d2.run(state, counting_step, max_iterations=10, resume=True, metric_name="remaining")
+    assert res.converged and calls[0] == 3
+    assert sorted(r.v for r in res.state.collect()) == [5] * 6
+    assert d2.latest_complete_iteration() == 5
+
+
 def test_local_checkpoint_mode(spark):
-    d = IterationDriver(spark, run_id="t3", mode="local")
+    d = IterationDriver(spark, run_id="t3")
     state = spark.createDataFrame([(i, 0) for i in range(4)], "id long, v long")
     res = d.run(state, _inc_step, max_iterations=10, metric_name="remaining")
     assert res.converged and sorted(r.v for r in res.state.collect()) == [5] * 4
@@ -169,7 +200,7 @@ def test_pagerank_resumes_mid_iteration(spark, tmp_path):
 
     # one uninterrupted 6-iteration run (the ground truth)
     d_full = IterationDriver(
-        spark, run_id="prfull", checkpoint_dir=str(tmp_path / "full"), mode="parquet"
+        spark, run_id="prfull", checkpoint_dir=str(tmp_path / "full")
     )
     full = {
         r.id: r.rank
@@ -180,12 +211,12 @@ def test_pagerank_resumes_mid_iteration(spark, tmp_path):
 
     # interrupted run: 3 iterations, then a NEW driver resumes to 6
     d1 = IterationDriver(
-        spark, run_id="pr", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="pr", checkpoint_dir=str(tmp_path / "r")
     )
     pagerank(spark, edges, tolerance=-1.0, max_iterations=3, driver=d1)
     assert d1.latest_complete_iteration() == 3
     d2 = IterationDriver(
-        spark, run_id="pr", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="pr", checkpoint_dir=str(tmp_path / "r")
     )
     resumed = {
         r.id: r.rank
@@ -214,7 +245,7 @@ def test_lpa_resumes_mid_iteration(spark, tmp_path):
     edges = symmetrize(raw.filter(F.col("src") != F.col("dst"))).localCheckpoint(eager=True)
 
     d_full = IterationDriver(
-        spark, run_id="lpafull", checkpoint_dir=str(tmp_path / "full"), mode="parquet"
+        spark, run_id="lpafull", checkpoint_dir=str(tmp_path / "full")
     )
     full = {
         r.id: r.label
@@ -224,12 +255,12 @@ def test_lpa_resumes_mid_iteration(spark, tmp_path):
     }
 
     d1 = IterationDriver(
-        spark, run_id="lpa", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="lpa", checkpoint_dir=str(tmp_path / "r")
     )
     label_propagation(spark, edges, tolerance=-1.0, max_iterations=2, driver=d1)
     assert d1.latest_complete_iteration() == 2
     d2 = IterationDriver(
-        spark, run_id="lpa", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="lpa", checkpoint_dir=str(tmp_path / "r")
     )
     resumed = {
         r.id: r.label
@@ -273,19 +304,18 @@ def test_cc_resumes_mid_iteration(spark, tmp_path):
                 spark,
                 run_id="ccfull",
                 checkpoint_dir=str(tmp_path / "full"),
-                mode="parquet",
             ),
         ).collect()
     }
     assert set(full.values()) == {0, 1000}
 
     d1 = IterationDriver(
-        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r")
     )
     connected_components(spark, edges, driver=d1, max_iterations=2)
     assert d1.latest_complete_iteration() == 2
     d2 = IterationDriver(
-        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="cc", checkpoint_dir=str(tmp_path / "r")
     )
     resumed = {
         r.id: r.component
@@ -319,7 +349,7 @@ def test_bp_resumes_mid_iteration(spark, tmp_path):
     )
 
     d_full = IterationDriver(
-        spark, run_id="bpfull", checkpoint_dir=str(tmp_path / "full"), mode="parquet"
+        spark, run_id="bpfull", checkpoint_dir=str(tmp_path / "full")
     )
     full = {
         r.id: (r.label, r.belief)
@@ -330,7 +360,7 @@ def test_bp_resumes_mid_iteration(spark, tmp_path):
     }
 
     d1 = IterationDriver(
-        spark, run_id="bp", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="bp", checkpoint_dir=str(tmp_path / "r")
     )
     belief_propagation(
         spark, edges, priors, k, 0.9, 0.1,
@@ -338,7 +368,7 @@ def test_bp_resumes_mid_iteration(spark, tmp_path):
     )
     assert d1.latest_complete_iteration() == 2
     d2 = IterationDriver(
-        spark, run_id="bp", checkpoint_dir=str(tmp_path / "r"), mode="parquet"
+        spark, run_id="bp", checkpoint_dir=str(tmp_path / "r")
     )
     resumed = {
         r.id: (r.label, r.belief)
