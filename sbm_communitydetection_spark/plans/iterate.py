@@ -568,16 +568,17 @@ class IterationDriver:
                 state, start_iter = resumed
         if start_iter == 0:
             state = self._persist(state, 0)
-            self._log_metrics(
-                {
-                    "run_id": self.run_id,
-                    "iteration": 0,
-                    "phase": "init",
-                    "rows": state.count(),
-                    "partitions": state.rdd.getNumPartitions(),
-                    **self._snapshot_fields(0),
-                }
-            )
+            if self.ckpt is not None:  # only the durable log keeps this row
+                self._log_metrics(
+                    {
+                        "run_id": self.run_id,
+                        "iteration": 0,
+                        "phase": "init",
+                        "rows": state.count(),
+                        "partitions": state.rdd.getNumPartitions(),
+                        **self._snapshot_fields(0),
+                    }
+                )
             start_iter = 1
 
         metrics: list[dict] = []

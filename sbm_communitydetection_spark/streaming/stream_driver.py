@@ -255,13 +255,16 @@ def stream_connected_components(
     (src/dynamic_community_detection.cpp:51-76).
 
     Every batch, the first included, is folded the same way into a
-    labeling that starts empty: one union-find task over a merge graph
-    of at most |batch| component pairs, never the accumulated graph, so
-    per-batch cost stays flat as the stream grows — the property that
-    matters at 10^12 edges.  That one task must hold a batch's merge
-    graph, so size batches with ``n_batches``.  The final labeling is
-    EXACTLY ``connected_components`` of everything consumed (min-id
-    labels); the gate proves it against the full-recompute oracle.
+    labeling that starts empty: the batch's edges and its endpoints'
+    labels are collected to the driver, one union-find there merges at
+    most |batch| component pairs, and one broadcast join relabels the
+    table — no Python task and no shuffle, and the union-find never sees
+    the accumulated graph.  The relabel and ``materialize`` still pass
+    over the whole label table each batch (map-side).  The driver holds
+    one batch's edges, so size batches with ``n_batches``.  The final
+    labeling is EXACTLY ``connected_components`` of everything consumed
+    (min-id labels); the gate proves it against the full-recompute
+    oracle.
 
     ``checkpoint_dir`` + ``resume=True`` (VERDICT r3 #9): the labeling
     is snapshotted durably per batch (FoldCheckpointer), and a killed
@@ -299,7 +302,7 @@ def stream_connected_components(
         else:
             # labels are vertex-scale; sever the per-batch lineage and reset
             # the plan statistics (incremental_components reads the labels
-            # three times per batch — see materialize)
+            # twice per batch — see materialize)
             labels = materialize(labels)
     return labels
 

@@ -233,11 +233,14 @@ def stream_minhash_dedup(
             out = snap["pairs_cum"]
             superseded.append(pairs)
         else:
-            state = DedupState(
-                bands=materialize(state.bands),
-                shingles=materialize(state.shingles),
-                sizes=materialize(state.sizes),
-            )
+            # after the last batch nothing reads the store: only the
+            # (materialized) pairs are returned
+            if b < len(batches) - 1:
+                state = DedupState(
+                    bands=materialize(state.bands),
+                    shingles=materialize(state.shingles),
+                    sizes=materialize(state.sizes),
+                )
             out = pairs if out is None else out.unionByName(pairs)
             if prev is not None:
                 superseded += [prev.bands, prev.shingles, prev.sizes]

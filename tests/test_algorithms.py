@@ -324,15 +324,26 @@ _CHAIN = 120  # old components chained by one delta path
             8,
             {10 * _CHAIN - 9: 0},
         ),
+        (
+            [(10, 20)],
+            [(5, 20)],
+            None,
+            # a new vertex below the old root becomes the merged root
+            {5: 5, 10: 5, 20: 5},
+        ),
     ],
-    ids=["mixed_merges", "chain_of_120_components_in_8_partitions"],
+    ids=[
+        "mixed_merges",
+        "chain_of_120_components_in_8_partitions",
+        "new_vertex_below_old_root",
+    ],
 )
 def test_incremental_components_equals_full_recompute(spark, base, delta, partitions, spot):
     """Delta repair must equal full CC over base ∪ delta, including
     chain-merges across several old components, brand-new vertices, and
     a delta-only self-loop singleton. The chain case spreads one merge
     path over 8 partitions: no partition alone sees the whole chain, so
-    only a single-task pass over the merge graph labels it right."""
+    only a pass over the whole merge graph labels it right."""
     from sbm_communitydetection_spark.operators.components import incremental_components
 
     mk = lambda e: spark.createDataFrame(
@@ -400,6 +411,40 @@ def test_decremental_components_empty_removal_is_identity(spark):
         for r in decremental_components(spark, labels, edges, empty).collect()
     }
     assert got == {r.id: r.component for r in labels.collect()}
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Class names of every node of an executed plan, through adaptive
+    plan wrappers."""
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        names.append(kind)
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_incremental_components_plan_has_no_shuffle(spark):
+    """The repair folds the delta on the driver: the returned table is
+    the label scan, one broadcast join, a union and a coalesce, with no
+    ShuffleExchange — and the labels are still exact."""
+    from sbm_communitydetection_spark.operators.components import incremental_components
+    from sbm_communitydetection_spark.plans.iterate import materialize
+
+    mk = lambda e: spark.createDataFrame(
+        [(s, d, 1) for s, d in e], "src long, dst long, weight long"
+    )
+    base, delta = [(10, 20), (30, 40), (50, 60)], [(20, 30), (60, 70), (80, 81)]
+    labels = materialize(connected_components(spark, mk(base)))
+    out = incremental_components(spark, labels, mk(delta))
+    nodes = _plan_nodes(out._jdf.queryExecution().executedPlan())
+    assert "BroadcastExchangeExec" in nodes, nodes
+    assert "ShuffleExchangeExec" not in nodes, nodes
+    assert {r.id: r.component for r in out.collect()} == components_oracle(base + delta)
 
 
 def test_incremental_components_empty_delta_is_identity(spark):

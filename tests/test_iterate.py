@@ -441,24 +441,64 @@ def test_materialized_state_keeps_plan_statistics_flat(spark, run):
     assert digits <= 20, digits
 
 
-def test_stream_cc_folds_each_batch_in_few_jobs(spark):
-    """A stream-CC batch is one union-find task over its merge graph, not
-    a distributed fixpoint: ≤ 15 Spark jobs per batch (star rounds per
-    batch cost ~37). Jobs are counted under a unique job group, because
-    the status store's job list is capped at spark.ui.retainedJobs and a
-    before/after difference would read near 0 late in a session."""
+def _count_jobs(spark, run) -> tuple:
+    """(Spark jobs ``run()`` starts, its result). Jobs are counted under a
+    unique job group: the status store's job list is capped at
+    spark.ui.retainedJobs, so a before/after difference would read near 0
+    late in a session."""
     import uuid
 
-    stream = _sbm_edge_stream(spark)
     sc = spark.sparkContext
-    group = f"stream_cc_jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "stream CC jobs-per-batch guard")
+    group = f"jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
     try:
-        _run_stream_cc(spark, stream)
+        out = run()
     finally:
         sc._jsc.clearJobGroup()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 15 * 6, f"{jobs} jobs for 6 batches ({jobs / 6:.1f} per batch)"
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_stream_cc_folds_each_batch_in_few_jobs(spark):
+    """A stream-CC batch is folded on the driver, not by a distributed
+    fixpoint or a Python task: two delta-sized collects, one broadcast
+    and the materialize — ≤ 6 Spark jobs per batch (the union-find task
+    and its shuffles cost 10; star rounds per batch ~37)."""
+    stream = _sbm_edge_stream(spark)
+    jobs, _ = _count_jobs(spark, lambda: _run_stream_cc(spark, stream))
+    assert jobs <= 6 * 6, f"{jobs} jobs for 6 batches ({jobs / 6:.1f} per batch)"
+
+
+def test_stream_cc_label_partitions_stay_bounded(spark):
+    """Each batch unions its new vertices' rows into the label table; the
+    coalesce after that union keeps the partition count flat instead of
+    growing by defaultParallelism per batch."""
+    from sbm_communitydetection_spark.streaming.stream_driver import stream_connected_components
+
+    stream = _sbm_edge_stream(spark)
+    parts = {
+        n: stream_connected_components(spark, stream, n_batches=n).rdd.getNumPartitions()
+        for n in (2, 12)
+    }
+    assert parts[12] == parts[2], parts
+
+
+def test_non_durable_run_builds_no_init_row(spark):
+    """Without ``checkpoint_dir`` the init metrics row has nowhere to go,
+    so its row count is never taken: a one-superstep run is two jobs,
+    the initial and the step's materialize."""
+    d = IterationDriver(spark, run_id="init_row")
+    state = spark.createDataFrame([(i, 0) for i in range(4)], "id long, v long")
+    jobs, res = _count_jobs(
+        spark,
+        lambda: d.run(
+            state,
+            lambda s, i: (s.withColumn("v", F.col("v") + 1), 0.0),
+            max_iterations=1,
+            log_rows=False,
+        ),
+    )
+    assert res.converged and res.iterations == 1
+    assert jobs == 2, jobs
 
 
 def test_materialize_rejects_a_false_partitioning_key(spark):

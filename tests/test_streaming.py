@@ -504,14 +504,7 @@ def _dedup_batches(spark):
     ]
 
 
-def test_checkpointed_dedup_fold_materializes_only_the_batch(spark, tmp_path, monkeypatch):
-    """A checkpointed stream_minhash_dedup replaces its state with the
-    durable read-backs, so it materializes only each batch's new bands,
-    new shingles and emitted pairs — never the cumulative store — and
-    releases every checkpoint it made once the durable copy supersedes
-    it."""
-    from sbm_communitydetection_spark.textops import stream_dedup
-
+def _four_dedup_batches(spark):
     texts = [
         "the quick brown fox jumps over the lazy dog every single day",
         "completely unrelated text about distributed systems and parquet",
@@ -522,15 +515,18 @@ def test_checkpointed_dedup_fold_materializes_only_the_batch(spark, tmp_path, mo
         "the quick brown fox jumps over the lazy dog every single day",
         "another completely unrelated passage mentioning spark and joins",
     ]
-    batches = [
+    return [
         spark.createDataFrame(
             [(i + 2 * b, texts[i + 2 * b]) for i in range(2)], "doc_id long, text string"
         )
         for b in range(4)
     ]
-    want = sorted(map(tuple, stream_dedup.stream_minhash_dedup(
-        spark, batches, threshold=0.4).collect()))
-    assert want
+
+
+def _record_dedup_checkpoints(monkeypatch):
+    """([materialized], [released]) DataFrames of the dedup fold's later
+    calls of ``materialize`` and ``unpersist_checkpoint``."""
+    from sbm_communitydetection_spark.textops import stream_dedup
 
     made, released = [], []
     real_materialize = stream_dedup.materialize
@@ -547,11 +543,53 @@ def test_checkpointed_dedup_fold_materializes_only_the_batch(spark, tmp_path, mo
 
     monkeypatch.setattr(stream_dedup, "materialize", recording_materialize)
     monkeypatch.setattr(stream_dedup, "unpersist_checkpoint", recording_release)
+    return made, released
+
+
+def test_checkpointed_dedup_fold_materializes_only_the_batch(spark, tmp_path, monkeypatch):
+    """A checkpointed stream_minhash_dedup replaces its state with the
+    durable read-backs, so it materializes only each batch's new bands,
+    new shingles and emitted pairs — never the cumulative store — and
+    releases every checkpoint it made once the durable copy supersedes
+    it."""
+    from sbm_communitydetection_spark.textops import stream_dedup
+
+    batches = _four_dedup_batches(spark)
+    want = sorted(map(tuple, stream_dedup.stream_minhash_dedup(
+        spark, batches, threshold=0.4).collect()))
+    assert want
+
+    made, released = _record_dedup_checkpoints(monkeypatch)
     got = sorted(map(tuple, stream_dedup.stream_minhash_dedup(
         spark, batches, threshold=0.4, checkpoint_dir=str(tmp_path), run_id="d").collect()))
     assert got == want
     assert len(made) == 3 * len(batches), len(made)
     assert {id(df) for df in made} <= {id(df) for df in released}
+
+
+def test_uncheckpointed_dedup_fold_skips_the_last_store(spark, monkeypatch):
+    """Without ``checkpoint_dir`` the fold materializes the cumulative
+    bands/shingles/sizes store after every batch but the last, which
+    nothing reads: a 4-batch fold makes 6 materialize calls per batch and
+    3 in the last (21, not 24), releases every store it superseded, and
+    still emits the one-shot batch pairs."""
+    from sbm_communitydetection_spark.textops import stream_dedup
+    from sbm_communitydetection_spark.textops.dedup import minhash_lsh_dup_pairs
+
+    batches = _four_dedup_batches(spark)
+    docs = batches[0]
+    for b in batches[1:]:
+        docs = docs.unionByName(b)
+    want = sorted(map(tuple, minhash_lsh_dup_pairs(docs, threshold=0.4).collect()))
+    assert want
+
+    made, released = _record_dedup_checkpoints(monkeypatch)
+    got = sorted(map(tuple, stream_dedup.stream_minhash_dedup(
+        spark, batches, threshold=0.4).collect()))
+    assert got == want
+    assert len(made) == 6 * len(batches) - 3, len(made)
+    # everything but the emitted pairs (returned) is released
+    assert len({id(df) for df in made} - {id(df) for df in released}) == len(batches)
 
 
 def test_fold_snapshots_are_delta_proportional(spark, tmp_path):

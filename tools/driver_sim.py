@@ -37,7 +37,8 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str | None = None):
     import __spark_entry__ as e
     from sbm_communitydetection_spark.session import get_spark
 
-    spark = get_spark(app_name="driver_sim", cores=8, shuffle_partitions=8)
+    # the session default: $SPARK_GRAFT_CPUS cores, else every core
+    spark = get_spark(app_name="driver_sim")
 
     if only is None:
         res = e.entry(spark)
