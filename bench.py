@@ -158,7 +158,6 @@ def main() -> None:
             damping=0.85,
             tolerance=-1.0,
             max_iterations=PR_ITERS,
-            broadcast_rows_threshold=broadcast_thr,
             collect_metrics=pr_metrics,
         ).count()
         if iter_timing and pr_metrics:
@@ -172,7 +171,6 @@ def main() -> None:
             max_iterations=LPA_ITERS,
             variant="plain",
             tolerance=-1.0,
-            broadcast_rows_threshold=broadcast_thr,
         )
         res.state.count()
         if iter_timing and res.metrics:
@@ -287,7 +285,6 @@ def main() -> None:
             damping=0.85,
             tolerance=-1.0,
             max_iterations=PR_ITERS,
-            broadcast_rows_threshold=broadcast_thr,
             transition=read_bucketed_adjacency(spark, pr_table),
             collect_metrics=pr_metrics,
         ).count()
@@ -306,7 +303,6 @@ def main() -> None:
             max_iterations=LPA_ITERS,
             variant="plain",
             tolerance=-1.0,
-            broadcast_rows_threshold=broadcast_thr,
             edges_partitioned_by_dst=True,
         )
         res.state.count()

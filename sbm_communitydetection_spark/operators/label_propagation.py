@@ -30,6 +30,7 @@ from ..plans.iterate import (
     IterationDriver,
     IterationResult,
     cache_partitioned,
+    keyed_partitions,
     materialize,
     unpersist_checkpoint,
 )
@@ -39,7 +40,6 @@ def lpa_superstep(
     edges: DataFrame,
     labels: DataFrame,
     variant: str = "plain",
-    broadcast_labels: bool = False,
 ) -> DataFrame:
     """One synchronous move of all vertices; isolated vertices keep labels.
 
@@ -56,18 +56,12 @@ def lpa_superstep(
     """
     if variant not in ("plain", "keep_own"):
         raise ValueError(f"unknown LPA variant {variant!r}")
-    # checkpointed labels carry no stats → Catalyst won't broadcast them
-    # by itself even when tiny; the caller decides (see label_propagation)
+    # both sides are hash(dst)-co-partitioned (edges pre-partitioned,
+    # labels persisted partition-preserving); the hint picks a plain hash
+    # join over the default sort-merge, which would SORT the full edge
+    # table every superstep
     lbl_side = labels.select(F.col("id").alias("dst"), F.col("label").alias("nbr_label"))
-    if broadcast_labels:
-        lbl_side = F.broadcast(lbl_side)
-    else:
-        # both sides are hash(dst)-co-partitioned (edges pre-partitioned,
-        # labels persisted partition-preserving); the hint picks a plain
-        # hash join over the default sort-merge, which would SORT the full
-        # edge table every superstep
-        lbl_side = lbl_side.hint("SHUFFLE_HASH")
-    nbr = edges.join(lbl_side, "dst")
+    nbr = edges.join(lbl_side.hint("SHUFFLE_HASH"), "dst")
     # ONE exchange by src, then both aggregations run partition-local:
     # hash(src) satisfies groupBy(src, nbr_label)'s clustering, and early
     # supersteps have ~|E| distinct (src, nbr_label) groups (singleton
@@ -126,7 +120,6 @@ def label_propagation(
     variant: str = "plain",
     tolerance: float = 0.0,
     driver: IterationDriver | None = None,
-    broadcast_rows_threshold: int = 250_000,
     edges_partitioned_by_dst: bool = False,
     resume: bool = False,
 ) -> IterationResult:
@@ -182,17 +175,22 @@ def label_propagation(
             metrics=metrics,
         )
     driver = driver or IterationDriver(spark, run_id="lpa", state_key="id")
-    # Pre-partition the edge table by the superstep's join key (dst) so
-    # each iteration shuffles only the label vector, not the edges —
-    # partition-preserving checkpoint, or AQE downgrades this to a full
-    # edge re-exchange per superstep (see plans/iterate.py).
+    # Pre-partition the edge table by the superstep's join key (dst), at
+    # the state's k partitions (keyed_partitions), so each iteration
+    # shuffles only the label vector, not the edges — partition-preserving
+    # checkpoint, or AQE downgrades this to a full edge re-exchange per
+    # superstep (see plans/iterate.py).
     # edges_partitioned_by_dst: the caller's table already satisfies
     # hashpartitioning(dst) — e.g. a bucketBy(N, dst) scan
     # (sources/bucketed.py) — so even the one per-run edge shuffle is
-    # skipped and the big side never moves across restarts.
+    # skipped and the big side never moves across restarts; the state
+    # keeps the session's partition count then.
     owns_edges = not edges_partitioned_by_dst
     if owns_edges:
-        edges = cache_partitioned(edges.repartition("dst"))
+        k = keyed_partitions(spark, edges.count())
+        edges = cache_partitioned(edges.repartition(k, "dst"), k)
+    else:
+        k = int(spark.conf.get("spark.sql.shuffle.partitions"))
     fixed_iters = tolerance < 0
     if initial_labels is not None:
         labels = initial_labels.select("id", "label")
@@ -203,12 +201,10 @@ def label_propagation(
             else edges.select(F.col("src").alias("id")).distinct()
         )
         labels = verts.select("id", F.col("id").alias("label"))
-    # co-partitioned with edges on the superstep join key (id → dst);
-    # the singleton init projects `id` under two aliases (see materialize)
-    labels = materialize(labels.repartition("id"), "id")
-
-    n_vertices = labels.count()
-    use_broadcast = n_vertices <= broadcast_rows_threshold
+    # co-partitioned with edges on the superstep join key (id → dst), and
+    # materialized once, by the driver; the singleton init projects `id`
+    # under two aliases (see materialize)
+    labels = labels.repartition(k, "id")
 
     singleton_init = initial_labels is None
 
@@ -238,7 +234,7 @@ def label_propagation(
                 "id", F.coalesce("best_label", "label").alias("label")
             )
         else:
-            new = lpa_superstep(edges, state, variant=variant, broadcast_labels=use_broadcast)
+            new = lpa_superstep(edges, state, variant=variant)
         if fixed_iters:
             # exact-iteration mode: skip the changed-count action
             return new, float("inf")
@@ -264,14 +260,10 @@ def label_propagation(
         metric_name="labels_changed",
         log_rows=not fixed_iters,
     )
-    # release the pre-partitioned edge checkpoint (static input, dead now;
-    # a caller-provided pre-partitioned table is not ours to release)
-    # and this operator's OWN init-label checkpoint — the driver persisted
-    # its own copy at iteration 0, so the original is an orphan that would
-    # otherwise sit in the block manager for the life of the session
+    # release the pre-partitioned edge cache (static input, dead now; a
+    # caller-provided pre-partitioned table is not ours to release)
     if owns_edges:
         unpersist_checkpoint(edges)
-    unpersist_checkpoint(labels)
     return result
 
 
@@ -281,7 +273,6 @@ def seeded_label_propagation(
     seeds: DataFrame,
     n_iterations: int = 4,
     driver: IterationDriver | None = None,
-    broadcast_rows_threshold: int = 250_000,
 ) -> IterationResult:
     """Semi-supervised seed expansion: `seeds`(id, label) are FROZEN;
     every other vertex synchronously adopts the weighted argmax over its
@@ -293,14 +284,15 @@ def seeded_label_propagation(
     Exactly ``n_iterations`` synchronous rounds (deterministic, oracle-
     mirrored by functions/sql_oracles.seeded_lpa_unrolled_sql).  Plan
     shape matches label_propagation: edges pre-partitioned by dst once,
-    ONE exchange per superstep (repartition("src") feeds both the score
-    aggregate and the argmax partition-local), label vector broadcast
-    below the measured crossover.  The labeled-only filter makes early
-    rounds CHEAPER than plain LPA: the join's build side is the seed
-    frontier, not all |V| labels.
+    at the state's k partitions, ONE exchange per superstep
+    (repartition("src") feeds both the score aggregate and the argmax
+    partition-local).  The labeled-only filter makes early rounds
+    CHEAPER than plain LPA: the join's build side is the seed frontier,
+    not all |V| labels.
     """
     driver = driver or IterationDriver(spark, run_id="seeded_lpa", state_key="id")
-    edges = cache_partitioned(edges.repartition("dst"))
+    k = keyed_partitions(spark, edges.count())
+    edges = cache_partitioned(edges.repartition(k, "dst"), k)
     verts = edges.select(F.col("src").alias("id")).distinct()
     state0 = verts.join(
         seeds.select("id", F.col("label").alias("seed_label")), "id", "left"
@@ -309,16 +301,14 @@ def seeded_label_propagation(
         F.col("seed_label").alias("label"),
         F.col("seed_label").isNotNull().alias("is_seed"),
     )
-    state0 = materialize(state0.repartition("id"), "id")
-    use_broadcast = state0.count() <= broadcast_rows_threshold
+    state0 = state0.repartition(k, "id")
 
     def step(state: DataFrame, i: int):
         lbl_side = state.filter(F.col("label").isNotNull()).select(
             F.col("id").alias("dst"), F.col("label").alias("nbr_label")
         )
-        lbl_side = F.broadcast(lbl_side) if use_broadcast else lbl_side.hint("SHUFFLE_HASH")
         best = (
-            edges.join(lbl_side, "dst")
+            edges.join(lbl_side.hint("SHUFFLE_HASH"), "dst")
             .repartition("src")
             .groupBy("src", "nbr_label")
             .agg(F.sum("weight").alias("score"))
@@ -351,5 +341,4 @@ def seeded_label_propagation(
         log_rows=False,
     )
     unpersist_checkpoint(edges)
-    unpersist_checkpoint(state0)
     return result

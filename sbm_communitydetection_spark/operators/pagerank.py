@@ -3,7 +3,7 @@
 Per iteration (all JVM-side column math, zero Python in the loop body):
 
     contribs = adj(src, dst, frac) ⋈ ranks(src)  →  groupBy(dst).sum(rank·frac)
-    dangling = Σ rank over vertices with no out-edges          (scalar agg)
+    dangling = Σ rank over vertices with no out-edges   (observed on the state)
     new_rank = (1-d)/n + d·(contrib + dangling/n)
     delta    = max |new - old|                                 (convergence)
 
@@ -20,12 +20,13 @@ a pure-numpy oracle (tests/oracles.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.iterate import (
     IterationDriver,
     cache_partitioned,
+    keyed_partitions,
     materialize,
     unpersist_checkpoint,
 )
@@ -39,7 +40,6 @@ def pagerank(
     tolerance: float = 1e-8,
     max_iterations: int = 100,
     driver: IterationDriver | None = None,
-    broadcast_rows_threshold: int = 250_000,
     collect_metrics: list | None = None,
     transition: DataFrame | None = None,
     reset_ids: DataFrame | None = None,
@@ -49,6 +49,7 @@ def pagerank(
 
     edges(src, dst, weight) is treated as DIRECTED here; pass the
     symmetrized table for the undirected semantics of the link graph.
+    The vertex set is every edge endpoint plus ``vertices``, if given.
 
     ``reset_ids``: optional (id) set — PERSONALIZED PageRank: teleport
     and dangling mass land uniformly on this set instead of all
@@ -70,62 +71,56 @@ def pagerank(
     driver = driver or IterationDriver(spark, run_id="pagerank", state_key="id")
     edge_src = edges if edges is not None else transition
 
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else edge_src.select(F.col("src").alias("id"))
-        .unionByName(edge_src.select(F.col("dst").alias("id")))
-        .distinct()
+    # the whole prep in ONE job: the (id, out_deg) aggregate over every
+    # endpoint, observed for n, m and the dangling-vertex count
+    ends = edge_src.select(F.col("src").alias("id"), F.lit(1).alias("out")).unionByName(
+        edge_src.select(F.col("dst").alias("id"), F.lit(0).alias("out"))
     )
-    verts = materialize(verts)
-    n = verts.count()
+    if vertices is not None:
+        ends = ends.unionByName(vertices.select("id", F.lit(0).alias("out")))
+    prep = Observation()
+    verts = materialize(
+        ends.groupBy("id")
+        .agg(F.sum("out").alias("out_deg"))
+        .observe(
+            prep,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum("out_deg"), F.lit(0)).alias("m"),
+            F.count(F.when(F.col("out_deg") == 0, 1)).alias("dangling"),
+        ),
+        "id",
+    )
+    n, m, n_dangling = (prep.get[c] for c in ("n", "m", "dangling"))
 
     if transition is not None:
         # caller-owned layout (bucketed scan or equivalent): use as-is —
-        # no per-run shuffle, no checkpoint to release
+        # no per-run shuffle, no checkpoint to release, and the state
+        # keeps the session's partition count
         adj = transition.select("src", "dst", "frac")
-        out_src = transition.select(F.col("src").alias("id")).distinct()
+        k = int(spark.conf.get("spark.sql.shuffle.partitions"))
         owns_adj = False
     else:
+        k = keyed_partitions(spark, m)
         out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-        # Pre-partition the transition table by the probe key so the
-        # per-iteration join only shuffles the (small) rank vector, never the
-        # edge table, and materialize it as a compressed COLUMNAR cache
+        # Pre-partition the transition table by the probe key, at the
+        # state's k partitions, so every superstep join is exchange-free on
+        # both sides, and materialize it as a compressed COLUMNAR cache
         # (cache_partitioned): the probe-side scan is the superstep's
         # dominant memory traffic, and columnar batches cut it 2-3x vs raw
         # checkpoint rows (measured: 2->8 core scaling efficiency
-        # 0.81 -> 0.93 on the 19.2M-edge bench). Spark 4 AQE reads the
-        # cached plan's hashpartitioning, so the join stays exchange-free
-        # on this side (plan-asserted in test_plan_shapes).
+        # 0.81 -> 0.93 on the 19.2M-edge bench). The cached plan records
+        # the hashpartitioning, so the join stays exchange-free on this
+        # side (plan-asserted in test_plan_shapes). SHUFFLE_HASH, not a
+        # broadcast of out_w: a broadcast is a job of its own, and the
+        # join's hash(src) output makes the repartition free for k > 1.
         adj = cache_partitioned(
-            edges.join(out_w, "src")
+            edges.join(out_w.hint("SHUFFLE_HASH"), "src")
             .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("frac"))
-            .repartition("src")
+            .repartition(k, "src"),
+            k,
         )
-        out_src = out_w.select(F.col("src").alias("id"))
         owns_adj = True
-    dangling_ids = materialize(verts.join(out_src, "id", "left_anti"))
-    # On a symmetrized link graph every vertex has out-edges: skip the
-    # per-iteration dangling-mass action entirely (one scalar agg per
-    # superstep saved; at 1000-executor scale that is a full-cluster barrier).
-    has_dangling = dangling_ids.limit(1).count() > 0
-    fixed_iters = tolerance < 0  # caller wants exactly max_iterations supersteps
-    # The per-iteration state comes from a checkpoint (LogicalRDD, no
-    # stats), so Catalyst will NEVER pick a broadcast join on its own even
-    # when the rank vector is a few MB — and falls back to sort-merge,
-    # re-sorting the full edge table every superstep. Broadcast explicitly
-    # while the vector is small; beyond that, hint SHUFFLE_HASH so the big
-    # side is only hashed, never sorted. Measured crossover: at 1M
-    # vertices the per-iteration broadcast already LOSES to the
-    # exchange-free co-partitioned hash join (43.3s vs 29.5s for 10
-    # iterations at local[32]) — hence the conservative 250k default.
-    # (At 10^9+ vertices the vector stays co-partitioned with adj and
-    # shuffles, never broadcasts.)
-    use_broadcast = n <= broadcast_rows_threshold
-
-    def _rank_side(state: DataFrame) -> DataFrame:
-        side = state.withColumnRenamed("id", "src")
-        return F.broadcast(side) if use_broadcast else side.hint("SHUFFLE_HASH")
+    dangling = (F.col("out_deg") == 0).alias("dangling")
 
     # personalized teleport vector r(v): static, co-partitioned with the
     # state on hash(id), checkpointed once (released at the end)
@@ -137,62 +132,50 @@ def pagerank(
             raise ValueError("reset_ids contains no graph vertex")
         resets = materialize(
             verts.join(members.select("id", F.lit(1.0).alias("m")), "id", "left")
-            .select("id", (F.coalesce(F.col("m"), F.lit(0.0)) / ns).alias("r"))
-            .repartition("id"),
+            .select("id", (F.coalesce(F.col("m"), F.lit(0.0)) / ns).alias("r"), dangling)
+            .repartition(k, "id"),
             "id",
         )
 
-    # init co-partitioned with adj (hash(id) ≡ hash(src) after the rename
-    # in _rank_side): every superstep's big join is then exchange-free on
-    # BOTH sides — only the partially-aggregated contribs move
+    # the state (id, rank, dangling) is co-partitioned with adj (hash(id)
+    # ≡ hash(src) after the rename in step), at k partitions: every
+    # superstep's join is exchange-free on BOTH sides, only the
+    # partially-aggregated contribs move
     if resets is not None:
-        ranks = resets.select("id", F.col("r").alias("rank"))
+        ranks = resets.select("id", F.col("r").alias("rank"), "dangling")
     else:
-        ranks = verts.select("id", F.lit(1.0 / n).alias("rank")).repartition("id")
+        ranks = verts.select("id", F.lit(1.0 / n).alias("rank"), dangling).repartition(k, "id")
     base = (1.0 - damping) / n
+    # Σ rank over the dangling vertices rides each state's persist job;
+    # on a symmetrized link graph there are none and nothing is observed
+    observe = (
+        {"dangling_mass": F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0))}
+        if n_dangling
+        else None
+    )
+    fixed_iters = tolerance < 0  # caller wants exactly max_iterations supersteps
 
     def step(state: DataFrame, i: int):
-        dangling_mass = (
-            state.join(dangling_ids, "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
-            if has_dangling
-            else 0.0
-        )
+        dangling_mass = driver.observed["dangling_mass"] if observe else 0.0
         contribs = (
-            adj.join(_rank_side(state), "src")
+            adj.join(state.select(F.col("id").alias("src"), "rank").hint("SHUFFLE_HASH"), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") * F.col("frac")).alias("contrib"))
             .withColumnRenamed("dst", "id")
         )
+        contrib = F.coalesce(F.col("contrib"), F.lit(0.0))
         # SHUFFLE_HASH: both sides are already hash(id)-partitioned; the
         # hint swaps the default co-partitioned sort-merge (2 sorts of the
         # full rank vector per superstep) for a plain hash join
+        new = state.join(contribs.hint("SHUFFLE_HASH"), "id", "left")
         if resets is not None:
-            rs = F.broadcast(resets) if use_broadcast else resets.hint("SHUFFLE_HASH")
-            new = (
-                state.join(contribs.hint("SHUFFLE_HASH"), "id", "left")
-                .join(rs, "id")
-                .select(
-                    "id",
-                    (
-                        F.lit(1.0 - damping) * F.col("r")
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("contrib"), F.lit(0.0))
-                            + F.lit(dangling_mass) * F.col("r")
-                        )
-                    ).alias("rank"),
-                )
+            new = new.join(resets.select("id", "r").hint("SHUFFLE_HASH"), "id")
+            rank = F.lit(1.0 - damping) * F.col("r") + F.lit(damping) * (
+                contrib + F.lit(dangling_mass) * F.col("r")
             )
         else:
-            new = state.join(contribs.hint("SHUFFLE_HASH"), "id", "left").select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling_mass / n))
-                ).alias("rank"),
-            )
+            rank = F.lit(base) + F.lit(damping) * (contrib + F.lit(dangling_mass / n))
+        new = new.select("id", rank.alias("rank"), "dangling")
         if fixed_iters:
             # no convergence test requested — skip the extra delta action
             return new, float("inf")
@@ -202,7 +185,7 @@ def pagerank(
         # instead of re-running the whole superstep plan
         def delta(persisted: DataFrame) -> float:
             row = (
-                persisted.join(state.withColumnRenamed("rank", "old_rank"), "id")
+                persisted.join(state.select("id", F.col("rank").alias("old_rank")), "id")
                 .agg(F.max(F.abs(F.col("rank") - F.col("old_rank"))))
                 .collect()[0][0]
             )
@@ -219,20 +202,19 @@ def pagerank(
         # mid-iteration from the latest complete snapshot
         metric_name="max_delta",
         log_rows=not fixed_iters,
+        observe=observe,
     )
     if collect_metrics is not None:
         collect_metrics.extend(result.metrics)
-    # the run's static inputs (transition table, vertex/dangling sets) are
-    # dead once the final rank vector is materialized — release their
+    # the run's static inputs (transition table, vertex set, reset vector)
+    # are dead once the final rank vector is materialized — release their
     # blocks so back-to-back operators in one session start with a clean
     # block manager (see unpersist_checkpoint). A caller-provided
     # transition table is NOT ours to release.
-    statics = [verts, dangling_ids] + ([adj] if owns_adj else []) + (
-        [resets] if resets is not None else []
-    )
+    statics = [verts] + ([adj] if owns_adj else []) + ([resets] if resets is not None else [])
     for df in statics:
         unpersist_checkpoint(df)
-    return result.state
+    return result.state.select("id", "rank")
 
 
 def ppr_sweep_cut(

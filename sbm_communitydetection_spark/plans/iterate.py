@@ -14,6 +14,17 @@ size statistics. The one rule for the two shapes of state:
 * no ``key`` (edge sets, pair tables, anything re-shuffled next round):
   materialize with AQE on and claim no partitioning.
 
+With AQE off nothing coalesces a keyed superstep's stages, so every one
+would run ``spark.sql.shuffle.partitions`` tasks however small the graph.
+Keyed state therefore gets its partition count once per run from the
+size of its static input, by AQE's own coalescing rule
+(``keyed_partitions``: k = clamp(ceil(edges × 24 B /
+``spark.sql.adaptive.coalescePartitions.minPartitionSize``), 1,
+``spark.sql.shuffle.partitions``)). The operator repartitions its static
+input and init state to k, and ``IterationDriver`` plans every keyed
+superstep under ``spark.sql.shuffle.partitions = k``: an 8k-edge graph
+runs one-task supersteps, a 19M-edge one keeps the session count.
+
 The DURABLE path has one layout, ``FoldCheckpointer``: each step's named
 state tables go to ``<dir>/<run_id>/batch=<b>/<table>/`` under a
 versioned ``manifest.json``, and resume reads the highest complete batch
@@ -38,12 +49,14 @@ src/dynamic_community_detection.cpp:32-49).
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def probe_resources() -> dict:
@@ -86,13 +99,14 @@ __all__ = [
     "IterationDriver",
     "IterationResult",
     "cache_partitioned",
+    "keyed_partitions",
     "materialize",
     "parquet_partition_lineage",
     "unpersist_checkpoint",
 ]
 
 
-def cache_partitioned(df: DataFrame) -> DataFrame:
+def cache_partitioned(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Materialize a STATIC table (adjacency / transition / reset vector)
     as a compressed columnar cache instead of raw checkpoint blocks.
 
@@ -116,12 +130,54 @@ def cache_partitioned(df: DataFrame) -> DataFrame:
     upstream is a real source, eviction just recomputes), so this is for
     STATIC inputs only — iteration state still goes through materialize.
     Release with unpersist_checkpoint (handles both forms).
+
+    ``partitions``: the state's k (``keyed_partitions``) when ``df`` is
+    the static side of keyed state. The table is then planned as keyed
+    state is, with AQE off and every shuffle at k partitions: one job
+    builds it, where AQE runs each shuffle stage as a job of its own.
     """
     from pyspark import StorageLevel
 
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()  # eager, like the checkpoint path
+    keyed = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(partitions)}
+    with _session_conf(df.sparkSession, {} if partitions is None else keyed):
+        out = df.persist(StorageLevel.MEMORY_AND_DISK)
+        out.count()  # eager, like the checkpoint path
     return out
+
+
+# bytes of one (long, long, long|double) edge row: the static input's size
+EDGE_ROW_BYTES = 24
+
+
+def keyed_partitions(spark: SparkSession, edge_rows: int) -> int:
+    """Partition count k for keyed iteration state over a static input of
+    ``edge_rows`` edges: the count AQE would coalesce the superstep's
+    shuffles to, which ``materialize`` cannot let it do (pathology 1).
+
+    k = clamp(ceil(edge_rows × 24 B / minPartitionSize), 1,
+    spark.sql.shuffle.partitions), with minPartitionSize AQE's own
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` (1 MB by
+    default, the floor its ``parallelismFirst`` mode coalesces to). Read
+    from the session's existing conf, so there is nothing new to tune: an
+    8k-edge graph gets 1, a 19M-edge graph the session count."""
+    floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, math.ceil(edge_rows * EDGE_ROW_BYTES / floor)))
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, settings: dict[str, str]):
+    """Set session ``settings`` for the block, then restore the old values."""
+    old = {k: spark.conf.get(k) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def materialize(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -132,7 +188,10 @@ def materialize(df: DataFrame, key: str | None = None) -> DataFrame:
     ``key``: the column the state is hash-partitioned on (the caller just
     ``repartition``-ed or aggregated by it). The checkpoint then runs with
     AQE off and the result records ``hashpartitioning(key, n)``, so the
-    next superstep's join on ``key`` adds no exchange. Raises ValueError
+    next superstep's join on ``key`` adds no exchange. A plan on one
+    partition counts too: Spark plans a 1-partition hash exchange as
+    ``SinglePartition``, which is recorded as ``hashpartitioning(key, 1)``
+    (the k = 1 of ``keyed_partitions``). Raises ValueError
     when the executed plan is not hash-partitioned on ``key`` — recording
     a partitioning the rows do not have would make a later join silently
     skip a needed exchange. Without ``key`` the checkpoint runs under
@@ -176,15 +235,11 @@ def materialize(df: DataFrame, key: str | None = None) -> DataFrame:
     """
     spark = df.sparkSession
     jvm = spark._jvm
-    aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try:
+    with _session_conf(spark, {} if key is None else {"spark.sql.adaptive.enabled": "false"}):
         if key is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
             n = _hash_partitions_on(df, key)
         # the same QueryExecution, so a plan just checked is the one run
         lp = df.localCheckpoint(eager=True)._jdf.queryExecution().logical()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     partitioning = lp.outputPartitioning()
     if key is not None:
         attr = next(a for a in _seq(lp.output()) if a.name() == key)
@@ -210,7 +265,8 @@ def materialize(df: DataFrame, key: str | None = None) -> DataFrame:
 def _hash_partitions_on(df: DataFrame, key: str) -> int:
     """Partition count of ``df``'s executed plan when it is
     hash-partitioned on exactly the output column ``key`` (directly or
-    as one leaf of a PartitioningCollection); ValueError otherwise."""
+    as one leaf of a PartitioningCollection) or on one partition
+    (``SinglePartition``, every key in one place); ValueError otherwise."""
     plan = df._jdf.queryExecution().executedPlan()
     attrs = [a for a in _seq(plan.output()) if a.name() == key]
     leaves = [plan.outputPartitioning()]
@@ -219,6 +275,8 @@ def _hash_partitions_on(df: DataFrame, key: str) -> int:
         kind = p.getClass().getSimpleName()
         if kind == "PartitioningCollection":
             leaves.extend(_seq(p.partitionings()))
+        elif kind == "SinglePartition$":
+            return 1
         elif kind == "HashPartitioning":
             exprs = _seq(p.expressions())
             if len(exprs) == 1 and exprs[0].semanticEquals(attrs[0]):
@@ -243,13 +301,17 @@ def unpersist_checkpoint(df: DataFrame) -> None:
     JVM but 47s after a 10-iteration PageRank in the same session — the
     superseded rank vectors + transition table keep ~2GB of blocks live
     and ParallelGC full-collections at 32 threads eat the difference.
-    Also releases cache_partitioned tables (storage-level persist).
+    Also releases cache_partitioned tables (storage-level persist), and
+    the checkpoint under a column projection of one (an operator that
+    returns its state without a working column).
     No-op for other non-checkpoint DataFrames (parquet reads etc.).
 
     CAUTION: a localCheckpoint has no lineage to recompute from —
     unpersist only state that nothing will read again.
     """
     lp = df._jdf.queryExecution().logical()
+    while lp.getClass().getSimpleName() == "Project":
+        lp = lp.child()
     if lp.getClass().getName() == "org.apache.spark.sql.execution.LogicalRDD":
         # blocking: deterministic release (async unpersist may lag the
         # next iteration's allocation spike, which is the whole point).
@@ -487,8 +549,13 @@ class IterationDriver:
         ``state_key``: the column every step's state is hash-partitioned
         on (a vertex-keyed rank/label vector), passed to ``materialize``
         so the state stays co-partitioned with the static join inputs and
-        each superstep shuffles only the intrinsic communication. Leave
-        it None for unkeyed state (e.g. CC's pair set)."""
+        each superstep shuffles only the intrinsic communication. The
+        init state's partition count k is read once from its plan, and
+        every superstep is planned under ``spark.sql.shuffle.partitions =
+        k`` (the session value is restored after the run), so its
+        aggregates land in the state's own k partitions. Leave it None
+        for unkeyed state (e.g. CC's pair set), planned at the session
+        count."""
         self.spark = spark
         self.run_id = run_id
         self.ckpt = (
@@ -497,12 +564,21 @@ class IterationDriver:
             else None
         )
         self.state_key = state_key
+        self.observed: dict = {}  # run(observe=...) values for the current state
 
     # -- snapshot plumbing -------------------------------------------------
-    def _persist(self, df: DataFrame, i: int) -> DataFrame:
-        if self.ckpt is None:
-            return materialize(df, self.state_key)
-        return self.ckpt.persist(i, state=df)["state"]
+    def _persist(self, df: DataFrame, i: int, observed: list[Column]) -> DataFrame:
+        """Persist ``df``; the ``observed`` aggregates ride the same job
+        into ``self.observed``."""
+        if observed:
+            obs = Observation()
+            df = df.observe(obs, *observed)
+        out = materialize(df, self.state_key) if self.ckpt is None else (
+            self.ckpt.persist(i, state=df)["state"]
+        )
+        if observed:
+            self.observed = obs.get
+        return out
 
     def _snapshot_fields(self, i: int) -> dict:
         """Where iteration i's state lives, and its per-partition lineage
@@ -543,6 +619,7 @@ class IterationDriver:
         resume: bool = False,
         metric_name: str = "delta",
         log_rows: bool = True,
+        observe: dict[str, Column] | None = None,
     ) -> IterationResult:
         """Iterate ``step(state, i) -> (new_state, convergence_metric)``
         until metric <= tolerance or max_iterations.
@@ -560,59 +637,77 @@ class IterationDriver:
 
         ``log_rows=False`` skips the per-iteration row-count action (the
         count is metrics-only; in fixed-iteration mode it is one whole
-        extra job per superstep — measurable at bench scale)."""
-        start_iter = 0
-        if resume:
-            resumed = self.resume_state()
-            if resumed is not None:
-                state, start_iter = resumed
-        if start_iter == 0:
-            state = self._persist(state, 0)
-            if self.ckpt is not None:  # only the durable log keeps this row
-                self._log_metrics(
-                    {
-                        "run_id": self.run_id,
-                        "iteration": 0,
-                        "phase": "init",
-                        "rows": state.count(),
-                        "partitions": state.rdd.getNumPartitions(),
-                        **self._snapshot_fields(0),
-                    }
-                )
-            start_iter = 1
+        extra job per superstep — measurable at bench scale).
 
-        metrics: list[dict] = []
-        converged = False
-        owned = state  # the state WE persisted (safe to release when superseded)
-        i = start_iter - 1
-        for i in range(start_iter, max_iterations + 1):
-            t0 = time.monotonic()
-            new_state, metric = step(state, i)
-            new_state = self._persist(new_state, i)
-            if callable(metric):
-                metric = float(metric(new_state))
-            rows = new_state.count() if log_rows else -1
-            # the superseded state is never read again (steps and metrics
-            # only ever touch the immediately-previous state, and the
-            # metric just ran) — release its blocks now instead of letting
-            # the whole state history pile up in the block manager
-            unpersist_checkpoint(owned)
-            owned = new_state
-            wall = time.monotonic() - t0
-            row = {
-                "run_id": self.run_id,
-                "iteration": i,
-                metric_name: metric,
-                "rows": rows,
-                "partitions": new_state.rdd.getNumPartitions(),
-                "wall_sec": round(wall, 4),
-                **self._snapshot_fields(i),
-                **probe_resources(),  # Q10: per-iteration RSS/CPU
-            }
-            metrics.append(row)
-            self._log_metrics(row)
-            state = new_state
-            if metric <= tolerance:
-                converged = True
-                break
+        ``observe``: named aggregate columns over the state, computed by
+        the job that persists each state (``DataFrame.observe``), no
+        action of their own. When ``step(state, i)`` runs,
+        ``self.observed`` holds their values for ``state``; a resumed
+        run computes them once for the state it resumed from."""
+        k = None
+        if self.state_key is not None:
+            # planned with AQE off, as materialize plans it: no job
+            with _session_conf(self.spark, {"spark.sql.adaptive.enabled": "false"}):
+                k = _hash_partitions_on(state, self.state_key)
+        observed = [c.alias(name) for name, c in (observe or {}).items()]
+        with _session_conf(
+            self.spark, {} if k is None else {"spark.sql.shuffle.partitions": str(k)}
+        ):
+            start_iter = 0
+            if resume:
+                resumed = self.resume_state()
+                if resumed is not None:
+                    state, start_iter = resumed
+                    if observed:
+                        self.observed = state.agg(*observed).first().asDict()
+            if start_iter == 0:
+                state = self._persist(state, 0, observed)
+                if self.ckpt is not None:  # only the durable log keeps this row
+                    self._log_metrics(
+                        {
+                            "run_id": self.run_id,
+                            "iteration": 0,
+                            "phase": "init",
+                            "rows": state.count(),
+                            "partitions": k or state.rdd.getNumPartitions(),
+                            **self._snapshot_fields(0),
+                        }
+                    )
+                start_iter = 1
+
+            metrics: list[dict] = []
+            converged = False
+            owned = state  # the state WE persisted (safe to release when superseded)
+            i = start_iter - 1
+            for i in range(start_iter, max_iterations + 1):
+                t0 = time.monotonic()
+                new_state, metric = step(state, i)
+                new_state = self._persist(new_state, i, observed)
+                if callable(metric):
+                    metric = float(metric(new_state))
+                rows = new_state.count() if log_rows else -1
+                # the superseded state is never read again (steps and
+                # metrics only ever touch the immediately-previous state,
+                # and the metric just ran) — release its blocks now instead
+                # of letting the whole state history pile up in the block
+                # manager
+                unpersist_checkpoint(owned)
+                owned = new_state
+                wall = time.monotonic() - t0
+                row = {
+                    "run_id": self.run_id,
+                    "iteration": i,
+                    metric_name: metric,
+                    "rows": rows,
+                    "partitions": k or new_state.rdd.getNumPartitions(),
+                    "wall_sec": round(wall, 4),
+                    **self._snapshot_fields(i),
+                    **probe_resources(),  # Q10: per-iteration RSS/CPU
+                }
+                metrics.append(row)
+                self._log_metrics(row)
+                state = new_state
+                if metric <= tolerance:
+                    converged = True
+                    break
         return IterationResult(state=state, iterations=i, converged=converged, metrics=metrics)

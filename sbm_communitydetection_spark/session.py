@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the sbm_communitydetection_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "sbm_communitydetection_spark",
@@ -107,12 +110,21 @@ def get_spark(
     # SPARK_GRAFT_CONF="k=v;k2=v2" — ad-hoc conf overrides without code
     # changes (bench experiments, launch-contract parity with
     # spark-submit --conf). extra_conf (explicit caller) wins.
+    overrides = {}
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     for pair in filter(None, (p.strip() for p in env_conf.split(";"))):
         k, sep, v = pair.partition("=")
-        if k and sep and k not in (extra_conf or {}):
-            builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+        if k and sep:
+            overrides[k] = v
+    overrides.update(extra_conf or {})
+    if not submitted:
+        # Python workers import this package whenever a UDF calls a
+        # package helper; they find it through the driver's working
+        # directory only when that is the repository root. spark-submit
+        # ships it with --py-files instead.
+        key = "spark.executorEnv.PYTHONPATH"
+        overrides[key] = os.pathsep.join(filter(None, (overrides.get(key), _PACKAGE_PARENT)))
+    for k, v in overrides.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -136,7 +136,7 @@ def test_superseded_state_blocks_released(spark):
     edges = symmetrize(raw).localCheckpoint(eager=True)
     sc = spark.sparkContext._jsc.sc()
     base = len(sc.getRDDStorageInfo())
-    pagerank(spark, edges, tolerance=-1.0, max_iterations=6, broadcast_rows_threshold=0).count()
+    pagerank(spark, edges, tolerance=-1.0, max_iterations=6).count()
     label_propagation(spark, edges, max_iterations=4, variant="plain", tolerance=-1.0).state.count()
     after = len(sc.getRDDStorageInfo())
     # 10 supersteps ran; only the two operators' FINAL states may remain
@@ -227,6 +227,32 @@ def test_pagerank_resumes_mid_iteration(spark, tmp_path):
     assert set(resumed) == set(full)
     assert all(abs(resumed[i] - full[i]) < 1e-12 for i in resumed)
     assert d2.latest_complete_iteration() == 6
+
+
+def test_pagerank_with_dangling_vertices_resumes_mid_iteration(spark, tmp_path):
+    """The dangling mass rides each state's persist job as an observed
+    metric; a resumed run has no such job for the state it resumes from
+    and computes the mass once with an aggregate. Both runs match the
+    uninterrupted, non-durable one."""
+    from sbm_communitydetection_spark.operators.pagerank import pagerank
+
+    edges = spark.createDataFrame(
+        [(0, 1, 1), (1, 2, 2), (2, 0, 1), (2, 3, 1), (3, 4, 1), (0, 5, 3)],
+        "src long, dst long, weight long",
+    )  # 4 and 5 have no out-edges
+    full = {r.id: r.rank for r in pagerank(spark, edges, tolerance=-1.0, max_iterations=5).collect()}
+    assert abs(sum(full.values()) - 1.0) < 1e-12
+    for resume_after in (0, 2):
+        ckpt = str(tmp_path / f"after{resume_after}")
+        d1 = IterationDriver(spark, run_id="prd", checkpoint_dir=ckpt)
+        pagerank(spark, edges, tolerance=-1.0, max_iterations=resume_after, driver=d1)
+        assert d1.latest_complete_iteration() == resume_after
+        d2 = IterationDriver(spark, run_id="prd", checkpoint_dir=ckpt)
+        resumed = pagerank(
+            spark, edges, tolerance=-1.0, max_iterations=5, driver=d2, resume=True
+        ).collect()
+        assert {r.id for r in resumed} == set(full)
+        assert all(abs(r.rank - full[r.id]) < 1e-12 for r in resumed), resume_after
 
 
 def test_lpa_resumes_mid_iteration(spark, tmp_path):
@@ -529,6 +555,132 @@ def test_materialize_accepts_the_aliased_lpa_init(spark):
         assert sorted(r.label for r in state.collect()) == list(range(100))
     finally:
         unpersist_checkpoint(state)
+
+
+def test_materialize_accepts_a_single_partition_state(spark):
+    """Spark plans a 1-partition hash exchange as SinglePartition: a
+    session (or superstep) at one shuffle partition must still
+    materialize keyed state, recorded as hashpartitioning(key, 1)."""
+    from sbm_communitydetection_spark.plans.iterate import materialize, unpersist_checkpoint
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        states = [
+            materialize(spark.range(100).repartition("id").select("id", (F.col("id") * 2).alias("v")), "id"),
+            materialize(spark.range(100).repartition(1, "id"), "id"),
+        ]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    try:
+        for state in states:
+            recorded = state._jdf.queryExecution().logical().outputPartitioning()
+            assert recorded.toString().startswith("hashpartitioning(id#"), recorded.toString()
+            assert recorded.numPartitions() == 1
+        assert sorted(r.v for r in states[0].collect()) == list(range(0, 200, 2))
+    finally:
+        for state in states:
+            unpersist_checkpoint(state)
+
+
+def test_keyed_partitions_follow_aqe_min_partition_size(spark):
+    """k = clamp(ceil(edges × 24 B / minPartitionSize), 1, shuffle
+    partitions), read from AQE's own conf."""
+    from sbm_communitydetection_spark.plans.iterate import keyed_partitions
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert keyed_partitions(spark, 0) == 1
+    assert keyed_partitions(spark, 8_000) == 1  # 192 KB under the 1 MB default
+    assert keyed_partitions(spark, 19_200_000) == cap
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64k")
+    try:
+        assert keyed_partitions(spark, 8_000) == 3  # ceil(192000 / 65536)
+        assert 1 < keyed_partitions(spark, 20_000) <= cap
+        assert keyed_partitions(spark, 10**9) == cap
+    finally:
+        spark.conf.set(key, old)
+
+
+def _superstep_jobs(spark, run, iterations: int, fewer: int) -> list:
+    """Job ids of the supersteps of ``run(iterations)``, after checking
+    that ``iterations - fewer`` more supersteps cost exactly that many
+    more jobs (one job per superstep; the supersteps are the last jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    groups = []
+    for n in (fewer, iterations):
+        groups.append(f"jobs_{uuid.uuid4().hex}")
+        sc.setJobGroup(groups[-1], "jobs per superstep")
+        try:
+            run(n)
+        finally:
+            sc._jsc.clearJobGroup()
+    short, full = (sorted(sc.statusTracker().getJobIdsForGroup(g)) for g in groups)
+    assert len(full) - len(short) == iterations - fewer, (len(short), len(full))
+    return full[-iterations:]
+
+
+def test_small_graph_supersteps_run_one_single_task_job_each(spark):
+    """On a graph far under AQE's 1 MB partition floor the keyed state
+    gets k = 1: a fixed-iteration PageRank or LPA superstep is ONE job
+    (no broadcast, no metric action) whose stages each run one task,
+    instead of spark.sql.shuffle.partitions tasks per stage."""
+    from sbm_communitydetection_spark.operators.graph_ops import symmetrize
+    from sbm_communitydetection_spark.operators.label_propagation import label_propagation
+    from sbm_communitydetection_spark.operators.pagerank import pagerank
+
+    raw = spark.range(3000).select(
+        (F.xxhash64("id") % 200).alias("src"),
+        (F.xxhash64("id", F.lit(3)) % 200).alias("dst"),
+        F.lit(1).cast("long").alias("weight"),
+    )
+    directed = raw.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
+    edges = symmetrize(directed).localCheckpoint(eager=True)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    runs = {
+        "pagerank": (
+            lambda n: pagerank(spark, directed, tolerance=-1.0, max_iterations=n), 10, 4
+        ),
+        "lpa": (
+            lambda n: label_propagation(spark, edges, tolerance=-1.0, max_iterations=n), 5, 2
+        ),
+    }
+    st = spark.sparkContext.statusTracker()
+    for name, (run, iterations, fewer) in runs.items():
+        for job in _superstep_jobs(spark, run, iterations, fewer):
+            stages = [st.getStageInfo(s) for s in st.getJobInfo(job).stageIds]
+            ran = [s for s in stages if s is not None and s.numCompletedTasks > 0]
+            assert ran, (name, job)
+            assert all(s.numTasks == 1 for s in ran), (name, [s.numTasks for s in ran])
+    # the session count is restored after the runs
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+
+
+def test_label_propagation_materializes_its_init_once(spark, monkeypatch):
+    """The init labels are materialized by the driver only: one init
+    materialize plus one per superstep, and no count of them."""
+    import sbm_communitydetection_spark.operators.label_propagation as lpa_mod
+    import sbm_communitydetection_spark.plans.iterate as iterate_mod
+
+    calls = []
+    real = iterate_mod.materialize
+
+    def recording(df, key=None):
+        calls.append(key)
+        return real(df, key)
+
+    monkeypatch.setattr(iterate_mod, "materialize", recording)
+    monkeypatch.setattr(lpa_mod, "materialize", recording)
+    edges = spark.createDataFrame(
+        [(0, 1, 1), (1, 0, 1), (1, 2, 1), (2, 1, 1), (3, 4, 1), (4, 3, 1)],
+        "src long, dst long, weight long",
+    )
+    res = lpa_mod.label_propagation(spark, edges, tolerance=-1.0, max_iterations=3)
+    assert res.iterations == 3
+    assert calls == ["id"] * 4, calls
 
 
 def test_only_materialize_calls_local_checkpoint():
