@@ -795,7 +795,9 @@ def hits_unrolled_sql(n_iterations: int, round_to: int = 8) -> str:
     operators/hits.py exactly: Jacobi simultaneous update, L1 norms of
     iteration i-1 folded into iteration i's multiply, final L1-normalized
     select. Expression association order matches the Spark side
-    (((weight * score) / norm), left-assoc) for float-exact parity."""
+    (((weight * score) / norm), left-assoc) for float-exact parity.
+    ``s{i}`` and ``norm{i}`` are MATERIALIZED: each ``s{i}`` reads
+    ``s{i-1}`` three times, and an inlined CTE chain grows as 3^i."""
     parts = [
         """verts AS (
     SELECT src AS id FROM edges UNION SELECT dst FROM edges
@@ -805,10 +807,10 @@ def hits_unrolled_sql(n_iterations: int, round_to: int = 8) -> str:
     ]
     for i in range(1, n_iterations + 1):
         parts.append(
-            f"norm{i} AS (SELECT SUM(hub) AS sh, SUM(auth) AS sa FROM s{i - 1})"
+            f"norm{i} AS MATERIALIZED (SELECT SUM(hub) AS sh, SUM(auth) AS sa FROM s{i - 1})"
         )
         parts.append(
-            f"""s{i} AS (
+            f"""s{i} AS MATERIALIZED (
     SELECT v.id,
            COALESCE(h.c, 0.0) AS hub,
            COALESCE(a.c, 0.0) AS auth

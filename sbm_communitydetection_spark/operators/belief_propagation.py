@@ -192,9 +192,7 @@ def belief_propagation(
         raise ValueError(f"unknown BP impl {impl!r}")
     # the agg impl's message state stays hash(dst)-partitioned; the
     # kernel's grouped-map output is not partitioned on any output column
-    driver = driver or IterationDriver(
-        spark, run_id="bp", state_key="dst" if impl == "agg" else None
-    )
+    driver = driver or IterationDriver(spark, run_id="bp")
     fixed_iters = tolerance < 0
     diff = p_in - p_out
 
@@ -255,7 +253,6 @@ def belief_propagation(
         tolerance=tolerance,
         resume=resume,  # north_rule: a durable-driver run continues
         metric_name="max_msg_delta",
-        log_rows=not fixed_iters,
     )
     final = ew.join(result.state, ["src", "dst"]).join(pr, "dst")
     out = materialize(
@@ -345,7 +342,7 @@ def _belief_propagation_agg(
         tolerance=tolerance,
         resume=resume,  # north_rule: a durable-driver run continues
         metric_name="max_msg_delta",
-        log_rows=not fixed_iters,
+        state_key="dst",
     )
     tot = _tot_agg(_lt(result.state), k)
     b = _softmax_col(F.zip_with("prior", "tot", lambda p, t: F.log(p) + t))

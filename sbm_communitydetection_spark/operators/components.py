@@ -157,9 +157,6 @@ def connected_components(
 
         return new, changed
 
-    # log_rows=False: the checksum metric already scans the persisted round
-    # output (and carries the row count inside it) — the separate
-    # metrics-only count action would be a third whole job per round
     result = driver.run(
         pairs,
         step,
@@ -170,7 +167,6 @@ def connected_components(
         # checksum memo resets, so the first resumed round always runs —
         # one extra fixpoint confirmation, never a wrong early stop)
         metric_name="edge_set_changed",
-        log_rows=False,
     )
     stars = result.state  # (member, center) pairs; centers are component minima
 
@@ -280,7 +276,6 @@ def _min_forward_labels(
         max_iterations=max_iterations,
         tolerance=0.0,
         metric_name="label_set_changed",
-        log_rows=False,
     )
     if not result.converged:
         # an unconverged coloring is not an approximation — downstream it

@@ -48,7 +48,7 @@ def hits(
     ``max_iterations`` supersteps with no convergence actions (the
     oracle-gated mode); otherwise stop when max |Δauth| ≤ tolerance.
     """
-    driver = driver or IterationDriver(spark, run_id="hits", state_key="id")
+    driver = driver or IterationDriver(spark, run_id="hits")
 
     verts = (
         vertices.select("id")
@@ -139,7 +139,7 @@ def hits(
         max_iterations=max_iterations,
         tolerance=tolerance,
         metric_name="max_auth_delta",
-        log_rows=not fixed_iters,
+        state_key="id",
     )
     if collect_metrics is not None:
         collect_metrics.extend(result.metrics)

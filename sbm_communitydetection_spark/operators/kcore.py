@@ -43,7 +43,7 @@ def k_core(
     edges: directed or symmetrized; treated as an undirected simple
     graph. rounds=None peels to the fixpoint; rounds=R runs exactly R
     synchronous peel rounds (gate parity mode)."""
-    driver = driver or IterationDriver(spark, run_id=f"kcore{k}", state_key="id")
+    driver = driver or IterationDriver(spark, run_id=f"kcore{k}")
     sym = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     pairs = cache_partitioned(
         sym.unionByName(sym.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -84,7 +84,7 @@ def k_core(
         max_iterations=rounds if rounds is not None else max_iterations,
         tolerance=-1.0 if rounds is not None else 0.0,
         metric_name="peeled",
-        log_rows=rounds is None,
+        state_key="id",
     )
     unpersist_checkpoint(pairs)
     return result.state

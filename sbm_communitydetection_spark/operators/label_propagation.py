@@ -174,7 +174,7 @@ def label_propagation(
             converged=True,
             metrics=metrics,
         )
-    driver = driver or IterationDriver(spark, run_id="lpa", state_key="id")
+    driver = driver or IterationDriver(spark, run_id="lpa")
     # Pre-partition the edge table by the superstep's join key (dst), at
     # the state's k partitions (keyed_partitions), so each iteration
     # shuffles only the label vector, not the edges — partition-preserving
@@ -258,7 +258,7 @@ def label_propagation(
         resume=resume,  # north_rule: a durable-driver run continues
         # mid-iteration from the latest complete snapshot
         metric_name="labels_changed",
-        log_rows=not fixed_iters,
+        state_key="id",
     )
     # release the pre-partitioned edge cache (static input, dead now; a
     # caller-provided pre-partitioned table is not ours to release)
@@ -290,7 +290,7 @@ def seeded_label_propagation(
     CHEAPER than plain LPA: the join's build side is the seed frontier,
     not all |V| labels.
     """
-    driver = driver or IterationDriver(spark, run_id="seeded_lpa", state_key="id")
+    driver = driver or IterationDriver(spark, run_id="seeded_lpa")
     k = keyed_partitions(spark, edges.count())
     edges = cache_partitioned(edges.repartition(k, "dst"), k)
     verts = edges.select(F.col("src").alias("id")).distinct()
@@ -338,7 +338,7 @@ def seeded_label_propagation(
         max_iterations=n_iterations,
         tolerance=-1.0,
         metric_name="seed_rounds",
-        log_rows=False,
+        state_key="id",
     )
     unpersist_checkpoint(edges)
     return result

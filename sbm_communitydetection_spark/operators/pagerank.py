@@ -68,7 +68,7 @@ def pagerank(
     """
     if edges is None and transition is None:
         raise ValueError("pagerank needs edges or a prebuilt transition table")
-    driver = driver or IterationDriver(spark, run_id="pagerank", state_key="id")
+    driver = driver or IterationDriver(spark, run_id="pagerank")
     edge_src = edges if edges is not None else transition
 
     # the whole prep in ONE job: the (id, out_deg) aggregate over every
@@ -201,8 +201,8 @@ def pagerank(
         resume=resume,  # north_rule: a durable-driver run continues
         # mid-iteration from the latest complete snapshot
         metric_name="max_delta",
-        log_rows=not fixed_iters,
         observe=observe,
+        state_key="id",
     )
     if collect_metrics is not None:
         collect_metrics.extend(result.metrics)

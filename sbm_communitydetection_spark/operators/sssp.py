@@ -98,7 +98,6 @@ def shortest_paths(
         max_iterations=n_iter,
         tolerance=-1.0 if fixed else 0.0,
         metric_name="improved",
-        log_rows=False,
     )
     if collect_metrics is not None:
         collect_metrics.extend(result.metrics)
@@ -151,7 +150,6 @@ def landmark_distances(
         max_iterations=rounds,
         tolerance=-1.0,
         metric_name="relaxed",
-        log_rows=False,
     )
     unpersist_checkpoint(adj)
     return result.state

@@ -25,15 +25,22 @@ input and init state to k, and ``IterationDriver`` plans every keyed
 superstep under ``spark.sql.shuffle.partitions = k``: an 8k-edge graph
 runs one-task supersteps, a 19M-edge one keeps the session count.
 
-The DURABLE path has one layout, ``FoldCheckpointer``: each step's named
-state tables go to ``<dir>/<run_id>/batch=<b>/<table>/`` under a
-versioned ``manifest.json``, and resume reads the highest complete batch
-(north_rule "resumable from checkpoint"). The streaming folds persist
-their tables per batch; ``IterationDriver(checkpoint_dir=...)`` treats
-superstep i as batch i with one full-snapshot table ``state``. The layout
-is the Parquet stand-in for the Iceberg snapshot-per-step table of
-SURVEY.md §7; an Iceberg backend would replace ``FoldCheckpointer._write`` /
-``_read_table`` (docs/SCALE.md).
+Every loop persists its state through ONE store, ``FoldCheckpointer``:
+the six stream folds per batch and ``IterationDriver`` per superstep
+(batch i, one table ``state``). ``checkpoint_dir`` picks its mode, and no
+loop branches on it:
+
+* in memory (``checkpoint_dir=None``): each table is ``materialize``-d
+  (a table that already is a checkpoint is kept as it is), and an
+  append-only table's value is the union of its batch deltas;
+* durable: each step's tables go to ``<dir>/<run_id>/batch=<b>/<table>/``
+  under a versioned ``manifest.json``, read back, and resume reads the
+  highest complete batch (north_rule "resumable from checkpoint"). The
+  layout is the Parquet stand-in for the Iceberg snapshot-per-step table
+  of SURVEY.md §7; an Iceberg backend would replace
+  ``FoldCheckpointer._write`` / ``_read_table`` (docs/SCALE.md).
+
+In both modes a persist releases the state its previous batch held.
 
 Alongside state, the durable driver appends per-iteration METRICS +
 LINEAGE rows (run_id, iteration, wall seconds, row count, convergence
@@ -48,6 +55,7 @@ src/dynamic_community_detection.cpp:32-49).
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -57,6 +65,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def probe_resources() -> dict:
@@ -364,37 +373,62 @@ def _batch_index(name: str) -> int | None:
         return None
 
 
+def _checkpoint_id(df: DataFrame | None) -> int | None:
+    """Id of the RDD behind ``df`` when its plan is a single LogicalRDD (a
+    checkpoint, or a frame of driver-local rows), else None."""
+    if df is None:
+        return None
+    lp = df._jdf.queryExecution().logical()
+    if lp.getClass().getName() != "org.apache.spark.sql.execution.LogicalRDD":
+        return None
+    return lp.rdd().id()
+
+
 class FoldCheckpointer:
-    """Durable per-batch snapshots of NAMED state tables under
-    ``<checkpoint_dir>/<run_id>/batch=<b>/<table>`` — the engine's one
-    durable layout, shared by IterationDriver (superstep i = batch i,
-    one table ``state``) and every checkpointed fold (community
-    detection / PR / CC / triangles / dedup / novelty, VERDICT r3 #9).
-    A batch is complete when EVERY table carries a _SUCCESS marker;
-    resume loads the highest complete batch.  The layout is the Parquet
-    stand-in for an Iceberg snapshot-per-batch table; ``_write`` and
-    ``_read_table`` are where an Iceberg backend would go.
+    """The store every loop persists its state through: per batch, a set
+    of NAMED state tables — IterationDriver's superstep i is batch i with
+    one table ``state``; each stream fold (community detection / PR / CC /
+    triangles / BP / dedup / novelty) persists its own tables per batch.
+
+    Two modes, picked by ``checkpoint_dir``; callers never branch on it:
+
+    * in memory (``checkpoint_dir=None``): ``persist`` materializes each
+      table (``materialize``; a table that already is a checkpoint, a
+      plan of a single LogicalRDD, is kept as it is) and ``resume_state``
+      returns None;
+    * durable: each table goes to ``<checkpoint_dir>/<run_id>/batch=<b>/
+      <table>`` and is read back.  A batch is complete when EVERY table
+      carries a _SUCCESS marker; resume loads the highest complete batch.
+      The layout is the Parquet stand-in for an Iceberg snapshot-per-batch
+      table; ``_write`` and ``_read_table`` are where an Iceberg backend
+      would go.
+
+    The store owns the frames it is handed: ``persist`` releases the
+    state its previous batch held once this batch's is made (in the
+    durable mode a handed checkpoint as soon as its copy is written), and
+    ``release`` frees what a fold does not return.  It never releases a
+    frame the fold started from (``start``'s ``initial``).
 
     Two persistence modes per table (VERDICT r4 #2):
 
-    * FULL snapshot (default): the table is rewritten per batch — right
+    * FULL snapshot (default): the table is replaced per batch — right
       for state that changes in place (PageRank ranks, CC labels).
     * ``delta_tables``: the caller passes only the batch's APPENDED
-      rows; the durable value is the union of the batch dirs ≤ b, read
-      back by a multi-path parquet scan.  Right for append-only stores
-      and cumulative emission sets (emitted dup pairs, the novelty
-      owner store), where a per-batch full rewrite costs
-      O(n_batches × cumulative size) I/O against the O(total size) an
-      Iceberg snapshot-APPEND (which this layout stands in for) pays.
-      Delta reconstruction resumes from the highest batch b with an
-      UNBROKEN complete prefix below it — an interior hole would
-      silently drop rows, while trailing incomplete batches are simply
-      replayed.
+      rows; the value is the union of the batch deltas ≤ b (in memory
+      the materialized deltas, durably the batch dirs read back by one
+      multi-path parquet scan).  Right for append-only stores and
+      cumulative emission sets (emitted dup pairs, the novelty owner
+      store), where a per-batch full rewrite costs O(n_batches ×
+      cumulative size) against the O(total size) an Iceberg
+      snapshot-APPEND (which this layout stands in for) pays.  Delta
+      reconstruction resumes from the highest batch b with an UNBROKEN
+      complete prefix below it — an interior hole would silently drop
+      rows, while trailing incomplete batches are simply replayed.
 
     ``manifest`` (ADVICE r4): a small JSON-serializable dict of run
     parameters (n_batches, boundaries, thresholds, an input fingerprint
     such as the stream's ``(lo, hi, n)`` edge_seq bounds).  The first
-    persist writes ``<run>/manifest.json`` — always, stamped with
+    durable persist writes ``<run>/manifest.json`` — always, stamped with
     ``"layout": FOLD_LAYOUT`` — and any later persist or resume whose
     manifest differs raises ValueError instead of silently folding a
     DIFFERENT stream onto the old run's state (e.g. resuming with
@@ -407,23 +441,28 @@ class FoldCheckpointer:
     def __init__(
         self,
         spark: SparkSession,
-        checkpoint_dir: str,
+        checkpoint_dir: str | None,
         run_id: str,
         tables: tuple[str, ...],
         delta_tables: tuple[str, ...] = (),
         manifest: dict | None = None,
     ):
         self.spark = spark
-        self.dir = os.path.join(checkpoint_dir, run_id)
+        self.dir = os.path.join(checkpoint_dir, run_id) if checkpoint_dir else None
         self.tables = tables
         self.delta_tables = tuple(delta_tables)
         assert set(self.delta_tables) <= set(tables), (delta_tables, tables)
         self.manifest = {**(manifest or {}), "layout": FOLD_LAYOUT}
+        self._held: dict[str, DataFrame] = {}  # the last persist's handles
+        self._deltas: dict[str, list[DataFrame]] = {t: [] for t in self.delta_tables}
+        self._outside: set[int] = set()  # checkpoints the fold started from
 
     def _path(self, b: int, table: str) -> str:
         return os.path.join(self.dir, f"batch={b}", table)
 
     def _check_or_write_manifest(self, write: bool) -> None:
+        if self.dir is None:
+            return
         # JSON round-trip so tuples/ints compare equal to what disk holds
         mine = json.loads(json.dumps(self.manifest, sort_keys=True))
         path = os.path.join(self.dir, "manifest.json")
@@ -451,7 +490,7 @@ class FoldCheckpointer:
             os.replace(tmp, path)
 
     def _existing_batches(self) -> list[int]:
-        if not os.path.isdir(self.dir):
+        if self.dir is None or not os.path.isdir(self.dir):
             return []
         return sorted(
             {i for name in os.listdir(self.dir) if (i := _batch_index(name)) is not None}
@@ -482,22 +521,75 @@ class FoldCheckpointer:
         if not any(n.endswith(".parquet") for n in os.listdir(path)):
             df.repartition(1).write.mode("overwrite").parquet(path)
 
+    def _release(self, frames, keep=()) -> None:
+        """Release each checkpoint in ``frames``, but none of ``keep`` and
+        none the fold started from."""
+        spare = {None, *self._outside, *map(_checkpoint_id, keep)}
+        for df in frames:
+            if _checkpoint_id(df) not in spare:
+                unpersist_checkpoint(df)
+
+    def start(self, resume: bool, first: int = 0, **initial) -> tuple[dict, int]:
+        """({table: df}, first batch to run): the latest complete durable
+        batch when ``resume`` is set and there is one, else ``initial``
+        and ``first``.  The initial frames come from outside the fold;
+        the store never releases them, nor what an earlier fold it ran
+        returned."""
+        self._held, self._deltas = {}, {t: [] for t in self.delta_tables}
+        self._outside |= {_checkpoint_id(df) for df in initial.values()} - {None}
+        return (resume and self.resume_state()) or (initial, first)
+
     def persist(self, b: int, **dfs: DataFrame) -> dict[str, DataFrame]:
-        """Write batch ``b``'s tables (full state, or the batch DELTA for
-        ``delta_tables``) and return durable read-back handles — for a
-        delta table the handle is the reconstructed CUMULATIVE union."""
+        """Persist batch ``b``'s tables (the full state, or the batch
+        DELTA of a ``delta_tables`` table) and return their handles — for
+        a delta table the CUMULATIVE union of its deltas.  Then release
+        what the previous batch held, and in the durable mode the handed
+        frames the written copies supersede."""
         assert set(dfs) == set(self.tables), (sorted(dfs), self.tables)
-        self._check_or_write_manifest(write=True)
-        out = {}
-        for t, df in dfs.items():
-            self._write(df, self._path(b, t))
-            out[t] = self._read_table(t, b)
+        if self.dir is None:
+            out = {}
+            for t, df in dfs.items():
+                out[t] = df if _checkpoint_id(df) is not None else materialize(df)
+                if t in self.delta_tables:
+                    self._deltas[t].append(out[t])
+                    out[t] = functools.reduce(DataFrame.unionByName, self._deltas[t])
+            # a delta table's parts stay: they are its value
+            superseded = [df for t, df in self._held.items() if t not in self.delta_tables]
+        else:
+            self._check_or_write_manifest(write=True)
+            for t, df in dfs.items():
+                self._write(df, self._path(b, t))
+            out = {t: self._read_table(t, b) for t in dfs}
+            superseded = dfs.values()
+        self._release(superseded, keep=out.values())
+        self._held = out
         return out
 
-    def lineage(self, b: int) -> dict[str, list[dict]]:
+    def release(self, *tables: str) -> None:
+        """Release what the store holds of ``tables`` (all when none are
+        named): the last state of a fold that does not return it."""
+        names = tables or self.tables
+        self._release([self._held.get(t) for t in names] + [
+            df for t in names for df in self._deltas.get(t, ())
+        ])
+
+    def location(self, b: int, table: str) -> str:
+        """Where batch ``b``'s ``table`` lives."""
+        return "localCheckpoint" if self.dir is None else self._path(b, table)
+
+    def lineage(self, b: int) -> dict[str, list[dict] | None]:
         """Per-partition lineage (data file, rows, bytes) of batch ``b``'s
-        table directories."""
-        return {t: parquet_partition_lineage(self._path(b, t)) for t in self.tables}
+        table directories; None per table in memory."""
+        return {
+            t: None if self.dir is None else parquet_partition_lineage(self._path(b, t))
+            for t in self.tables
+        }
+
+    def log(self, row: dict) -> None:
+        """Append ``row`` to the durable run's ``_metrics.jsonl``."""
+        if self.dir is not None:
+            with open(os.path.join(self.dir, "_metrics.jsonl"), "a") as f:
+                f.write(json.dumps(row) + "\n")
 
     def latest_complete_batch(self) -> int | None:
         existing = self._existing_batches()
@@ -517,7 +609,8 @@ class FoldCheckpointer:
         return best
 
     def resume_state(self) -> tuple[dict[str, DataFrame], int] | None:
-        """({table: df}, next_batch) from the latest durable snapshot."""
+        """({table: df}, next_batch) from the latest durable snapshot;
+        None when there is none (always in memory)."""
         self._check_or_write_manifest(write=False)
         b = self.latest_complete_batch()
         if b is None:
@@ -533,81 +626,47 @@ class IterationResult:
     metrics: list[dict] = field(default_factory=list)
 
 
+# the observed row count's name among run(observe=...)'s aggregates
+_ROWS = "__rows"
+
+
 class IterationDriver:
     def __init__(
         self,
         spark: SparkSession,
         run_id: str = "run",
         checkpoint_dir: str | None = None,
-        state_key: str | None = None,
     ):
-        """``checkpoint_dir`` selects the durable, resumable mode: every
-        superstep's state is persisted as a FoldCheckpointer batch (one
-        full-snapshot table ``state``) and read back. Without it each
-        superstep's state is ``materialize``-d.
-
-        ``state_key``: the column every step's state is hash-partitioned
-        on (a vertex-keyed rank/label vector), passed to ``materialize``
-        so the state stays co-partitioned with the static join inputs and
-        each superstep shuffles only the intrinsic communication. The
-        init state's partition count k is read once from its plan, and
-        every superstep is planned under ``spark.sql.shuffle.partitions =
-        k`` (the session value is restored after the run), so its
-        aggregates land in the state's own k partitions. Leave it None
-        for unkeyed state (e.g. CC's pair set), planned at the session
-        count."""
+        """``checkpoint_dir`` selects the durable, resumable store: every
+        superstep's state is a FoldCheckpointer batch (one full-snapshot
+        table ``state``), written and read back. Without it the state
+        stays in memory."""
         self.spark = spark
         self.run_id = run_id
-        self.ckpt = (
-            FoldCheckpointer(spark, checkpoint_dir, run_id, ("state",))
-            if checkpoint_dir
-            else None
-        )
-        self.state_key = state_key
+        self.store = FoldCheckpointer(spark, checkpoint_dir, run_id, ("state",))
         self.observed: dict = {}  # run(observe=...) values for the current state
 
-    # -- snapshot plumbing -------------------------------------------------
-    def _persist(self, df: DataFrame, i: int, observed: list[Column]) -> DataFrame:
-        """Persist ``df``; the ``observed`` aggregates ride the same job
-        into ``self.observed``."""
-        if observed:
-            obs = Observation()
-            df = df.observe(obs, *observed)
-        out = materialize(df, self.state_key) if self.ckpt is None else (
-            self.ckpt.persist(i, state=df)["state"]
-        )
-        if observed:
-            self.observed = obs.get
-        return out
+    def latest_complete_iteration(self) -> int | None:
+        """Highest durably-committed i — the resume point."""
+        return self.store.latest_complete_batch()
+
+    def _materialize(self, df: DataFrame, key: str | None, measures: list[Column]) -> tuple:
+        """(``df`` materialized on ``key``, its row count); the other
+        ``measures`` ride the same job into ``self.observed``."""
+        obs = Observation()
+        out = materialize(df.observe(obs, *measures), key)
+        self.observed = obs.get
+        return out, self.observed.pop(_ROWS)
 
     def _snapshot_fields(self, i: int) -> dict:
         """Where iteration i's state lives, and its per-partition lineage
         (one entry per data file with rows and bytes) — the per-partition
         half of the north_rule's "per-partition lineage + convergence
         metrics"."""
-        if self.ckpt is None:
-            return {"snapshot": "localCheckpoint", "partition_lineage": None}
         return {
-            "snapshot": self.ckpt._path(i, "state"),
-            "partition_lineage": self.ckpt.lineage(i)["state"],
+            "snapshot": self.store.location(i, "state"),
+            "partition_lineage": self.store.lineage(i)["state"],
         }
-
-    def _log_metrics(self, row: dict) -> None:
-        if self.ckpt is None:
-            return
-        with open(os.path.join(self.ckpt.dir, "_metrics.jsonl"), "a") as f:
-            f.write(json.dumps(row) + "\n")
-
-    def latest_complete_iteration(self) -> int | None:
-        """Highest durably-committed i — the resume point."""
-        return self.ckpt.latest_complete_batch() if self.ckpt else None
-
-    def resume_state(self) -> tuple[DataFrame, int] | None:
-        """(state, next_iteration) from the latest durable snapshot."""
-        resumed = self.ckpt.resume_state() if self.ckpt else None
-        if resumed is None:
-            return None
-        return resumed[0]["state"], resumed[1]
 
     # -- the loop ----------------------------------------------------------
     def run(
@@ -618,8 +677,8 @@ class IterationDriver:
         tolerance: float = 0.0,
         resume: bool = False,
         metric_name: str = "delta",
-        log_rows: bool = True,
         observe: dict[str, Column] | None = None,
+        state_key: str | None = None,
     ) -> IterationResult:
         """Iterate ``step(state, i) -> (new_state, convergence_metric)``
         until metric <= tolerance or max_iterations.
@@ -628,85 +687,85 @@ class IterationDriver:
         changed labels, max rank delta, ...); it is recorded per iteration.
 
         ``convergence_metric`` may be a float OR a callable
-        ``(persisted_new_state) -> float`` — the callable form is evaluated
-        AFTER the state is persisted, so the metric action scans the
-        materialized iteration output instead of re-running the whole
-        superstep plan (a float metric computed inside ``step`` triggers
-        the plan once for the metric and a second time for the eager
-        persist — 2x compute per iteration).
+        ``(materialized_new_state) -> float`` — the callable form is
+        evaluated AFTER the state is materialized and before the previous
+        state is released, so the metric action scans the materialized
+        iteration output instead of re-running the whole superstep plan
+        (a float metric computed inside ``step`` triggers the plan once
+        for the metric and a second time for the eager persist — 2x
+        compute per iteration).
 
-        ``log_rows=False`` skips the per-iteration row-count action (the
-        count is metrics-only; in fixed-iteration mode it is one whole
-        extra job per superstep — measurable at bench scale).
+        ``state_key``: the column every step's state is hash-partitioned
+        on (a vertex-keyed rank/label vector), passed to ``materialize``
+        so the state stays co-partitioned with the static join inputs and
+        each superstep shuffles only the intrinsic communication. The
+        init state's partition count k is read once from its plan, and
+        every superstep is planned under ``spark.sql.shuffle.partitions =
+        k`` (the session value is restored after the run), so its
+        aggregates land in the state's own k partitions. Leave it None
+        for unkeyed state (e.g. CC's pair set), planned at the session
+        count.
 
         ``observe``: named aggregate columns over the state, computed by
-        the job that persists each state (``DataFrame.observe``), no
+        the job that materializes each state (``DataFrame.observe``), no
         action of their own. When ``step(state, i)`` runs,
         ``self.observed`` holds their values for ``state``; a resumed
-        run computes them once for the state it resumed from."""
+        run computes them once for the state it resumed from. Each
+        state's row count (the metrics rows' ``rows``) is observed the
+        same way."""
         k = None
-        if self.state_key is not None:
+        if state_key is not None:
             # planned with AQE off, as materialize plans it: no job
             with _session_conf(self.spark, {"spark.sql.adaptive.enabled": "false"}):
-                k = _hash_partitions_on(state, self.state_key)
+                k = _hash_partitions_on(state, state_key)
         observed = [c.alias(name) for name, c in (observe or {}).items()]
+        measures = [F.count(F.lit(1)).alias(_ROWS), *observed]
         with _session_conf(
             self.spark, {} if k is None else {"spark.sql.shuffle.partitions": str(k)}
         ):
-            start_iter = 0
-            if resume:
-                resumed = self.resume_state()
-                if resumed is not None:
-                    state, start_iter = resumed
-                    if observed:
-                        self.observed = state.agg(*observed).first().asDict()
+            tables, start_iter = self.store.start(resume, state=state)
+            state = tables["state"]
+            if start_iter > 0 and observed:
+                self.observed = state.agg(*observed).first().asDict()
             if start_iter == 0:
-                state = self._persist(state, 0, observed)
-                if self.ckpt is not None:  # only the durable log keeps this row
-                    self._log_metrics(
-                        {
-                            "run_id": self.run_id,
-                            "iteration": 0,
-                            "phase": "init",
-                            "rows": state.count(),
-                            "partitions": k or state.rdd.getNumPartitions(),
-                            **self._snapshot_fields(0),
-                        }
-                    )
+                state, rows = self._materialize(state, state_key, measures)
+                state = self.store.persist(0, state=state)["state"]
+                self.store.log(
+                    {
+                        "run_id": self.run_id,
+                        "iteration": 0,
+                        "phase": "init",
+                        "rows": rows,
+                        "partitions": k or state.rdd.getNumPartitions(),
+                        **self._snapshot_fields(0),
+                    }
+                )
                 start_iter = 1
 
             metrics: list[dict] = []
             converged = False
-            owned = state  # the state WE persisted (safe to release when superseded)
             i = start_iter - 1
             for i in range(start_iter, max_iterations + 1):
                 t0 = time.monotonic()
                 new_state, metric = step(state, i)
-                new_state = self._persist(new_state, i, observed)
+                new_state, rows = self._materialize(new_state, state_key, measures)
                 if callable(metric):
+                    # steps and metrics only ever read the previous state,
+                    # which the persist below releases
                     metric = float(metric(new_state))
-                rows = new_state.count() if log_rows else -1
-                # the superseded state is never read again (steps and
-                # metrics only ever touch the immediately-previous state,
-                # and the metric just ran) — release its blocks now instead
-                # of letting the whole state history pile up in the block
-                # manager
-                unpersist_checkpoint(owned)
-                owned = new_state
-                wall = time.monotonic() - t0
+                state = self.store.persist(i, state=new_state)["state"]
                 row = {
                     "run_id": self.run_id,
                     "iteration": i,
                     metric_name: metric,
                     "rows": rows,
-                    "partitions": k or new_state.rdd.getNumPartitions(),
-                    "wall_sec": round(wall, 4),
+                    "partitions": k or state.rdd.getNumPartitions(),
+                    "wall_sec": round(time.monotonic() - t0, 4),
                     **self._snapshot_fields(i),
                     **probe_resources(),  # Q10: per-iteration RSS/CPU
                 }
                 metrics.append(row)
-                self._log_metrics(row)
-                state = new_state
+                self.store.log(row)
                 if metric <= tolerance:
                     converged = True
                     break

@@ -11,7 +11,8 @@ Per ordered micro-batch of arriving edges:
      messages INTO ball vertices (everything outside the ball keeps its
      messages — exactly the reference's locality), via the same Arrow
      kernel as full BP,
-  5. materialize the edge and message state (plans/iterate.materialize).
+  5. persist the edge and message state after every update through
+     plans/iterate.FoldCheckpointer, which releases what it supersedes.
 
 Final labels = the full-graph argmax finalize (A10). The schedule differs
 from the reference only in granularity (batch vs single edge) — both are
@@ -21,6 +22,8 @@ hard part 3).
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +36,7 @@ from ..operators.belief_propagation import (
 )
 from ..operators.frontier import r_hop_neighborhood
 from ..operators.graph_ops import add_edges
-from ..plans.iterate import materialize
+from ..plans.iterate import FoldCheckpointer, materialize
 from .stream_driver import _batch_bounds
 
 
@@ -58,6 +61,8 @@ def stream_belief_propagation(
     msgs = spark.createDataFrame([], MSG_SCHEMA)
     uniform = F.array(*[F.lit(1.0 / k)] * k)
     kernel = _superstep_kernel(p_in, p_out)
+    store = FoldCheckpointer(spark, None, "stream_bp", ("edges", "msgs"))
+    tick = itertools.count()  # one store batch per state update
 
     for lo, hi in spans:
         batch = edge_stream.filter((F.col("edge_seq") >= lo) & (F.col("edge_seq") < hi)).select(
@@ -69,9 +74,11 @@ def stream_belief_propagation(
         new_pairs = edges.select("src", "dst").join(
             msgs.select("src", "dst"), ["src", "dst"], "left_anti"
         )
-        msgs = materialize(
-            msgs.unionByName(new_pairs.select("src", "dst", uniform.alias("belief")))
-        )
+        msgs = store.persist(
+            next(tick),
+            edges=edges,
+            msgs=msgs.unionByName(new_pairs.select("src", "dst", uniform.alias("belief"))),
+        )["msgs"]
 
         # radius-r ball around the batch's endpoints (both directions are
         # in the symmetrized batch, so src covers all endpoints)
@@ -84,7 +91,6 @@ def stream_belief_propagation(
             # recompute ONLY messages into ball vertices; the kernel needs
             # every incoming message of those vertices (already in state)
             into_ball = msgs.join(ball.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            outside = msgs.join(ball.withColumnRenamed("id", "dst"), "dst", "left_anti")
             joined = (
                 edges.join(into_ball, ["src", "dst"])
                 .join(pr, "dst")
@@ -95,7 +101,9 @@ def stream_belief_propagation(
             out_of_ball_srcs = msgs.join(
                 ball.withColumnRenamed("id", "src"), "src", "left_anti"
             )
-            msgs = materialize(updated.unionByName(out_of_ball_srcs))
+            msgs = store.persist(
+                next(tick), edges=edges, msgs=updated.unionByName(out_of_ball_srcs)
+            )["msgs"]
 
     final = edges.join(msgs, ["src", "dst"]).join(pr, "dst")
     return final.groupBy("dst").applyInPandas(_finalize_kernel(p_in, p_out), BELIEF_SCHEMA)

@@ -19,13 +19,13 @@ per batch:
      log sink S6 (src/approximate_community_detection.cpp:47-55) — to a
      JSONL lineage file and keep it in the result.
 
-Per-batch state goes through ``plans.iterate.materialize``; with
-``checkpoint_dir`` set, every batch additionally writes durable (edges,
-labels) parquet snapshots through ``plans.iterate.FoldCheckpointer`` —
-the one durable layout, shared with IterationDriver's supersteps — + a
-per-partition lineage row, and ``resume=True`` restarts a killed run
-from the latest complete batch (north_rule "any run resumes
-mid-iteration")."""
+Every fold here persists its per-batch state through
+``plans.iterate.FoldCheckpointer``, the store shared with
+IterationDriver's supersteps, which also releases the state each batch
+supersedes.  With ``checkpoint_dir`` set the store writes durable
+parquet snapshots + a per-partition lineage row per batch, and
+``resume=True`` restarts a killed run from the latest complete batch
+(north_rule "any run resumes mid-iteration")."""
 
 from __future__ import annotations
 
@@ -116,28 +116,21 @@ def stream_community_detection(
     degrees and always runs on the full graph."""
     bounds, spans = _batch_bounds(edge_stream, n_batches)
 
-    ckpt = (
-        FoldCheckpointer(
-            spark, checkpoint_dir, run_id, ("edges", "labels"),
-            manifest={"n_batches": n_batches, "bounds": list(bounds)},
-        )
-        if checkpoint_dir
-        else None
+    store = FoldCheckpointer(
+        spark, checkpoint_dir, run_id, ("edges", "labels"),
+        manifest={"n_batches": n_batches, "bounds": list(bounds)},
     )
-    edges = materialize(
-        initial_edges
-        if initial_edges is not None
-        else spark.createDataFrame([], "src long, dst long, weight long")
+    snap, start_batch = store.start(
+        resume,
+        edges=materialize(
+            initial_edges
+            if initial_edges is not None
+            else spark.createDataFrame([], "src long, dst long, weight long")
+        ),
+        labels=materialize(initial_labels) if initial_labels is not None else None,
     )
-    labels = materialize(initial_labels) if initial_labels is not None else None
+    edges, labels = snap["edges"], snap["labels"]
     metrics: list[dict] = []
-
-    start_batch = 0
-    if resume and ckpt is not None:
-        resumed = ckpt.resume_state()
-        if resumed is not None:
-            snap, start_batch = resumed
-            edges, labels = snap["edges"], snap["labels"]
 
     for b in range(start_batch, n_batches):
         t0 = time.monotonic()
@@ -218,17 +211,15 @@ def stream_community_detection(
                 # 3^steps logical nodes
                 labels = materialize(lpa_superstep(step_edges, labels, variant=lpa_variant), "id")
 
-        if ckpt is not None:
-            snap = ckpt.persist(b, edges=edges, labels=labels)
-            edges, labels = snap["edges"], snap["labels"]
+        snap = store.persist(b, edges=edges, labels=labels)
+        edges, labels = snap["edges"], snap["labels"]
         row = {
             "batch": b,
             "edges_seen": int(edges.agg(F.sum("weight") / 2).collect()[0][0] or 0),
             "wall_sec": round(time.monotonic() - t0, 4),
             **_batch_metrics(edges, labels, truth),
+            "partition_lineage": store.lineage(b),
         }
-        if ckpt is not None:
-            row["partition_lineage"] = ckpt.lineage(b)
         metrics.append(row)
         if metrics_path:
             os.makedirs(os.path.dirname(metrics_path) or ".", exist_ok=True)
@@ -266,8 +257,10 @@ def stream_connected_components(
     (min-id labels); the gate proves it against the full-recompute
     oracle.
 
-    ``checkpoint_dir`` + ``resume=True`` (VERDICT r3 #9): the labeling
-    is snapshotted durably per batch (FoldCheckpointer), and a killed
+    Each batch's labeling is persisted through FoldCheckpointer (one
+    ``materialize`` in memory), which releases the labeling it
+    supersedes.  ``checkpoint_dir`` + ``resume=True`` (VERDICT r3 #9):
+    the labeling is snapshotted durably per batch, and a killed
     run restarts from the latest complete batch — batch spans are
     deterministic from the observed edge_seq range, so the resumed run
     replays exactly the missing batches and ends bit-identical to an
@@ -276,34 +269,20 @@ def stream_connected_components(
 
     bounds, spans = _batch_bounds(edge_stream, n_batches)
 
-    ckpt = (
-        FoldCheckpointer(
-            spark, checkpoint_dir, run_id, ("labels",),
-            manifest={"n_batches": n_batches, "bounds": list(bounds)},
-        )
-        if checkpoint_dir
-        else None
+    store = FoldCheckpointer(
+        spark, checkpoint_dir, run_id, ("labels",),
+        manifest={"n_batches": n_batches, "bounds": list(bounds)},
     )
-    labels = spark.createDataFrame([], "id long, component long")
-    start_batch = 0
-    if resume and ckpt is not None:
-        resumed = ckpt.resume_state()
-        if resumed is not None:
-            labels, start_batch = resumed[0]["labels"], resumed[1]
-
+    snap, start_batch = store.start(
+        resume, labels=spark.createDataFrame([], "id long, component long")
+    )
+    labels = snap["labels"]
     for b in range(start_batch, n_batches):
         lo, hi = spans[b]
         batch = edge_stream.filter((F.col("edge_seq") >= lo) & (F.col("edge_seq") < hi)).select(
             "src", "dst"
         )
-        labels = incremental_components(spark, labels, batch)
-        if ckpt is not None:
-            labels = ckpt.persist(b, labels=labels)["labels"]
-        else:
-            # labels are vertex-scale; sever the per-batch lineage and reset
-            # the plan statistics (incremental_components reads the labels
-            # twice per batch — see materialize)
-            labels = materialize(labels)
+        labels = store.persist(b, labels=incremental_components(spark, labels, batch))["labels"]
     return labels
 
 
@@ -356,25 +335,14 @@ def stream_pagerank(
         fingerprint["bounds"] = list(bounds)
         boundaries = [hi for _, hi in spans]
 
-    ckpt = (
-        FoldCheckpointer(
-            spark, checkpoint_dir, run_id, ("state",),
-            manifest={**fingerprint, "boundaries": boundaries},
-        )
-        if checkpoint_dir
-        else None
+    store = FoldCheckpointer(
+        spark, checkpoint_dir, run_id, ("state",),
+        manifest={**fingerprint, "boundaries": boundaries},
     )
-    state: DataFrame | None = None
-    start_batch = 0
-    if resume and ckpt is not None:
-        resumed = ckpt.resume_state()
-        if resumed is not None:
-            state, start_batch = resumed[0]["state"], resumed[1]
-
+    snap, start_batch = store.start(resume, state=None)
+    state = snap["state"]
     prev_adj = None
-    for b, bound in enumerate(boundaries):
-        if b < start_batch:
-            continue
+    for b, bound in enumerate(boundaries[start_batch:], start_batch):
         cum = edge_stream.filter(F.col("edge_seq") < bound)
         verts = materialize(
             cum.select(F.col("src").alias("id"))
@@ -397,7 +365,6 @@ def stream_pagerank(
                 state.withColumnRenamed("rank", "prank"), "id", "left"
             ).select("id", F.coalesce("prank", F.lit(1.0 / n)).alias("rank"))
             raw = materialize(raw)
-            unpersist_checkpoint(state)
             tot = raw.agg(F.sum("rank")).collect()[0][0]
             init = raw.select("id", (F.col("rank") / F.lit(float(tot))).alias("rank"))
         cur = materialize(init.repartition("id"))
@@ -421,10 +388,7 @@ def stream_pagerank(
         if prev_adj is not None:
             prev_adj.unpersist()
         prev_adj = adj
-        state = cur
-        if ckpt is not None:
-            state = ckpt.persist(b, state=cur)["state"]
-            unpersist_checkpoint(cur)  # durable copy supersedes the blocks
+        state = store.persist(b, state=cur)["state"]
     if prev_adj is not None:
         prev_adj.unpersist()
     return state.select("id", F.round("rank", 8).alias("rank"))
@@ -472,40 +436,22 @@ def stream_triangles(
         .groupBy("a", "b")
         .agg(F.min("edge_seq").alias("edge_seq"))
     )
-    ckpt = (
-        FoldCheckpointer(
-            spark, checkpoint_dir, run_id, ("cum", "counts"),
-            manifest={"boundaries": boundaries},
-        )
-        if checkpoint_dir
-        else None
+    store = FoldCheckpointer(
+        spark, checkpoint_dir, run_id, ("cum", "counts"),
+        manifest={"boundaries": boundaries},
     )
-    cum = None  # canonical pairs seen so far
-    total = 0
-    out = []
-    prev_bound = None
-    start_batch = 0
-    if resume and ckpt is not None:
-        resumed = ckpt.resume_state()
-        if resumed is not None:
-            snap, start_batch = resumed
-            cum = snap["cum"]
-            out = sorted(
-                (int(r.batch_id), int(r.triangles)) for r in snap["counts"].collect()
-            )
-            total = out[-1][1] if out else 0
-            prev_bound = boundaries[start_batch - 1]
-    for batch_id, bound in enumerate(boundaries):
-        if batch_id < start_batch:
-            continue
+    # cum: the canonical pairs seen so far; counts: the count history
+    snap, start_batch = store.start(resume, cum=canon.select("a", "b").limit(0), counts=None)
+    cum = snap["cum"]
+    out = sorted(tuple(r) for r in snap["counts"].collect()) if start_batch else []
+    total = out[-1][1] if out else 0
+    counts_schema = "batch_id int, triangles long"
+    for batch_id, bound in enumerate(boundaries[start_batch:], start_batch):
         cond = F.col("edge_seq") < bound
-        if prev_bound is not None:
-            cond = cond & (F.col("edge_seq") >= prev_bound)
-        new = canon.filter(cond).select("a", "b")
-        if cum is not None:
-            new = new.join(cum, ["a", "b"], "left_anti")
-        new = materialize(new)
-        nxt_cum = materialize(new if cum is None else cum.unionByName(new))
+        if batch_id:
+            cond = cond & (F.col("edge_seq") >= boundaries[batch_id - 1])
+        new = materialize(canon.filter(cond).select("a", "b").join(cum, ["a", "b"], "left_anti"))
+        nxt_cum = materialize(cum.unionByName(new))
         sym = nxt_cum.select(F.col("a").alias("u"), F.col("b").alias("w")).unionByName(
             nxt_cum.select(F.col("b").alias("u"), F.col("a").alias("w"))
         )
@@ -534,19 +480,9 @@ def stream_triangles(
         delta = cands.count()
         total += delta
         out.append((batch_id, total))
-        if cum is not None:
-            unpersist_checkpoint(cum)
         unpersist_checkpoint(new)
-        cum = nxt_cum
-        prev_bound = bound
-        if ckpt is not None:
-            snap = ckpt.persist(
-                batch_id,
-                cum=cum,
-                counts=spark.createDataFrame(out, "batch_id int, triangles long"),
-            )
-            unpersist_checkpoint(cum)
-            cum = snap["cum"]
-    if cum is not None:
-        unpersist_checkpoint(cum)
-    return spark.createDataFrame(out, "batch_id int, triangles long")
+        cum = store.persist(
+            batch_id, cum=nxt_cum, counts=spark.createDataFrame(out, counts_schema)
+        )["cum"]
+    store.release()
+    return spark.createDataFrame(out, counts_schema)

@@ -34,15 +34,15 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.iterate import FoldCheckpointer, materialize, unpersist_checkpoint
+from ..plans.iterate import FoldCheckpointer, materialize
 from .dedup import _doc_shingles, minhash_signatures
 from .portable import MINHASH_NUM, MINHASH_ROWS_PER_BAND, NGRAM_N
 
 
 @dataclass
 class DedupState:
-    """Accumulated LSH store (materialized, or the durable
-    FoldCheckpointer read-backs; bucketed lake tables in production)."""
+    """Accumulated LSH store (the FoldCheckpointer handles; bucketed lake
+    tables in production)."""
 
     bands: DataFrame  # (doc_id, band, band_key)
     shingles: DataFrame  # (doc_id, shingle)
@@ -85,10 +85,9 @@ def process_batch(
     """(next_state, dup_pairs(a, b, jaccard), state_delta) for one
     arriving batch — ``state_delta`` holds only the rows this batch
     APPENDED to each store (the LSH store is append-only), which is
-    what a durable checkpoint needs to write per batch (VERDICT r4 #2:
-    snapshot-append, not full rewrite).  ``next_state`` is the LAZY
-    union of ``state`` and the delta: the caller either materializes it
-    or, checkpointing, replaces it with the durable read-backs.
+    what the fold persists per batch (VERDICT r4 #2: snapshot-append,
+    not full rewrite).  ``next_state`` is the LAZY union of ``state``
+    and the delta.
 
     Emitted pairs have ≥1 side in `new_docs`; a < b canonical order."""
     if state is None:
@@ -161,91 +160,51 @@ def stream_minhash_dedup(
     """Union of per-batch emissions — equals the one-shot batch
     `minhash_lsh_dup_pairs` over the concatenated corpus.
 
-    ``checkpoint_dir`` + ``resume=True`` (VERDICT r3 #9): the LSH store
-    (bands / shingles / sizes) AND the emitted pairs are snapshotted
-    durably per batch via FoldCheckpointer; a killed run
-    restarts from the latest complete batch and its final emission set
-    is identical to an uninterrupted run's (each pair is emitted
-    exactly once, in its later doc's batch — replaying only the missing
-    batches regenerates exactly the missing pairs).  All four tables
-    are append-only, so each batch persists only its DELTA (VERDICT r4
-    #2 — per-stream checkpoint I/O is O(total size), not
-    O(n_batches × cumulative size)); resume reconstructs the cumulative
-    value as the union of the batch dirs.  The manifest (ADVICE r4)
-    fingerprints n_batches and the match parameters so a resume against
-    a differently-batched or re-parameterized stream is refused."""
+    The LSH store (bands / shingles / sizes) AND the emitted pairs
+    persist through FoldCheckpointer.  All four tables are append-only,
+    so each batch persists only its DELTA and the cumulative value is
+    the union of the deltas.  ``checkpoint_dir`` + ``resume=True``
+    (VERDICT r3 #9): the deltas are snapshotted durably per batch
+    (VERDICT r4 #2 — per-stream checkpoint I/O is O(total size), not
+    O(n_batches × cumulative size)); a killed run restarts from the
+    latest complete batch and its final emission set is identical to an
+    uninterrupted run's (each pair is emitted exactly once, in its later
+    doc's batch — replaying only the missing batches regenerates exactly
+    the missing pairs).  The manifest (ADVICE r4) fingerprints n_batches
+    and the match parameters so a resume against a differently-batched
+    or re-parameterized stream is refused."""
     tables = ("bands", "shingles", "sizes", "pairs_cum")
-    ckpt = (
-        FoldCheckpointer(
-            spark,
-            checkpoint_dir,
-            run_id,
-            tables,
-            delta_tables=tables,
-            manifest={
-                "op": "stream_minhash_dedup",
-                "n_batches": len(batches),
-                "threshold": threshold,
-                "num_hashes": num_hashes,
-                "rows_per_band": rows_per_band,
-                "n": n,
-            },
-        )
-        if checkpoint_dir
-        else None
+    store = FoldCheckpointer(
+        spark,
+        checkpoint_dir,
+        run_id,
+        tables,
+        delta_tables=tables,
+        manifest={
+            "op": "stream_minhash_dedup",
+            "n_batches": len(batches),
+            "threshold": threshold,
+            "num_hashes": num_hashes,
+            "rows_per_band": rows_per_band,
+            "n": n,
+        },
     )
-    state: DedupState | None = None
-    out: DataFrame | None = None
-    start_batch = 0
-    if resume and ckpt is not None:
-        resumed = ckpt.resume_state()
-        if resumed is not None:
-            snap, start_batch = resumed
-            state = DedupState(
-                bands=snap["bands"], shingles=snap["shingles"], sizes=snap["sizes"]
-            )
-            out = snap["pairs_cum"]
-
-    for b, batch in enumerate(batches):
-        if b < start_batch:
-            continue
-        prev = state
-        state, pairs, delta = process_batch(
+    empty = _empty_state(spark)
+    snap, start_batch = store.start(
+        resume,
+        bands=empty.bands,
+        shingles=empty.shingles,
+        sizes=empty.sizes,
+        pairs_cum=spark.createDataFrame([], "a long, b long, jaccard double"),
+    )
+    for b, batch in enumerate(batches[start_batch:], start_batch):
+        state = DedupState(bands=snap["bands"], shingles=snap["shingles"], sizes=snap["sizes"])
+        _, pairs, delta = process_batch(
             spark, state, batch, threshold, num_hashes, rows_per_band, n
         )
-        pairs = materialize(pairs)
-        # the batch's materialized delta is superseded once folded into
-        # the next state (or written durably); nothing reads it after
-        superseded = [delta.bands, delta.shingles]
-        if ckpt is not None:
-            # deltas only — the durable handles come back as the
-            # reconstructed cumulative unions
-            snap = ckpt.persist(
-                b,
-                bands=delta.bands,
-                shingles=delta.shingles,
-                sizes=delta.sizes,
-                pairs_cum=pairs,
-            )
-            state = DedupState(
-                bands=snap["bands"], shingles=snap["shingles"], sizes=snap["sizes"]
-            )
-            out = snap["pairs_cum"]
-            superseded.append(pairs)
-        else:
-            # after the last batch nothing reads the store: only the
-            # (materialized) pairs are returned
-            if b < len(batches) - 1:
-                state = DedupState(
-                    bands=materialize(state.bands),
-                    shingles=materialize(state.shingles),
-                    sizes=materialize(state.sizes),
-                )
-            out = pairs if out is None else out.unionByName(pairs)
-            if prev is not None:
-                superseded += [prev.bands, prev.shingles, prev.sizes]
-        for df in superseded:
-            unpersist_checkpoint(df)
-    if out is None:
-        return spark.createDataFrame([], "a long, b long, jaccard double")
-    return out
+        snap = store.persist(
+            b, bands=delta.bands, shingles=delta.shingles, sizes=delta.sizes, pairs_cum=pairs
+        )
+    # only the pairs are returned
+    store.release("bands", "shingles", "sizes")
+    return snap["pairs_cum"]

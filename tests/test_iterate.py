@@ -143,6 +143,19 @@ def test_superseded_state_blocks_released(spark):
     # cached beyond what existed before (plus nothing from statics)
     assert after - base <= 2, f"cached RDDs grew {base} -> {after}"
 
+    # a stream fold releases each batch's superseded state too: only the
+    # labeling it returns stays
+    from sbm_communitydetection_spark.plans.iterate import unpersist_checkpoint
+    from sbm_communitydetection_spark.streaming.stream_driver import stream_connected_components
+
+    stream = raw.withColumn("edge_seq", F.col("src") * 1000 + F.col("dst")).localCheckpoint(eager=True)
+    base = len(sc.getRDDStorageInfo())
+    labels = stream_connected_components(spark, stream, n_batches=8)
+    labels.count()
+    after = len(sc.getRDDStorageInfo())
+    unpersist_checkpoint(labels)
+    assert after - base <= 1, f"stream CC: cached RDDs grew {base} -> {after}"
+
 
 def test_sync_communities_equals_full_recompute(spark):
     """C2 incremental coarsen repair == full C1 recompute after disband
@@ -520,7 +533,6 @@ def test_non_durable_run_builds_no_init_row(spark):
             state,
             lambda s, i: (s.withColumn("v", F.col("v") + 1), 0.0),
             max_iterations=1,
-            log_rows=False,
         ),
     )
     assert res.converged and res.iterations == 1
@@ -703,5 +715,77 @@ def test_only_materialize_calls_local_checkpoint():
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if ".localCheckpoint(" in line
         and not (path == seam and fn.lineno <= i <= fn.end_lineno)
+    ]
+    assert offenders == []
+
+
+def test_durable_pagerank_superstep_keeps_the_cached_adjacency_in_place(spark, tmp_path):
+    """A caller-built durable driver knows nothing of PageRank's key; the
+    operator passes it at ``run``, so its supersteps are planned at the
+    state's k and the cached, src-partitioned adjacency is scanned with
+    no exchange above it (only the parquet-read state moves)."""
+    from sbm_communitydetection_spark.operators.pagerank import pagerank
+
+    raw = spark.range(3000).select(
+        (F.xxhash64("id") % 200).alias("src"),
+        (F.xxhash64("id", F.lit(3)) % 200).alias("dst"),
+        F.lit(1).cast("long").alias("weight"),
+    )
+    directed = raw.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
+    driver = IterationDriver(spark, run_id="pr_plan", checkpoint_dir=str(tmp_path))
+    plans = []
+    run = driver.run
+
+    def recording_run(state, step, **kw):
+        def recording_step(s, i):
+            new, metric = step(s, i)
+            plans.append(new._jdf.queryExecution().executedPlan().toString().splitlines())
+            return new, metric
+
+        return run(state, recording_step, **kw)
+
+    driver.run = recording_run
+    pagerank(spark, directed, tolerance=-1.0, max_iterations=2, driver=driver).count()
+    assert len(plans) == 2
+    for lines in plans:
+        scans = [i for i, line in enumerate(lines) if "InMemoryTableScan" in line]
+        assert scans, lines
+        assert all("Exchange" not in lines[i - 1] for i in scans), "\n".join(lines)
+
+
+def test_convergence_mode_pagerank_runs_two_jobs_per_superstep(spark):
+    """With a tolerance a PageRank superstep is the persist job (which
+    also observes the row count) and the delta metric: no count job."""
+    from sbm_communitydetection_spark.operators.pagerank import pagerank
+
+    edges = spark.range(8000).select(
+        (F.xxhash64("id") % 200).alias("src"),
+        (F.xxhash64("id", F.lit(5)) % 200).alias("dst"),
+        F.lit(1).cast("long").alias("weight"),
+    ).localCheckpoint(eager=True)
+    jobs = {
+        n: _count_jobs(spark, lambda n=n: pagerank(spark, edges, tolerance=1e-30, max_iterations=n))[0]
+        for n in (3, 6)
+    }
+    assert jobs[6] - jobs[3] <= 2 * 3, jobs
+
+
+def test_only_the_fold_store_branches_on_durability():
+    """Persist, resume and release have one seam, FoldCheckpointer: no
+    package module but plans/iterate.py branches on a checkpoint
+    directory or resumes a store by hand."""
+    import pathlib
+
+    import sbm_communitydetection_spark
+
+    root = pathlib.Path(sbm_communitydetection_spark.__file__).parent
+    seam = root / "plans" / "iterate.py"
+    forks = ("if checkpoint_dir", "ckpt is None", "ckpt is not None", ".resume_state(")
+    offenders = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path != seam
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if any(f in line for f in forks)
     ]
     assert offenders == []

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 import pyspark.sql.functions as F
 
 from sbm_communitydetection_spark.operators.graph_ops import symmetrize, total_edges
@@ -525,12 +527,14 @@ def _four_dedup_batches(spark):
 
 def _record_dedup_checkpoints(monkeypatch):
     """([materialized], [released]) DataFrames of the dedup fold's later
-    calls of ``materialize`` and ``unpersist_checkpoint``."""
+    calls of ``materialize`` and ``unpersist_checkpoint``, its own and
+    its FoldCheckpointer's."""
+    from sbm_communitydetection_spark.plans import iterate
     from sbm_communitydetection_spark.textops import stream_dedup
 
     made, released = [], []
-    real_materialize = stream_dedup.materialize
-    real_release = stream_dedup.unpersist_checkpoint
+    real_materialize = iterate.materialize
+    real_release = iterate.unpersist_checkpoint
 
     def recording_materialize(df, key=None):
         out = real_materialize(df, key)
@@ -542,16 +546,17 @@ def _record_dedup_checkpoints(monkeypatch):
         real_release(df)
 
     monkeypatch.setattr(stream_dedup, "materialize", recording_materialize)
-    monkeypatch.setattr(stream_dedup, "unpersist_checkpoint", recording_release)
+    monkeypatch.setattr(iterate, "materialize", recording_materialize)
+    monkeypatch.setattr(iterate, "unpersist_checkpoint", recording_release)
     return made, released
 
 
 def test_checkpointed_dedup_fold_materializes_only_the_batch(spark, tmp_path, monkeypatch):
     """A checkpointed stream_minhash_dedup replaces its state with the
-    durable read-backs, so it materializes only each batch's new bands,
-    new shingles and emitted pairs — never the cumulative store — and
-    releases every checkpoint it made once the durable copy supersedes
-    it."""
+    durable read-backs, so it materializes only each batch's new bands
+    and new shingles — never the cumulative store, and the pairs are
+    written straight from their plan — and releases every checkpoint it
+    made once the durable copy supersedes it."""
     from sbm_communitydetection_spark.textops import stream_dedup
 
     batches = _four_dedup_batches(spark)
@@ -563,16 +568,16 @@ def test_checkpointed_dedup_fold_materializes_only_the_batch(spark, tmp_path, mo
     got = sorted(map(tuple, stream_dedup.stream_minhash_dedup(
         spark, batches, threshold=0.4, checkpoint_dir=str(tmp_path), run_id="d").collect()))
     assert got == want
-    assert len(made) == 3 * len(batches), len(made)
+    assert len(made) == 2 * len(batches), len(made)
     assert {id(df) for df in made} <= {id(df) for df in released}
 
 
 def test_uncheckpointed_dedup_fold_skips_the_last_store(spark, monkeypatch):
-    """Without ``checkpoint_dir`` the fold materializes the cumulative
-    bands/shingles/sizes store after every batch but the last, which
-    nothing reads: a 4-batch fold makes 6 materialize calls per batch and
-    3 in the last (21, not 24), releases every store it superseded, and
-    still emits the one-shot batch pairs."""
+    """Without ``checkpoint_dir`` the fold keeps each store as the union
+    of its materialized batch deltas and never materializes a cumulative
+    store: a 4-batch fold makes 4 materialize calls per batch (new
+    bands, shingles, sizes and pairs), releases every store delta at the
+    end, and still emits the one-shot batch pairs."""
     from sbm_communitydetection_spark.textops import stream_dedup
     from sbm_communitydetection_spark.textops.dedup import minhash_lsh_dup_pairs
 
@@ -587,7 +592,7 @@ def test_uncheckpointed_dedup_fold_skips_the_last_store(spark, monkeypatch):
     got = sorted(map(tuple, stream_dedup.stream_minhash_dedup(
         spark, batches, threshold=0.4).collect()))
     assert got == want
-    assert len(made) == 6 * len(batches) - 3, len(made)
+    assert len(made) == 4 * len(batches), len(made)
     # everything but the emitted pairs (returned) is released
     assert len({id(df) for df in made} - {id(df) for df in released}) == len(batches)
 
@@ -693,19 +698,26 @@ def test_fold_checkpointer_ignores_foreign_batch_dirs(spark, tmp_path):
     assert got == want
 
 
-def test_fold_checkpointer_empty_delta_preserves_schema(spark, tmp_path):
+@pytest.mark.parametrize("durable", [True, False], ids=["durable", "in_memory"])
+def test_fold_checkpointer_empty_delta_preserves_schema(spark, tmp_path, durable):
     """A batch whose delta is EMPTY must still leave a schema-bearing
-    parquet dir so the multi-path union read-back can infer types."""
+    value — durably a parquet dir, so the multi-path union read-back can
+    infer types; in memory an empty materialized part of the union."""
     from sbm_communitydetection_spark.plans.iterate import FoldCheckpointer
 
-    ck = FoldCheckpointer(spark, str(tmp_path), "e", ("t",), delta_tables=("t",))
+    ck = FoldCheckpointer(
+        spark, str(tmp_path) if durable else None, "e", ("t",), delta_tables=("t",)
+    )
     empty = spark.createDataFrame([], "a long, b double")
     out0 = ck.persist(0, t=empty)["t"]
     assert out0.count() == 0 and set(out0.columns) == {"a", "b"}
     out1 = ck.persist(1, t=spark.createDataFrame([(1, 2.0)], "a long, b double"))["t"]
     assert sorted(map(tuple, out1.collect())) == [(1, 2.0)]
-    snap, nxt = ck.resume_state()
-    assert nxt == 2 and snap["t"].count() == 1
+    if durable:
+        snap, nxt = ck.resume_state()
+        assert nxt == 2 and snap["t"].count() == 1
+    else:
+        assert ck.resume_state() is None
 
 
 def test_fold_checkpointer_refuses_manifestless_run_dir(spark, tmp_path):
