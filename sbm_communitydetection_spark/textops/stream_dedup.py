@@ -81,13 +81,11 @@ def process_batch(
     num_hashes: int = MINHASH_NUM,
     rows_per_band: int = MINHASH_ROWS_PER_BAND,
     n: int = NGRAM_N,
-) -> tuple[DedupState, DataFrame, DedupState]:
-    """(next_state, dup_pairs(a, b, jaccard), state_delta) for one
-    arriving batch — ``state_delta`` holds only the rows this batch
-    APPENDED to each store (the LSH store is append-only), which is
-    what the fold persists per batch (VERDICT r4 #2: snapshot-append,
-    not full rewrite).  ``next_state`` is the LAZY union of ``state``
-    and the delta.
+) -> tuple[DataFrame, DedupState]:
+    """(dup_pairs(a, b, jaccard), state_delta) for one arriving batch —
+    ``state_delta`` holds only the rows this batch APPENDED to each store
+    (the LSH store is append-only), which is what the fold persists per
+    batch (VERDICT r4 #2: snapshot-append, not full rewrite).
 
     Emitted pairs have ≥1 side in `new_docs`; a < b canonical order."""
     if state is None:
@@ -141,9 +139,7 @@ def process_batch(
         .filter(F.col("jaccard") >= threshold)
     )
 
-    next_state = DedupState(bands=all_bands, shingles=all_sh, sizes=all_sizes)
-    delta = DedupState(bands=new_bands, shingles=new_sh, sizes=new_sizes)
-    return next_state, pairs, delta
+    return pairs, DedupState(bands=new_bands, shingles=new_sh, sizes=new_sizes)
 
 
 def stream_minhash_dedup(
@@ -199,7 +195,7 @@ def stream_minhash_dedup(
     )
     for b, batch in enumerate(batches[start_batch:], start_batch):
         state = DedupState(bands=snap["bands"], shingles=snap["shingles"], sizes=snap["sizes"])
-        _, pairs, delta = process_batch(
+        pairs, delta = process_batch(
             spark, state, batch, threshold, num_hashes, rows_per_band, n
         )
         snap = store.persist(
