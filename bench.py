@@ -100,16 +100,6 @@ def main() -> None:
             "transcript_extract,pagerank,pagerank_bucketed,lpa,lpa_bucketed,connected_components,triangle_count,triangle_count_bucketed,degree_topk,near_dup_clusters,anf,bm25_topk",
         ).split(",")
     )
-    # broadcast=0 forces the pure shuffle join path — the configuration a
-    # 10^12-scale cluster must use (rank/label vectors too big to
-    # broadcast), hence what the N-vs-4N scaling run measures. Measured
-    # crossover: at 1M vertices the per-iteration broadcast of the state
-    # vector LOSES to the exchange-free co-partitioned hash join (PR 43.3s
-    # vs 29.5s, LPA 27.9s vs 20.2s at local[32]) — threshold 250k.
-    # Re-swept round 3 against the columnar cached adjacency (VERDICT r2
-    # #5, warmed interleaved best-of-2, 737k-vertex state): co-partitioned
-    # 18.9s vs broadcast 21.8s for 10 PR iters — 250k stands.
-    broadcast_thr = 250_000 if os.environ.get("SPARK_GRAFT_PR_BROADCAST", "1") == "1" else 0
     # the scaling harness pins shuffle partitions across parallelism
     # levels (a real cluster keeps partitioning fixed when scaling
     # executors); default remains partitions == cores
@@ -187,7 +177,6 @@ def main() -> None:
             edges,
             tolerance=-1.0,
             max_iterations=PR_ITERS,
-            broadcast_rows_threshold=broadcast_thr,
         ).count()
 
     def run_sssp():
@@ -197,9 +186,7 @@ def main() -> None:
         srcs = edges.select(F.col("src").alias("id")).distinct().filter(
             F.col("id") % 1000 == 0
         )
-        shortest_paths(
-            spark, edges, srcs, rounds=5, broadcast_rows_threshold=broadcast_thr
-        ).count()
+        shortest_paths(spark, edges, srcs, rounds=5).count()
 
     def run_near_dup():
         # pipeline-family headline entry (VERDICT r2 #8): banded LSH →

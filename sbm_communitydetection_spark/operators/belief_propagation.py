@@ -148,6 +148,25 @@ def _tot_agg(lt: DataFrame, k: int) -> DataFrame:
     return per.select("dst", F.array(*[f"_t{s}" for s in range(k)]).alias("tot"))
 
 
+def _with_old_belief(new: DataFrame, msgs: DataFrame) -> DataFrame:
+    """``new`` messages with each one's previous value beside it, as the
+    working column ``old`` that ``_max_msg_delta`` reads."""
+    old = msgs.select("src", "dst", F.col("belief").alias("old"))
+    return new.join(old, ["src", "dst"], "left")
+
+
+def _max_msg_delta():
+    """max |Δmessage| over every message and state: an aggregate over
+    ``_with_old_belief``'s rows, observed on the superstep's persist job."""
+    return F.max(
+        F.aggregate(
+            F.zip_with("belief", "old", lambda a, b: F.abs(a - b)),
+            F.lit(0.0),
+            lambda acc, x: F.greatest(acc, x),
+        )
+    )
+
+
 def _softmax_col(logits):
     """JVM-side softmax over an array column (log-sum-exp stabilized)."""
     mx = F.array_max(logits)
@@ -224,27 +243,8 @@ def belief_propagation(
         joined = ew.join(msgs, ["src", "dst"]).join(pr, "dst")
         new = joined.groupBy("dst").applyInPandas(step_kernel, MSG_SCHEMA)
         if fixed_iters:
-            return new, float("inf")
-
-        # callable metric: Δmessage scan over the PERSISTED superstep
-        # output — never re-runs the Arrow kernel plan for the metric
-        def delta(persisted: DataFrame) -> float:
-            row = (
-                persisted.select("src", "dst", F.col("belief").alias("nb"))
-                .join(msgs, ["src", "dst"])
-                .select(
-                    F.aggregate(
-                        F.zip_with("nb", "belief", lambda a, b: F.abs(a - b)),
-                        F.lit(0.0),
-                        lambda acc, x: F.greatest(acc, x),
-                    ).alias("d")
-                )
-                .agg(F.max("d"))
-                .collect()[0][0]
-            )
-            return float(row)
-
-        return new, delta
+            return new, None
+        return _with_old_belief(new, msgs), _max_msg_delta()
 
     result = driver.run(
         init,
@@ -313,27 +313,10 @@ def _belief_propagation_agg(
         # aggregation key
         new = out.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "weight", "belief"
-        ).repartition("dst")
+        )
         if fixed_iters:
-            return new, float("inf")
-
-        def delta(persisted: DataFrame) -> float:
-            row = (
-                persisted.select("src", "dst", F.col("belief").alias("nb"))
-                .join(msgs, ["src", "dst"])
-                .select(
-                    F.aggregate(
-                        F.zip_with("nb", "belief", lambda a, b: F.abs(a - b)),
-                        F.lit(0.0),
-                        lambda acc, x: F.greatest(acc, x),
-                    ).alias("d")
-                )
-                .agg(F.max("d"))
-                .collect()[0][0]
-            )
-            return float(row)
-
-        return new, delta
+            return new.repartition("dst"), None
+        return _with_old_belief(new, msgs).repartition("dst"), _max_msg_delta()
 
     result = driver.run(
         init,

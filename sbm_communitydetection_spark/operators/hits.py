@@ -9,8 +9,8 @@ persist):
     hub_i(u)  = Σ_{(u,v)∈E} w(u,v) · auth_{i-1}(v) / Σ auth_{i-1}
 
 L1 normalization is folded into the NEXT superstep's multiply (and the
-final select), so per superstep the only actions are the driver's
-persist plus one cheap 2-scalar agg on the already-materialized state.
+final select). The norms are observed on each state's persist job, so a
+superstep is that one job, its convergence metric included.
 
 Scale plan (mirrors pagerank.py): the edge table is checkpointed TWICE
 with partition-preserving layouts — hash(src) for the auth push and
@@ -39,13 +39,12 @@ def hits(
     tolerance: float = 1e-8,
     max_iterations: int = 50,
     driver: IterationDriver | None = None,
-    broadcast_rows_threshold: int = 250_000,
     collect_metrics: list | None = None,
 ) -> DataFrame:
     """scores(id, hub, auth), each column L1-normalized to Σ = 1.
 
     edges(src, dst, weight) is DIRECTED. tolerance < 0 runs exactly
-    ``max_iterations`` supersteps with no convergence actions (the
+    ``max_iterations`` supersteps with no convergence metric (the
     oracle-gated mode); otherwise stop when max |Δauth| ≤ tolerance.
     """
     driver = driver or IterationDriver(spark, run_id="hits")
@@ -69,69 +68,65 @@ def hits(
     adj_src = cache_partitioned(e3.repartition("src"))
     adj_dst = cache_partitioned(e3.repartition("dst"))
 
+    # out_w(u) = Σ w(u, v) over the vertex set's in-edges, a static state
+    # column: Σ_u hub(u)·out_w(u) / Σ hub is the NEXT state's auth norm,
+    # so the normalized auth delta needs no pass of its own
+    out_w = (
+        e3.join(verts.select(F.col("id").alias("dst")), "dst", "left_semi")
+        .groupBy(F.col("src").alias("id"))
+        .agg(F.sum("weight").cast("double").alias("out_w"))
+    )
+    state0 = (
+        verts.join(out_w, "id", "left")
+        .select(
+            "id",
+            F.lit(1.0 / n).alias("hub"),
+            F.lit(1.0 / n).alias("auth"),
+            F.coalesce("out_w", F.lit(0.0)).alias("out_w"),
+        )
+        .repartition("id")
+    )
+    # the L1 norms of each state ride its persist job
+    observe = {
+        "sh": F.sum("hub"),
+        "sa": F.sum("auth"),
+        "push": F.sum(F.col("hub") * F.col("out_w")),
+    }
     fixed_iters = tolerance < 0
-    use_broadcast = n <= broadcast_rows_threshold
-
-    def _side(state: DataFrame, key: str) -> DataFrame:
-        side = state.withColumnRenamed("id", key)
-        return F.broadcast(side) if use_broadcast else side.hint("SHUFFLE_HASH")
-
-    state0 = verts.select(
-        "id", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("auth")
-    ).repartition("id")
 
     def step(state: DataFrame, i: int):
-        # L1 norms of the previous (persisted) state — one tiny 2-scalar
-        # job over the materialized vector, not a re-run of the superstep
-        sh, sa = state.agg(F.sum("hub"), F.sum("auth")).collect()[0]
+        sh, sa, push = (driver.observed[c] for c in ("sh", "sa", "push"))
         # identical association order to the SQL oracle:
         # ((weight * score) / norm), left-assoc — float-exact parity
         auth_new = (
-            adj_src.join(_side(state.select("id", "hub"), "src"), "src")
+            adj_src.join(state.select(F.col("id").alias("src"), "hub").hint("SHUFFLE_HASH"), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("weight") * F.col("hub") / F.lit(sh)).alias("auth_c"))
             .withColumnRenamed("dst", "id")
         )
         hub_new = (
-            adj_dst.join(_side(state.select("id", "auth"), "dst"), "dst")
+            adj_dst.join(state.select(F.col("id").alias("dst"), "auth").hint("SHUFFLE_HASH"), "dst")
             .groupBy("src")
             .agg(F.sum(F.col("weight") * F.col("auth") / F.lit(sa)).alias("hub_c"))
             .withColumnRenamed("src", "id")
         )
         new = (
-            state.select("id")
+            state.select("id", "out_w", F.col("auth").alias("old_auth"))
             .join(hub_new.hint("SHUFFLE_HASH"), "id", "left")
             .join(auth_new.hint("SHUFFLE_HASH"), "id", "left")
             .select(
                 "id",
                 F.coalesce("hub_c", F.lit(0.0)).alias("hub"),
                 F.coalesce("auth_c", F.lit(0.0)).alias("auth"),
+                "out_w",
+                "old_auth",
             )
         )
-        if fixed_iters:
-            return new, float("inf")
-
-        def delta(persisted: DataFrame) -> float:
-            # compare L1-NORMALIZED auth vectors (raw scales differ
-            # between iterations); both norms read materialized state
-            new_sa = persisted.agg(F.sum("auth")).collect()[0][0]
-            row = (
-                persisted.join(
-                    state.select("id", F.col("auth").alias("old_auth")), "id"
-                )
-                .agg(
-                    F.max(
-                        F.abs(
-                            F.col("auth") / F.lit(new_sa)
-                            - F.col("old_auth") / F.lit(sa)
-                        )
-                    )
-                )
-                .collect()[0][0]
-            )
-            return float(row)
-
-        return new, delta
+        # compare L1-NORMALIZED auth vectors (raw scales differ between
+        # iterations); the new norm is push / sh, known before the job
+        new_sa = F.lit(push) / F.lit(sh)
+        delta = F.max(F.abs(F.col("auth") / new_sa - F.col("old_auth") / F.lit(sa)))
+        return new, None if fixed_iters else delta
 
     result = driver.run(
         state0,
@@ -139,14 +134,14 @@ def hits(
         max_iterations=max_iterations,
         tolerance=tolerance,
         metric_name="max_auth_delta",
+        observe=observe,
         state_key="id",
     )
     if collect_metrics is not None:
         collect_metrics.extend(result.metrics)
 
-    final = result.state
-    sh, sa = final.agg(F.sum("hub"), F.sum("auth")).collect()[0]
-    out = final.select(
+    sh, sa = driver.observed["sh"], driver.observed["sa"]  # of the final state
+    out = result.state.select(
         "id",
         (F.col("hub") / F.lit(sh)).alias("hub"),
         (F.col("auth") / F.lit(sa)).alias("auth"),

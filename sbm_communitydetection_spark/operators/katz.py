@@ -70,6 +70,8 @@ def katz_centrality(
         new = materialize(new)
         unpersist_checkpoint(state)
         state = new
+    for df in (verts, adj):
+        unpersist_checkpoint(df)
     return state.select("id", F.round("katz", 6).alias("katz"))
 
 
@@ -139,31 +141,30 @@ def eigenvector_centrality(
     for _ in range(iterations):
         side = state.withColumnRenamed("id", "src")
         side = F.broadcast(side) if use_broadcast else side.hint("SHUFFLE_HASH")
-        raw = (
+        sums = (
             adj.join(side, "src")
             .groupBy("dst")
             .agg(F.sum("eig").alias("s"))
             .withColumnRenamed("dst", "id")
         )
-        new = verts.join(
-            raw if use_broadcast else raw.hint("SHUFFLE_HASH"), "id", "left"
-        ).select("id", F.coalesce("s", F.lit(0.0)).alias("s"))
-        new = materialize(new)
-        # scalar normalizer against the just-materialized state (one tiny job)
-        tot = new.agg(F.sum("s")).collect()[0][0]
-        if not tot:
-            # mass extinct (DAG input): the eigenvector limit is the zero
-            # vector and every further superstep keeps it zero — stop here
-            unpersist_checkpoint(state)
-            state = materialize(new.select("id", F.col("s").alias("eig")))
-            break
-        new = materialize(
-            new.select(
-                "id", (F.col("s") * F.lit(float(n)) / F.lit(float(tot))).alias("eig")
-            )
+        raw = materialize(
+            verts.join(
+                sums if use_broadcast else sums.hint("SHUFFLE_HASH"), "id", "left"
+            ).select("id", F.coalesce("s", F.lit(0.0)).alias("s"))
         )
-        unpersist_checkpoint(state)
+        # scalar normalizer against the just-materialized state (one tiny job)
+        tot = raw.agg(F.sum("s")).collect()[0][0]
+        # mass extinct (DAG input): the eigenvector limit is the zero
+        # vector and every further superstep keeps it zero — stop after it
+        eig = F.col("s") * F.lit(float(n)) / F.lit(float(tot)) if tot else F.col("s")
+        new = materialize(raw.select("id", eig.alias("eig")))
+        for df in (state, raw):
+            unpersist_checkpoint(df)
         state = new
+        if not tot:
+            break
+    for df in (verts, adj):
+        unpersist_checkpoint(df)
     return state.select("id", F.round("eig", 6).alias("eig"))
 
 

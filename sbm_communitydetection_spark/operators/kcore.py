@@ -65,17 +65,10 @@ def k_core(
         new = deg.filter(F.col("degree") >= k).select(
             F.col("src").alias("id"), "degree"
         )
-        if rounds is not None:
-            return new, float("inf")
-
-        # converged when no vertex was peeled this round (cheap count on
-        # the persisted output vs the previous state's size)
-        prev_n = state.count()
-
-        def removed(persisted: DataFrame) -> float:
-            return float(prev_n - persisted.count())
-
-        return new, removed
+        # converged when no vertex was peeled this round: the previous
+        # state's size is observed on its own persist job
+        removed = F.lit(driver.observed["n"]) - F.count(F.lit(1))
+        return new, None if rounds is not None else removed
 
     init = verts.select("id", F.lit(-1).cast("long").alias("degree"))
     result = driver.run(
@@ -84,6 +77,7 @@ def k_core(
         max_iterations=rounds if rounds is not None else max_iterations,
         tolerance=-1.0 if rounds is not None else 0.0,
         metric_name="peeled",
+        observe={"n": F.count(F.lit(1))},
         state_key="id",
     )
     unpersist_checkpoint(pairs)

@@ -53,6 +53,9 @@ def lpa_superstep(
     (variant='gain' is handled by label_propagation directly — it needs the
     graph total weight 2m, a per-run scalar, so it is not a pure per-step
     function of (edges, labels).)
+
+    Returns (id, label, old_label): ``old_label`` is the label each
+    vertex held, in the same row, for a changed-label count.
     """
     if variant not in ("plain", "keep_own"):
         raise ValueError(f"unknown LPA variant {variant!r}")
@@ -82,7 +85,9 @@ def lpa_superstep(
         )
         best = best.select(F.col("src").alias("id"), F.col("m.lbl").alias("best_label"))
         return labels.join(best.hint("SHUFFLE_HASH"), "id", "left").select(
-            "id", F.coalesce("best_label", "label").alias("label")
+            "id",
+            F.coalesce("best_label", "label").alias("label"),
+            F.col("label").alias("old_label"),
         )
     # keep_own: one aggregation computes both argmax and the current label's score
     cur = labels.select(F.col("id").alias("src"), F.col("label").alias("cur_label"))
@@ -108,6 +113,7 @@ def lpa_superstep(
         F.when(keep | F.col("best_label").isNull(), F.col("label"))
         .otherwise(F.col("best_label"))
         .alias("label"),
+        F.col("label").alias("old_label"),
     )
 
 
@@ -231,24 +237,15 @@ def label_propagation(
                 .select(F.col("src").alias("id"), F.col("m.lbl").alias("best_label"))
             )
             new = state.join(best.hint("SHUFFLE_HASH"), "id", "left").select(
-                "id", F.coalesce("best_label", "label").alias("label")
+                "id",
+                F.coalesce("best_label", "label").alias("label"),
+                F.col("label").alias("old_label"),
             )
         else:
             new = lpa_superstep(edges, state, variant=variant)
-        if fixed_iters:
-            # exact-iteration mode: skip the changed-count action
-            return new, float("inf")
-
-        # callable metric: runs on the PERSISTED superstep output (cheap
-        # label-vector join), not the unpersisted plan (2x compute)
-        def changed(persisted: DataFrame) -> float:
-            return float(
-                persisted.join(state.withColumnRenamed("label", "old_label"), "id")
-                .filter(F.col("label") != F.col("old_label"))
-                .count()
-            )
-
-        return new, changed
+        # old_label is a working column: the driver keeps (id, label)
+        changed = F.count(F.when(F.col("label") != F.col("old_label"), 1))
+        return new, None if fixed_iters else changed
 
     result = driver.run(
         labels,
@@ -330,7 +327,7 @@ def seeded_label_propagation(
             .alias("label"),
             "is_seed",
         )
-        return new, float("inf")  # fixed-iteration mode
+        return new, None  # fixed-iteration mode
 
     result = driver.run(
         state0,

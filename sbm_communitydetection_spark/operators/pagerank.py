@@ -5,7 +5,7 @@ Per iteration (all JVM-side column math, zero Python in the loop body):
     contribs = adj(src, dst, frac) ⋈ ranks(src)  →  groupBy(dst).sum(rank·frac)
     dangling = Σ rank over vertices with no out-edges   (observed on the state)
     new_rank = (1-d)/n + d·(contrib + dangling/n)
-    delta    = max |new - old|                                 (convergence)
+    delta    = max |new - old|          (convergence, observed on the state)
 
 The transition fraction ``frac = weight / out_weight`` is precomputed once
 and cached — the iteration loop reuses the same shuffle partitioning of
@@ -175,23 +175,10 @@ def pagerank(
             )
         else:
             rank = F.lit(base) + F.lit(damping) * (contrib + F.lit(dangling_mass / n))
-        new = new.select("id", rank.alias("rank"), "dangling")
-        if fixed_iters:
-            # no convergence test requested — skip the extra delta action
-            return new, float("inf")
-
-        # callable metric: evaluated on the PERSISTED new state, so the
-        # delta scan joins two materialized 1-row-per-vertex vectors
-        # instead of re-running the whole superstep plan
-        def delta(persisted: DataFrame) -> float:
-            row = (
-                persisted.join(state.select("id", F.col("rank").alias("old_rank")), "id")
-                .agg(F.max(F.abs(F.col("rank") - F.col("old_rank"))))
-                .collect()[0][0]
-            )
-            return float(row)
-
-        return new, delta
+        # old and new rank share the row: the delta is observed on the
+        # persist job, and the driver drops the old_rank working column
+        new = new.select("id", rank.alias("rank"), "dangling", F.col("rank").alias("old_rank"))
+        return new, None if fixed_iters else F.max(F.abs(F.col("rank") - F.col("old_rank")))
 
     result = driver.run(
         ranks,

@@ -37,7 +37,6 @@ def shortest_paths(
     rounds: int = -1,
     max_iterations: int = 100,
     driver: IterationDriver | None = None,
-    broadcast_rows_threshold: int = 250_000,
     collect_metrics: list | None = None,
 ) -> DataFrame:
     """(id, dist) for every vertex REACHED from ``sources`` (an (id)
@@ -58,39 +57,22 @@ def shortest_paths(
     fixed = rounds > 0
     n_iter = rounds if fixed else max_iterations
 
-    def _side(state: DataFrame) -> DataFrame:
-        side = state.withColumnRenamed("id", "src")
-        return F.broadcast(side) if state.count() <= broadcast_rows_threshold else side.hint(
-            "SHUFFLE_HASH"
-        )
-
     def step(state: DataFrame, i: int):
         relax = (
-            adj.join(_side(state), "src")
+            adj.join(state.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"), "src")
             .groupBy("dst")
             .agg(F.min(F.col("dist") + F.col("w")).alias("relaxed"))
             .withColumnRenamed("dst", "id")
         )
         # F.least skips nulls, so a newly-reached vertex (dist null) takes
-        # `relaxed` and an un-improved one keeps `dist`
+        # `relaxed` and an un-improved one keeps `dist`; the old dist
+        # stays in the row as a working column for the metric
         new = (
             state.join(relax.hint("SHUFFLE_HASH"), "id", "full")
-            .select("id", F.least("dist", "relaxed").alias("dist"))
+            .select("id", F.least("dist", "relaxed").alias("dist"), F.col("dist").alias("old"))
         )
-        if fixed:
-            return new, float("inf")
-
-        def improved(persisted: DataFrame) -> float:
-            row = (
-                persisted.join(
-                    state.select("id", F.col("dist").alias("old")), "id", "left"
-                )
-                .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-                .count()
-            )
-            return float(row)
-
-        return new, improved
+        improved = F.count(F.when(F.col("old").isNull() | (F.col("dist") < F.col("old")), 1))
+        return new, None if fixed else improved
 
     result = driver.run(
         state0,
@@ -142,7 +124,7 @@ def landmark_distances(
             state.join(relax.hint("SHUFFLE_HASH"), ["id", "lm"], "full")
             .select("lm", "id", F.least("dist", "relaxed").alias("dist"))
         )
-        return new, float("inf")
+        return new, None
 
     result = driver.run(
         state0,

@@ -42,6 +42,11 @@ loop branches on it:
 
 In both modes a persist releases the state its previous batch held.
 
+One superstep is one materialize job: a step returns its new state and
+its convergence metric as an aggregate ``Column``, and ``IterationDriver``
+observes the metric on the job that persists the state, beside the row
+count — no superstep runs an action of its own for its metric.
+
 Alongside state, the durable driver appends per-iteration METRICS +
 LINEAGE rows (run_id, iteration, wall seconds, row count, convergence
 metric, number of partitions, snapshot path, per-file rows/bytes) to
@@ -626,8 +631,9 @@ class IterationResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-# the observed row count's name among run(observe=...)'s aggregates
+# the observed row count's and metric's names among run(observe=...)'s aggregates
 _ROWS = "__rows"
+_METRIC = "__metric"
 
 
 class IterationDriver:
@@ -650,13 +656,25 @@ class IterationDriver:
         """Highest durably-committed i — the resume point."""
         return self.store.latest_complete_batch()
 
-    def _materialize(self, df: DataFrame, key: str | None, measures: list[Column]) -> tuple:
-        """(``df`` materialized on ``key``, its row count); the other
-        ``measures`` ride the same job into ``self.observed``."""
+    def _materialize(
+        self,
+        df: DataFrame,
+        key: str | None,
+        measures: list[Column],
+        columns: list[str],
+        metric: Column | None = None,
+    ) -> tuple:
+        """(``df``'s ``columns`` materialized on ``key``, its row count, the
+        value of ``metric`` or None); ``metric`` and the ``measures`` ride
+        the same job, the measures into ``self.observed``."""
+        if metric is not None:
+            measures = [*measures, F.coalesce(metric.cast("double"), F.lit(0.0)).alias(_METRIC)]
         obs = Observation()
-        out = materialize(df.observe(obs, *measures), key)
+        out = materialize(df.observe(obs, *measures).select(*columns), key)
         self.observed = obs.get
-        return out, self.observed.pop(_ROWS)
+        rows = self.observed.pop(_ROWS)
+        metric = self.observed.pop(_METRIC, None)
+        return out, rows, metric
 
     def _snapshot_fields(self, i: int) -> dict:
         """Where iteration i's state lives, and its per-partition lineage
@@ -672,7 +690,7 @@ class IterationDriver:
     def run(
         self,
         state: DataFrame,
-        step: Callable[[DataFrame, int], tuple[DataFrame, float]],
+        step: Callable[[DataFrame, int], tuple[DataFrame, Column | None]],
         max_iterations: int = 50,
         tolerance: float = 0.0,
         resume: bool = False,
@@ -680,20 +698,23 @@ class IterationDriver:
         observe: dict[str, Column] | None = None,
         state_key: str | None = None,
     ) -> IterationResult:
-        """Iterate ``step(state, i) -> (new_state, convergence_metric)``
-        until metric <= tolerance or max_iterations.
+        """Iterate ``step(state, i) -> (new_state, metric)`` until the
+        metric is <= tolerance or max_iterations.
 
-        The convergence metric is whatever the algorithm defines (count of
-        changed labels, max rank delta, ...); it is recorded per iteration.
+        ``metric`` is an aggregate ``Column`` over ``new_state`` (count of
+        changed labels, max rank delta, ...), or None when the run has no
+        convergence test. It is observed on the job that materializes
+        ``new_state``, beside the row count and ``observe``: no action of
+        its own. Anything else raises TypeError, so no step brings back a
+        per-superstep action (a callable or a float computed in the step
+        is one). A null metric (an aggregate over no rows) counts as 0;
+        it is recorded per iteration under ``metric_name``.
 
-        ``convergence_metric`` may be a float OR a callable
-        ``(materialized_new_state) -> float`` — the callable form is
-        evaluated AFTER the state is materialized and before the previous
-        state is released, so the metric action scans the materialized
-        iteration output instead of re-running the whole superstep plan
-        (a float metric computed inside ``step`` triggers the plan once
-        for the metric and a second time for the eager persist — 2x
-        compute per iteration).
+        A metric reads the previous state through a column of the same
+        row (an old rank or label carried by the step's join) or through
+        ``self.observed``, the previous state's observed values. Only the
+        init state's columns are kept after the observe, so a step may
+        add working columns that only its metric reads.
 
         ``state_key``: the column every step's state is hash-partitioned
         on (a vertex-keyed rank/label vector), passed to ``materialize``
@@ -718,6 +739,7 @@ class IterationDriver:
             # planned with AQE off, as materialize plans it: no job
             with _session_conf(self.spark, {"spark.sql.adaptive.enabled": "false"}):
                 k = _hash_partitions_on(state, state_key)
+        columns = state.columns
         observed = [c.alias(name) for name, c in (observe or {}).items()]
         measures = [F.count(F.lit(1)).alias(_ROWS), *observed]
         with _session_conf(
@@ -728,7 +750,7 @@ class IterationDriver:
             if start_iter > 0 and observed:
                 self.observed = state.agg(*observed).first().asDict()
             if start_iter == 0:
-                state, rows = self._materialize(state, state_key, measures)
+                state, rows, _ = self._materialize(state, state_key, measures, columns)
                 state = self.store.persist(0, state=state)["state"]
                 self.store.log(
                     {
@@ -748,11 +770,14 @@ class IterationDriver:
             for i in range(start_iter, max_iterations + 1):
                 t0 = time.monotonic()
                 new_state, metric = step(state, i)
-                new_state, rows = self._materialize(new_state, state_key, measures)
-                if callable(metric):
-                    # steps and metrics only ever read the previous state,
-                    # which the persist below releases
-                    metric = float(metric(new_state))
+                if metric is not None and not isinstance(metric, Column):
+                    raise TypeError(
+                        f"{self.run_id}: step {i} returned a {type(metric).__name__} metric; "
+                        "a step returns an aggregate Column over the new state, or None"
+                    )
+                new_state, rows, metric = self._materialize(
+                    new_state, state_key, measures, columns, metric
+                )
                 state = self.store.persist(i, state=new_state)["state"]
                 row = {
                     "run_id": self.run_id,
@@ -766,7 +791,7 @@ class IterationDriver:
                 }
                 metrics.append(row)
                 self.store.log(row)
-                if metric <= tolerance:
+                if metric is not None and metric <= tolerance:
                     converged = True
                     break
         return IterationResult(state=state, iterations=i, converged=converged, metrics=metrics)

@@ -122,12 +122,10 @@ def stream_community_detection(
     )
     snap, start_batch = store.start(
         resume,
-        edges=materialize(
-            initial_edges
-            if initial_edges is not None
-            else spark.createDataFrame([], "src long, dst long, weight long")
-        ),
-        labels=materialize(initial_labels) if initial_labels is not None else None,
+        edges=initial_edges
+        if initial_edges is not None
+        else spark.createDataFrame([], "src long, dst long, weight long"),
+        labels=initial_labels,
     )
     edges, labels = snap["edges"], snap["labels"]
     metrics: list[dict] = []
@@ -205,11 +203,18 @@ def stream_community_detection(
                 step_edges = materialize(
                     edges.join(ball.withColumnRenamed("id", "src"), "src", "left_semi")
                 )
-            for _ in range(supersteps_per_batch):
+            for s in range(supersteps_per_batch):
                 # materialize EVERY superstep: lpa_superstep references
                 # the label plan ~3×, so an unchecked chain grows as
                 # 3^steps logical nodes
-                labels = materialize(lpa_superstep(step_edges, labels, variant=lpa_variant), "id")
+                new = materialize(
+                    lpa_superstep(step_edges, labels, variant=lpa_variant).drop("old_label"), "id"
+                )
+                if s:
+                    unpersist_checkpoint(labels)  # the superstep's own input
+                labels = new
+            if step_edges is not edges:
+                unpersist_checkpoint(step_edges)
 
         snap = store.persist(b, edges=edges, labels=labels)
         edges, labels = snap["edges"], snap["labels"]
@@ -368,6 +373,8 @@ def stream_pagerank(
             tot = raw.agg(F.sum("rank")).collect()[0][0]
             init = raw.select("id", (F.col("rank") / F.lit(float(tot))).alias("rank"))
         cur = materialize(init.repartition("id"))
+        if state is not None:
+            unpersist_checkpoint(raw)
         for _ in range(iters_per_batch):
             contrib = (
                 adj.join(cur.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"), "src")
@@ -385,6 +392,7 @@ def stream_pagerank(
             nxt = materialize(nxt)
             unpersist_checkpoint(cur)
             cur = nxt
+        unpersist_checkpoint(verts)
         if prev_adj is not None:
             prev_adj.unpersist()
         prev_adj = adj

@@ -14,8 +14,7 @@ from sbm_communitydetection_spark.plans.iterate import IterationDriver
 def _inc_step(state, i):
     new = state.withColumn("v", F.col("v") + 1)
     # converge when v reaches 5 everywhere
-    remaining = new.filter(F.col("v") < 5).count()
-    return new, float(remaining)
+    return new, F.sum((F.col("v") < 5).cast("long"))
 
 
 def test_parquet_checkpoint_and_metrics(spark, tmp_path):
@@ -155,6 +154,38 @@ def test_superseded_state_blocks_released(spark):
     after = len(sc.getRDDStorageInfo())
     unpersist_checkpoint(labels)
     assert after - base <= 1, f"stream CC: cached RDDs grew {base} -> {after}"
+
+    # so do the other folds over 8 batches, their intra-batch supersteps
+    # included, and the Katz loops: only the tables they return stay
+    from sbm_communitydetection_spark.operators.katz import (
+        eigenvector_centrality,
+        katz_centrality,
+    )
+    from sbm_communitydetection_spark.streaming.stream_driver import (
+        stream_community_detection,
+        stream_pagerank,
+    )
+
+    def communities(**kw):
+        res = stream_community_detection(spark, stream, n_batches=8, **kw)
+        return [res.labels, res.edges]
+
+    runs = {
+        "stream LPA": communities,
+        "stream LPA, r-hop repair": lambda: communities(locality_radius=1),
+        "stream PageRank": lambda: [stream_pagerank(spark, stream, n_batches=8)],
+        "Katz": lambda: [katz_centrality(spark, edges)],
+        "eigenvector": lambda: [eigenvector_centrality(spark, edges)],
+    }
+    for name, run in runs.items():
+        base = len(sc.getRDDStorageInfo())
+        returned = run()
+        for df in returned:
+            df.count()
+        after = len(sc.getRDDStorageInfo())
+        for df in returned:
+            unpersist_checkpoint(df)
+        assert after - base <= len(returned), f"{name}: cached RDDs grew {base} -> {after}"
 
 
 def test_sync_communities_equals_full_recompute(spark):
@@ -531,12 +562,36 @@ def test_non_durable_run_builds_no_init_row(spark):
         spark,
         lambda: d.run(
             state,
-            lambda s, i: (s.withColumn("v", F.col("v") + 1), 0.0),
+            lambda s, i: (s.withColumn("v", F.col("v") + 1), F.max(F.lit(0.0))),
             max_iterations=1,
         ),
     )
     assert res.converged and res.iterations == 1
     assert jobs == 2, jobs
+
+
+def test_a_step_metric_is_an_aggregate_column_or_none(spark):
+    """The metric rides the persist job: a step returning a callable or a
+    float (each an action of its own when the step computes it) raises
+    TypeError; None runs the superstep with no convergence test, and a
+    working column the metric reads is not kept in the state."""
+    d = IterationDriver(spark, run_id="typed")
+    state = spark.createDataFrame([(i, 0) for i in range(4)], "id long, v long")
+    for bad in (0.0, lambda persisted: 0.0):
+        with pytest.raises(TypeError, match="aggregate Column"):
+            d.run(state, lambda s, i, bad=bad: (s, bad), max_iterations=1)
+    res = d.run(state, lambda s, i: (s.withColumn("v", F.col("v") + 1), None), max_iterations=2)
+    assert not res.converged and res.iterations == 2
+    assert [m["delta"] for m in res.metrics] == [None, None]
+
+    def step(s, i):
+        new = s.select("id", (F.col("v") + 1).alias("v"), F.col("v").alias("old"))
+        return new, F.max(F.col("v") - F.col("old") - 1)
+
+    res = d.run(state, step, max_iterations=3)
+    assert res.converged and res.iterations == 1
+    assert res.state.columns == ["id", "v"]
+    assert sorted(r.v for r in res.state.collect()) == [1] * 4
 
 
 def test_materialize_rejects_a_false_partitioning_key(spark):
@@ -671,6 +726,89 @@ def test_small_graph_supersteps_run_one_single_task_job_each(spark):
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
 
 
+def _jobs_per_superstep(spark, run) -> float:
+    """Spark jobs of one superstep of ``run(n)``: (jobs(4) − jobs(2)) / 2,
+    each run counted in a job group of its own, so everything but the
+    two extra supersteps cancels."""
+    return (_count_jobs(spark, lambda: run(4))[0] - _count_jobs(spark, lambda: run(2))[0]) / 2
+
+
+def test_convergence_metric_rides_the_persist_job(spark):
+    """Every operator's convergence metric is observed on the job that
+    persists its state: with a tolerance, a PageRank, LPA or HITS
+    superstep is still ONE job, SSSP and k-core supersteps cost what
+    their fixed-round ones do, and BP's old-message join adds at most
+    the two map stages of its unkeyed state. A CC round is its unkeyed
+    materialize alone, one job per AQE stage: ≤ 7.5 jobs a round here,
+    where a checksum collect on the persisted pairs cost 2 more."""
+    from sbm_communitydetection_spark.operators.belief_propagation import (
+        belief_propagation,
+        noisy_priors,
+    )
+    from sbm_communitydetection_spark.operators.components import connected_components
+    from sbm_communitydetection_spark.operators.graph_ops import symmetrize
+    from sbm_communitydetection_spark.operators.hits import hits
+    from sbm_communitydetection_spark.operators.kcore import k_core
+    from sbm_communitydetection_spark.operators.label_propagation import label_propagation
+    from sbm_communitydetection_spark.operators.pagerank import pagerank
+    from sbm_communitydetection_spark.operators.sssp import shortest_paths
+
+    raw = spark.range(3000).select(
+        (F.xxhash64("id") % 200).alias("src"),
+        (F.xxhash64("id", F.lit(3)) % 200).alias("dst"),
+        F.lit(1).cast("long").alias("weight"),
+    )
+    directed = raw.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
+    edges = symmetrize(directed).localCheckpoint(eager=True)
+    sources = directed.select(F.col("src").alias("id")).distinct().filter(F.col("id") % 50 == 0)
+    verts = edges.select(F.col("src").alias("id")).distinct()
+    priors = noisy_priors(verts.select("id", (F.col("id") % 2).alias("label")), 2, 0.4)
+
+    def bp(impl, tol):
+        return lambda n: belief_propagation(
+            spark, edges, priors, 2, 0.6, 0.4, max_iterations=n, tolerance=tol, impl=impl
+        )
+
+    # (fixed mode, convergence mode); no run stops before its 4th superstep
+    runs = {
+        "pagerank": [
+            lambda n, t=t: pagerank(spark, directed, tolerance=t, max_iterations=n)
+            for t in (-1.0, 1e-30)
+        ],
+        "lpa": [
+            lambda n, t=t: label_propagation(spark, edges, tolerance=t, max_iterations=n)
+            for t in (-1.0, 0.0)
+        ],
+        "hits": [
+            lambda n, t=t: hits(spark, directed, tolerance=t, max_iterations=n)
+            for t in (-1.0, 1e-30)
+        ],
+        "sssp": [
+            lambda n: shortest_paths(spark, directed, sources, rounds=n),
+            lambda n: shortest_paths(spark, directed, sources, max_iterations=n),
+        ],
+        "k_core": [
+            lambda n: k_core(spark, edges, k=9, rounds=n),
+            lambda n: k_core(spark, edges, k=9, max_iterations=n),
+        ],
+        "bp_agg": [bp("agg", -1.0), bp("agg", 1e-30)],
+        "bp_kernel": [bp("kernel", -1.0), bp("kernel", 1e-30)],
+    }
+    per = {name: [_jobs_per_superstep(spark, run) for run in modes] for name, modes in runs.items()}
+    rows = [(i, i + 1, 1) for i in range(149)] + [(1000 + i, 1001 + i, 1) for i in range(149)]
+    paths = spark.createDataFrame(rows, "src long, dst long, weight long")
+    per["cc"] = _jobs_per_superstep(
+        spark, lambda n: connected_components(spark, paths, max_iterations=n)
+    )
+    for name in ("pagerank", "lpa", "hits"):
+        assert per[name] == [1, 1], (name, per)
+    for name in ("sssp", "k_core"):
+        assert per[name][1] == per[name][0], (name, per)
+    for name in ("bp_agg", "bp_kernel"):
+        assert per[name][1] <= per[name][0] + 2, (name, per)
+    assert per["cc"] <= 7.5, per
+
+
 def test_label_propagation_materializes_its_init_once(spark, monkeypatch):
     """The init labels are materialized by the driver only: one init
     materialize plus one per superstep, and no count of them."""
@@ -754,8 +892,9 @@ def test_durable_pagerank_superstep_keeps_the_cached_adjacency_in_place(spark, t
 
 
 def test_convergence_mode_pagerank_runs_two_jobs_per_superstep(spark):
-    """With a tolerance a PageRank superstep is the persist job (which
-    also observes the row count) and the delta metric: no count job."""
+    """With a tolerance a PageRank superstep runs no count job: at most
+    two jobs (``test_convergence_metric_rides_the_persist_job`` pins it
+    at one, the persist job observing the delta)."""
     from sbm_communitydetection_spark.operators.pagerank import pagerank
 
     edges = spark.range(8000).select(

@@ -111,12 +111,9 @@ def run_bench(cores: int, sf_dir: str) -> dict:
         os.environ,
         SPARK_GRAFT_CPUS=str(cores),
         SPARK_GRAFT_SF_DIR=sf_dir,
-        # scaling run measures the north-rule pair only, on the pure
-        # shuffle path (no broadcast — the only path available at
-        # 10^12 scale), over a larger amplified graph, with shuffle
-        # partitioning pinned across levels
+        # scaling run measures the north-rule pair only, over a larger
+        # amplified graph, with shuffle partitioning pinned across levels
         SPARK_GRAFT_BENCH_QUERIES="pagerank,lpa",
-        SPARK_GRAFT_PR_BROADCAST="0",
         SPARK_GRAFT_BENCH_ITER_TIMING="1",
         SPARK_GRAFT_BENCH_PARTS=str(PINNED_PARTS),
         SPARK_GRAFT_BENCH_AMPLIFY=os.environ.get("SPARK_GRAFT_BENCH_AMPLIFY", "16"),
